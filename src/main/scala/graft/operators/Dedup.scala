@@ -352,10 +352,11 @@ object Dedup {
     // On a cluster with a long-running job, checkpoint() to reliable
     // storage instead so executor loss can't lose the blocks.
     // Pre-partition the STATIC edge table by the hop-join key before the
-    // checkpoint (r17 opt): localCheckpoint preserves outputPartitioning
-    // through the RDD barrier, so every propagation round's
-    // edges⋈labels join reads the materialized hash(dst) layout in
-    // place instead of RE-SHUFFLING the full edge set per round — at R
+    // checkpoint (r17 opt), taken through GraftSession.layoutCheckpoint
+    // so the hash(dst) layout survives the RDD barrier (a plain
+    // localCheckpoint under AQE advertises UnknownPartitioning, r18),
+    // and every propagation round's edges⋈labels join reads the
+    // materialized hash(dst) layout in place instead of RE-SHUFFLING the full edge set per round — at R
     // rounds that was R corpus-of-edges exchanges for a table that
     // never changes. The labels side gets the matching explicit
     // hash(doc_id) layout once; each round's join output then carries

@@ -420,8 +420,9 @@ object MlEval {
     // passes with GC storms). hash(lid) is a SUBSET of every downstream
     // grouping/join key — (lid,tf,side) margins, the lid label join, the
     // (lid,tf,side) gradient join, the (lid,fold,side,y_cls) scoring
-    // aggregate — and localCheckpoint preserves outputPartitioning (the
-    // r17 CC lesson), so ONE corpus exchange here makes every
+    // aggregate — and layoutCheckpoint keeps that outputPartitioning
+    // (a plain localCheckpoint under AQE drops it, r18), so ONE corpus
+    // exchange here makes every
     // per-iteration corpus operation exchange-free; only the KB-scale
     // gradient/nDf/summary aggregates still shuffle. Explicit count so
     // AQE cannot coalesce one side out of co-partition.

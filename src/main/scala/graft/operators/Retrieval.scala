@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -643,6 +644,13 @@ object Retrieval {
     * micro-batch under Bm25Serve.serve. The postings scan is pruned
     * map-side by the broadcast query vocabulary before any shuffle.
     *
+    * Per batch, the call runs ONE eager action: a map-only collect of
+    * the requests' (query_id, pos, term) tokens (one Spark job when the
+    * requests are a LocalRelation, as a serve batch is), from which the
+    * driver picks each query's first QueryTerms distinct terms
+    * ([[firstTerms]]). The returned frame is lazy; its action runs the
+    * pruned postings scan and the bounded top-k.
+    *
     * `excludeSelf` (default FALSE for serving — r15 ADVICE): a serve
     * request's query_id is an arbitrary request identifier, so the
     * batch q148 convention of dropping doc_id == query_id would
@@ -654,32 +662,24 @@ object Retrieval {
       excludeSelf: Boolean = false): DataFrame = {
     val qtoks = queries.select(col("query_id"),
       posexplode(split(lower(col("text")), " ")).as(Seq("pos", "term")))
-    val wq = Window.partitionBy("query_id").orderBy(asc("fpos"), asc("term"))
-    val qterms = qtoks.groupBy("query_id", "term")
-      .agg(min("pos").as("fpos"))
-      .withColumn("qrk", row_number().over(wq))
-      .filter(col("qrk") <= QueryTerms)
-      .select("query_id", "term")
     // the query vocabulary is REQUEST state (≤ queries·QueryTerms
-    // strings): collect it and push a literal In() filter into the
-    // postings scan — on the term-sorted published layout this prunes
-    // at the parquet row-group layer, which a join-side broadcast
-    // prune can never do. On the PUBLISHED tb-partitioned layout the
-    // vocabulary's bucket ids additionally prune whole partition
-    // directories before any file is opened (PartitionFilters — the
-    // serve path reads ≤ |vocab| of the TermBuckets directories).
-    // ONE execution of the request-prep subtree (r18 ServeDiag screen:
-    // the tokenize→rank aggregate ran once for this collect and AGAIN
-    // inside the scoring job via broadcast(qterms) — duplicate 6.7 KB/
-    // 1.2 KB exchange writers per micro-batch). qterms is bounded
-    // request state (≤ queries·QueryTerms rows), so it re-enters as a
+    // strings): pick it on the driver and push a literal In() filter
+    // into the postings scan — on the term-sorted published layout this
+    // prunes at the parquet row-group layer, which a join-side
+    // broadcast prune can never do. On the PUBLISHED tb-partitioned
+    // layout the vocabulary's bucket ids additionally prune whole
+    // partition directories before any file is opened (PartitionFilters
+    // — the serve path reads ≤ |vocab| of the TermBuckets directories).
+    // The tokens cost one map-only job, where a groupBy + row_number
+    // selection cost three jobs and two exchanges on a request-sized
+    // frame. The selected (query_id, term) rows re-enter as a
     // LocalRelation with exact stats (the r15 estimate-laundering
-    // discipline) and the per-batch request pipeline runs once.
-    val qtermRows = qterms.collect()
+    // discipline), so the request pipeline runs once per batch.
+    val qtermRows = firstTerms(qtoks.collect())
     val qtermsLocal = queries.sparkSession.createDataFrame(
-      java.util.Arrays.asList(qtermRows: _*), qterms.schema)
-    val termIdx = qterms.schema.fieldIndex("term")
-    val vocab = qtermRows.map(_.getString(termIdx)).distinct
+      java.util.Arrays.asList(qtermRows: _*),
+      StructType(Seq(qtoks.schema("query_id"), qtoks.schema("term"))))
+    val vocab = qtermRows.map(_.getString(1)).distinct
     val dfq = idx.df.filter(col("term").isin(vocab: _*))
     val postingsBase =
       if (idx.postings.columns.contains("tb")) {
@@ -718,6 +718,27 @@ object Retrieval {
         col("t._3").as("n_terms"))
   }
 
+  /** Driver-side term selection over collected (query_id, pos, term)
+    * token rows: each query's first QueryTerms distinct terms, ranked
+    * by the term's minimum pos and then by the term in Spark's
+    * UTF8String byte order — exactly q148's groupBy(query_id, term)
+    * min(pos) + row_number over (fpos, term), also when one batch
+    * carries the same query_id twice (their tokens merge per term).
+    */
+  private[graft] def firstTerms(toks: Array[Row]): Array[Row] = {
+    val fpos = scala.collection.mutable.HashMap.empty[(Any, String), Int]
+    toks.foreach { r =>
+      val k = (r.get(0), r.getString(2))
+      val p = r.getInt(1)
+      if (fpos.get(k).forall(p < _)) fpos(k) = p
+    }
+    fpos.toArray.groupBy(_._1._1).valuesIterator.flatMap { ts =>
+      ts.map { case ((q, t), p) => (q, t, p, UTF8String.fromString(t)) }
+        .sortWith((a, b) => a._3 < b._3 || (a._3 == b._3 && a._4.compareTo(b._4) < 0))
+        .take(QueryTerms).map { case (q, t, _, _) => Row(q, t) }
+    }.toArray
+  }
+
   private lazy val serveTopK = udaf(
     new graft.functions.TopKAgg.ScoredTopK(TopK),
     org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[(Long, Long, Long)]())
@@ -743,14 +764,26 @@ object Retrieval {
     val w = Window.partitionBy("query_id").orderBy(desc("rrf_u"), asc("cand_id"))
     lex.join(sem, Seq("query_id", "cand_id"), "full_outer")
       .withColumn("rrf_u",
-        coalesce(round(lit(1e6) / (lit(RrfK) + col("rk_lex")), 0).cast(LongType), lit(0L)) +
-          coalesce(round(lit(1e6) / (lit(RrfK) + col("rk_sem")), 0).cast(LongType), lit(0L)))
+        coalesce(rrfUnitsCol(col("rk_lex")), lit(0L)) +
+          coalesce(rrfUnitsCol(col("rk_sem")), lit(0L)))
       .withColumn("rk", row_number().over(w).cast(LongType))
       .filter(col("rk") <= TopK)
       .select(col("query_id"), col("rk"), col("cand_id"), col("rrf_u"),
         col("rk_lex"), col("rk_sem"))
       .orderBy("query_id", "rk")
   }
+
+  /** One source's RRF contribution in micro-units, round(1e6/(RrfK+rk)). */
+  private[graft] def rrfUnitsCol(rk: Column): Column =
+    round(lit(1e6) / (lit(RrfK) + rk), 0).cast(LongType)
+
+  /** Driver twin of [[rrfUnitsCol]]: the same double quotient, Spark's
+    * Round (HALF_UP on BigDecimal.valueOf), then the long cast
+    * (HybridServeSpec checks every rank a serve list can carry).
+    */
+  private[graft] def rrfUnits(rk: Long): Long =
+    java.math.BigDecimal.valueOf(1e6 / (RrfK + rk))
+      .setScale(0, java.math.RoundingMode.HALF_UP).doubleValue.toLong
 
   def q149HybridRrf(s: SparkSession, dir: String): DataFrame =
     fuseRrf(

@@ -145,6 +145,42 @@ class RetrievalSpec extends GraftSpec {
       "streamed serving must equal batch q148 across a batch split")
   }
 
+  test("scoreQueries picks q148's query terms on the driver, in one job") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.types._
+    // adversarial request text: empty, doubled spaces, mixed case, a
+    // supplementary-plane char vs a BMP one above the surrogates (their
+    // UTF-16 and UTF-8 orders disagree), and one query_id sent five
+    // times so the pos-0 terms tie and the term order decides the cut
+    val texts = Seq(
+      1001L -> "", 1002L -> "alpha  beta  ALPHA gamma delta epsilon", 1003L -> "  lead",
+      1004L -> "\uD835\uDD18 x y z w", 1004L -> "\uFF5A q", 1004L -> "c", 1004L -> "b",
+      1004L -> "a", 1005L -> "Émile émile ÉMILE e f g h") ++
+      Tables.documents(spark, sfDir).filter(col("doc_id") < 20)
+        .select("doc_id", "text").collect().map(r => r.getLong(0) -> r.getString(1))
+    val queries = spark.createDataFrame(texts.map { case (q, t) => Row(q, t) }.asJava,
+      StructType(Seq(StructField("query_id", LongType), StructField("text", StringType))))
+    val toks = queries.select(col("query_id"),
+      posexplode(split(lower(col("text")), " ")).as(Seq("pos", "term")))
+    // the pre-driver Spark selection, kept here as the reference
+    val want = toks.groupBy("query_id", "term").agg(min("pos").as("fpos"))
+      .withColumn("qrk", row_number().over(
+        Window.partitionBy("query_id").orderBy(asc("fpos"), asc("term"))))
+      .filter(col("qrk") <= Retrieval.QueryTerms)
+      .select("query_id", "term").collect().map(r => (r.getLong(0), r.getString(1)))
+    val got = Retrieval.firstTerms(toks.collect()).map(r => (r.getLong(0), r.getString(1)))
+    assert(got.sorted.toSeq === want.sorted.toSeq)
+    assert(got.count(_._1 == 1004L) === Retrieval.QueryTerms)
+    assert(got.contains((1004L, "\uFF5A")) && !got.contains((1004L, "\uD835\uDD18")),
+      "terms must tie-break in UTF-8 byte order")
+
+    val idx = Retrieval.buildBm25Index(spark, sfDir)
+    val (_, jobs) = JobCount(spark)(Retrieval.scoreQueries(queries, idx))
+    assert(jobs === 1, "term selection must be one map-only collect")
+  }
+
   test("serve-time id collision: default scoreQueries keeps the colliding doc") {
     // r15 ADVICE: a request whose arbitrary query_id collides with a
     // corpus doc_id must NOT lose that document — self-exclusion is a
