@@ -7,9 +7,9 @@ import org.apache.spark.sql.functions._
   * touched-partition count, the republish path's wall is ~constant (a
   * full survivor rewrite) — the victim fraction where they cross is the
   * `spark.graft.bm25.deleteRepublishFraction` default, measured at the
-  * 1.5M-doc rung (BENCH_R17_BM25_DELETE.json; the FlipProbe discipline:
-  * a dial's guidance lives in a probe main + a committed artifact, not
-  * prose).
+  * 1.5M-doc rung (BENCH_R17_BM25_DELETE.json; the discipline of the LR
+  * co-partition rule's BENCH_R15_FLIP.json: a dial's guidance lives in
+  * a probe main + a committed artifact, not prose).
   *
   * Usage:
   *   runMain graft.DeleteProbe publish <sfDir> <indexDir>

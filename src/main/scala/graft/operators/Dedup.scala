@@ -339,11 +339,8 @@ object Dedup {
   /** CC fan-out floor: edge rows per propagation-round partition. Edge
     * rows are two longs (~16 B + row overhead), so 2M rows ≈ 32 MB
     * partitions — the guide's fewer-larger band for a join this light.
-    * A dial, not a constant-by-faith: soak runs can override it.
     */
-  private[graft] def ccRowsPerPartition(s: org.apache.spark.sql.SparkSession): Long =
-    s.conf.getOption("spark.graft.cc.rowsPerPartition").map(_.trim.toLong)
-      .getOrElse(2000000L)
+  private[graft] val CcRowsPerPartition: Long = 2000000L
 
   def resolveClusters(pairs: DataFrame): DataFrame = {
     // iterative algorithms MUST truncate lineage each round or round N
@@ -385,7 +382,7 @@ object Dedup {
       .union(pairs.select(col("d2").as("src"), col("d1").as("dst")))
       .localCheckpoint(true)
     val np = math.max(1, math.min(confNp.toLong,
-      edges0.count() / ccRowsPerPartition(pairs.sparkSession) + 1)).toInt
+      edges0.count() / CcRowsPerPartition + 1)).toInt
     // layoutCheckpoint, not plain localCheckpoint (r18): under AQE the
     // plain form advertised UnknownPartitioning on the materialized
     // RDD, so every round's hop join silently RE-EXCHANGED both big
@@ -619,6 +616,9 @@ object Dedup {
       .orderBy("v1", "v2")
   }
 
+  /** Expected eval-set keys the q62 sketch is sized for (1% fpp). */
+  private[graft] val BloomCapacity: Long = 1000000L
+
   // T19: sketch-accelerated membership — the Bloom-filter form of the
   // decontamination sweep. The eval slice's content hashes are folded
   // into a BloomFilter in ONE distributed pass (the sketch is mergeable;
@@ -639,17 +639,15 @@ object Dedup {
     val withH = d.withColumn("h",
       md5(concat_ws(" ", slice(split(col("text"), " "), 1, 8))))
     val evalH = withH.filter(col("source") === "src0").select("h")
-    // sketch capacity comes from CONFIG, not an evalH.count() action (a
+    // sketch capacity is a CONSTANT, not an evalH.count() action (a
     // second pass over the eval slice per execution — round-9 advice).
     // Oversizing a bloom costs only memory (1M keys @ 1% fpp ≈ 1.2 MB —
     // trivially broadcastable); UNDERsizing degrades the pre-filter's
     // selectivity but never correctness, because the exact semi join
-    // below removes every false positive either way. Operators deploying
-    // at 100 TB set spark.graft.bloom.capacity to the known eval-set
+    // below removes every false positive either way. A deployment whose
+    // eval set outgrows it raises BloomCapacity to the known eval-set
     // scale once, instead of paying a counting scan on every run.
-    val capacity = s.conf.getOption("spark.graft.bloom.capacity")
-      .map(_.toLong).getOrElse(1000000L)
-    val bf = evalH.stat.bloomFilter("h", capacity, 0.01)
+    val bf = evalH.stat.bloomFilter("h", BloomCapacity, 0.01)
     val bfB = s.sparkContext.broadcast(bf)
     val mightContain = udf((h: String) => h != null && bfB.value.mightContain(h))
     withH.filter(col("source") =!= "src0")

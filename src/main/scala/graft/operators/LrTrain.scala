@@ -83,90 +83,6 @@ object LrTrain {
   def Iters(s: SparkSession): Int  = confInt(s, "spark.graft.lr.iters", 3)
   def LrDen(s: SparkSession): Long = confInt(s, "spark.graft.lr.lrDen", 16).toLong
 
-  /** The r14 negative result as a DIAL (r14 verdict next-round #5):
-    * co-partitioned training checkpoints (xdb + labels hash-partitioned
-    * on doc_id, so every GD iteration's margin aggregate, label join
-    * and gradient join run exchange-free) LOSE to AQE's runtime
-    * broadcasts while the per-doc frames fit broadcast (~10s of MB) —
-    * measured 2x slower at gen-sf1 — and WIN once they outgrow it.
-    * Default stays the measured-best small-corpus shape; FlipProbe
-    * measures both settings at a rung and records the crossover.
-    *
-    * MEASURED r15 (BENCH_R15_FLIP.json): the crossover is real and
-    * sits between 500k docs (xdb 24M rows — a statistical wash) and
-    * 1.5M docs (xdb 75M rows — co-partitioned q129 wins 2.1x, steady
-    * 25.0 s vs 53.3 baseline). r16 wires that measurement as
-    * `spark.graft.lr.coPartition=auto` (r15 verdict item 5): auto
-    * materializes the token frame once, reads its row count off the
-    * checkpoint (a metadata-cheap count, no extra corpus pass), and
-    * flips to doc_id hash partitioning at `spark.graft.lr.copartRows`
-    * (default 50M — the measured crossover; ≈1M docs at this corpus
-    * shape). Explicit true/false keep their r14 semantics; weights are
-    * BIT-IDENTICAL under every mode (partitioning never touches the
-    * integer GD arithmetic — spec-pinned), so the dial is purely a
-    * plan-shape choice.
-    */
-  private[graft] def coPartMode(s: SparkSession): String =
-    s.conf.getOption("spark.graft.lr.coPartition")
-      .map(_.trim.toLowerCase(java.util.Locale.ROOT)).getOrElse("false")
-
-  def CopartRows(s: SparkSession): Long =
-    s.conf.getOption("spark.graft.lr.copartRows").map { v =>
-      try v.trim.toLong
-      catch { case _: NumberFormatException =>
-        sys.error(s"spark.graft.lr.copartRows must be a long, got '$v'") }
-    }.getOrElse(50000000L)
-
-  /** The auto decision, exposed for the spec. */
-  private[graft] def coPartDecided(s: SparkSession, xdbRows: => Long): Boolean =
-    coPartMode(s) match {
-      case "auto" => xdbRows >= CopartRows(s)
-      case m => m.toBoolean
-    }
-
-  /** Test seam: the decision the last training materialization took. */
-  private[graft] val lastCoPartDecision =
-    new java.util.concurrent.atomic.AtomicReference[Option[Boolean]](None)
-
-  /** Materialize the two per-doc training frames under the co-partition
-    * decision. Explicit modes repartition before the (single)
-    * checkpoint as before; `auto` checkpoints the token frame first,
-    * decides on its materialized row count, and only then pays the
-    * repartition+rewrite — so the extra materialization exists only on
-    * the flip path, where the 2.1x iteration win repays it Iters times.
-    */
-  private def checkpointPair(xdbPlan: DataFrame,
-      labelsPlan: DataFrame): (DataFrame, DataFrame) = {
-    val s = xdbPlan.sparkSession
-    val (xdb, labels, decision) = coPartMode(s) match {
-      // layoutCheckpoint on the repartitioned branches (r18): a plain
-      // localCheckpoint under AQE advertises UnknownPartitioning, so
-      // the co-partition dial materialized the doc_id layout and then
-      // every iteration RE-EXCHANGED it anyway — the dial's measured
-      // 2.1x crossover win (BENCH_R15_FLIP) could not actually be
-      // delivered by the checkpointed form. The non-repartitioned
-      // branches keep the plain checkpoint (no layout to preserve).
-      case "auto" =>
-        val raw = xdbPlan.localCheckpoint()
-        if (raw.count() >= CopartRows(s)) {
-          val x = graft.GraftSession.layoutCheckpoint(
-            raw.repartition(col("doc_id")))
-          freeCheckpoint(raw)
-          (x, graft.GraftSession.layoutCheckpoint(
-            labelsPlan.repartition(col("doc_id"))), true)
-        } else (raw, labelsPlan.localCheckpoint(), false)
-      case m if m.toBoolean =>
-        (graft.GraftSession.layoutCheckpoint(
-          xdbPlan.repartition(col("doc_id"))),
-          graft.GraftSession.layoutCheckpoint(
-            labelsPlan.repartition(col("doc_id"))), true)
-      case _ =>
-        (xdbPlan.localCheckpoint(), labelsPlan.localCheckpoint(), false)
-    }
-    lastCoPartDecision.set(Some(decision))
-    (xdb, labels)
-  }
-
   /** Ambient resolution — the oracleSql boundary only (see above). */
   private def ambient: Option[SparkSession] =
     SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
@@ -191,6 +107,14 @@ object LrTrain {
     val p = lit(1.0) / (lit(1.0) + exp(-(mMicros.cast(DoubleType) / lit(1000000.0))))
     round((p - y) * lit(1000000.0)).cast(LongType)
   }
+
+  /** A model family's per-class residual in micros, from (margin
+    * micros, y_cls, class index).
+    */
+  private type Resid = (Column, Column, Int) => Column
+
+  private val lrResid: Resid = (m, y, c) =>
+    residMicros(m, when(y === c, 1.0).otherwise(0.0))
 
   // ---------------------------------------------------------------------
   // Documents model (feeds q28): targets are the E11 rule labels — the
@@ -307,19 +231,32 @@ object LrTrain {
     * (not folded into xdb) because the side corpus has duplicate-lid
     * physical rows whose doubled label join is documented, oracle-
     * replayed semantics. `w` is the wide (modelKey*, bucket, w0..) local
-    * relation; returns the same wide shape.
+    * relation; returns the same wide shape. `resid` picks the model
+    * family (LR sigmoid or SVC hinge); `ncDf`, the one-row class-count
+    * frame, turns on q135's class-balanced re-weighting.
     */
   private def gdStep(xdb: DataFrame, labels: DataFrame, nDf: DataFrame,
       w: DataFrame, docKey: Seq[String], modelKey: Seq[String],
-      lrDen: Long): DataFrame = {
+      lrDen: Long, resid: Resid = lrResid,
+      ncDf: Option[DataFrame] = None): DataFrame = {
+    val keys = (docKey ++ modelKey).map(col)
     val mAggs = (0 until Classes).map(c => sum(col("x") * col(s"w$c")).as(s"m$c"))
     val m = xdb.join(broadcast(w), modelKey :+ "bucket")
-      .groupBy((docKey ++ modelKey).map(col): _*)
+      .groupBy(keys: _*)
       .agg(mAggs.head, mAggs.tail: _*)
-    val r = m.join(labels, docKey)
-      .select((docKey ++ modelKey).map(col) ++ (0 until Classes).map(c =>
-        residMicros(col(s"m$c"),
-          when(col("y_cls") === c, 1.0).otherwise(0.0)).as(s"r$c")): _*)
+    val r0 = m.join(labels, docKey)
+      .select(keys ++ ncDf.map(_ => col("y_cls")) ++ (0 until Classes).map(c =>
+        resid(col(s"m$c"), col("y_cls"), c).as(s"r$c")): _*)
+    val r = ncDf.fold(r0) { nc =>
+      // the sample's own class count picks the weight denominator
+      val ncOfDoc = (0 until Classes - 1).foldRight(col(s"nc${Classes - 1}")) {
+        (c, rest) => when(col("y_cls") === c, col(s"nc$c")).otherwise(rest)
+      }
+      r0.crossJoin(broadcast(nc))
+        .select(keys ++ (0 until Classes).map(c =>
+          truncDivPos(col(s"r$c") * col("n_total"),
+            lit(Classes.toLong) * greatest(ncOfDoc, lit(1L))).as(s"r$c")): _*)
+    }
     val gAggs = (0 until Classes).map(c => sum(col(s"r$c") * col("x")).as(s"g$c"))
     val g = r.join(xdb, docKey ++ modelKey)
       .groupBy((modelKey :+ "bucket").map(col): _*)
@@ -343,11 +280,12 @@ object LrTrain {
         col("bucket"), col("w_micros")): _*)
   }
 
-  /** The weight trajectory w0..wIters for the documents model — exposed
-    * (in the long public form) so the spec can prove the training loss
-    * is monotone.
+  /** The documents training scaffold shared by q129 (LR), q135
+    * (balanced LR) and q151 (SVC): the wide weight trajectory
+    * w0..wIters over a documents slice.
     */
-  private[graft] def docWeightPathFrom(docs: DataFrame): Seq[DataFrame] = {
+  private def docTrainPath(docs: DataFrame, resid: Resid,
+      balanced: Boolean): Seq[DataFrame] = {
     // Persist the feature frame ONCE (localCheckpoint), iterate over the
     // materialized form — the textbook distributed-LR shape: each
     // iteration is one pass over cached features, not a re-scan +
@@ -358,21 +296,37 @@ object LrTrain {
     // the label frame is joined EVERY iteration — checkpoint it once
     // (r11: the lazy form re-scanned the documents parquet per
     // iteration; at 100 TB that is Iters extra corpus scans for a
-    // 2-column frame)
-    val (xdb, labels) = checkpointPair(
-      docTokFrom(docs).groupBy("doc_id", "bucket").agg(count(lit(1)).as("x")),
-      docLabelsFrom(docs))
+    // 2-column frame); the balanced class-count frame derives from it.
+    // Both stay plain checkpoints, left to AQE's runtime broadcasts: a
+    // doc_id co-partitioned layout won only past ~50M xdb rows
+    // (BENCH_R15_FLIP.json, BENCH_R16_FLIP_AUTO.json; the layoutCheckpoint
+    // form in BENCH_R18_FLIP_FIXED.json) and lost at sf0.1 (curate_train
+    // job-latency p50 +35%). No benchmark workload reaches that size, so
+    // there is no size-selected co-partitioned path.
+    val xdb = docTokFrom(docs).groupBy("doc_id", "bucket")
+      .agg(count(lit(1)).as("x")).localCheckpoint()
+    val labels = docLabelsFrom(docs).localCheckpoint()
     val nDf = xdb.agg(countDistinct(col("doc_id")).as("n"))
+    val ncDf = Option.when(balanced)(labels.agg(count(lit(1)).as("n_total"),
+      (0 until Classes).map(c =>
+        sum(when(col("y_cls") === c, 1L).otherwise(0L)).as(s"nc$c")): _*))
     val w0 = asLocal(xdb.select("bucket").distinct()
       .select(col("bucket") +: (0 until Classes).map(c => lit(0L).as(s"w$c")): _*))
     val sess = docs.sparkSession
-    val path = Iterator.iterate(w0)(w =>
-        gdStep(xdb, labels, nDf, w, Seq("doc_id"), Seq.empty, LrDen(sess)))
-      .take(Iters(sess) + 1).toSeq.map(toLong(_, Seq.empty))
+    val path = Iterator.iterate(w0)(w => gdStep(xdb, labels, nDf, w, Seq("doc_id"),
+        Seq.empty, LrDen(sess), resid, ncDf))
+      .take(Iters(sess) + 1).toList
     // the trajectory is all local relations now — release the corpus
     freeCheckpoint(xdb); freeCheckpoint(labels)
     path
   }
+
+  /** The weight trajectory w0..wIters for the documents model — exposed
+    * (in the long public form) so the spec can prove the training loss
+    * is monotone.
+    */
+  private[graft] def docWeightPathFrom(docs: DataFrame): Seq[DataFrame] =
+    docTrainPath(docs, lrResid, balanced = false).map(toLong(_, Seq.empty))
 
   private[graft] def docWeightPath(s: SparkSession, dir: String): Seq[DataFrame] =
     docWeightPathFrom(Tables.documents(s, dir))
@@ -408,58 +362,13 @@ object LrTrain {
   // integer arithmetic, so DuckDB replays the balanced fit bit-for-bit
   // like the plain one.
 
-  private def gdStepBalanced(xdb: DataFrame, labels: DataFrame, nDf: DataFrame,
-      ncDf: DataFrame, w: DataFrame, lrDen: Long): DataFrame = {
-    val mAggs = (0 until Classes).map(c => sum(col("x") * col(s"w$c")).as(s"m$c"))
-    val m = xdb.join(broadcast(w), Seq("bucket"))
-      .groupBy(col("doc_id")).agg(mAggs.head, mAggs.tail: _*)
-    val r = m.join(labels, Seq("doc_id"))
-      .select(col("doc_id") +: col("y_cls") +: (0 until Classes).map(c =>
-        residMicros(col(s"m$c"),
-          when(col("y_cls") === c, 1.0).otherwise(0.0)).as(s"r$c")): _*)
-    // the sample's own class count picks the weight denominator
-    val ncOfDoc = (0 until Classes - 1).foldRight(col(s"nc${Classes - 1}")) {
-      (c, rest) => when(col("y_cls") === c, col(s"nc$c")).otherwise(rest)
-    }
-    val rb = r.crossJoin(broadcast(ncDf))
-      .select(col("doc_id") +: (0 until Classes).map(c =>
-        truncDivPos(col(s"r$c") * col("n_total"),
-          lit(Classes.toLong) * greatest(ncOfDoc, lit(1L))).as(s"r$c")): _*)
-    val gAggs = (0 until Classes).map(c => sum(col(s"r$c") * col("x")).as(s"g$c"))
-    val g = rb.join(xdb, Seq("doc_id"))
-      .groupBy(col("bucket")).agg(gAggs.head, gAggs.tail: _*)
-    val gn = g.crossJoin(broadcast(nDf))
-    asLocal(w.join(gn, Seq("bucket"))
-      .select(col("bucket") +: (0 until Classes).map(c =>
-        (col(s"w$c") - truncDivPos(col(s"g$c"), col("n") * lit(lrDen))).as(s"w$c")): _*))
-  }
-
   /** Balanced GD over an arbitrary documents slice — q135 trains on the
     * whole table; q137's held-out evaluation passes the 80% trainFilter
     * slice (the same slice-parameterization discipline as
     * docWeightPathFrom).
     */
-  private[graft] def trainedDocWeightsBalancedFrom(docs: DataFrame): DataFrame = {
-    // checkpointed for the same per-iteration reason as the plain path
-    // — doubly so here, because the class-count frame derives from it
-    val (xdb, labels) = checkpointPair(
-      docTokFrom(docs).groupBy("doc_id", "bucket").agg(count(lit(1)).as("x")),
-      docLabelsFrom(docs))
-    val nDf = xdb.agg(countDistinct(col("doc_id")).as("n"))
-    val ncAggs = (0 until Classes).map(c =>
-      sum(when(col("y_cls") === c, 1L).otherwise(0L)).as(s"nc$c"))
-    val ncDf = labels.agg(count(lit(1)).as("n_total"), ncAggs: _*)
-    val w0 = asLocal(xdb.select("bucket").distinct()
-      .select(col("bucket") +: (0 until Classes).map(c => lit(0L).as(s"w$c")): _*))
-    val sess = docs.sparkSession
-    val w = toLong(
-      Iterator.iterate(w0)(w =>
-          gdStepBalanced(xdb, labels, nDf, ncDf, w, LrDen(sess)))
-        .drop(Iters(sess)).next(),
-      Seq.empty)
-    freeCheckpoint(xdb); freeCheckpoint(labels)
-    w
-  }
+  private[graft] def trainedDocWeightsBalancedFrom(docs: DataFrame): DataFrame =
+    toLong(docTrainPath(docs, lrResid, balanced = true).last, Seq.empty)
 
   private[graft] def trainedDocWeightsBalanced(s: SparkSession, dir: String): DataFrame =
     trainedDocWeightsBalancedFrom(Tables.documents(s, dir))
@@ -991,44 +900,15 @@ object LrTrain {
     when(ySign * mMicros < lit(1000000L), -ySign * lit(1000000L))
       .otherwise(lit(0L))
 
-  private def gdStepSvc(xdb: DataFrame, labels: DataFrame, nDf: DataFrame,
-      w: DataFrame, lrDen: Long): DataFrame = {
-    val mAggs = (0 until Classes).map(c => sum(col("x") * col(s"w$c")).as(s"m$c"))
-    val m = xdb.join(broadcast(w), Seq("bucket"))
-      .groupBy(col("doc_id")).agg(mAggs.head, mAggs.tail: _*)
-    val r = m.join(labels, Seq("doc_id"))
-      .select(col("doc_id") +: (0 until Classes).map(c =>
-        svcResidMicros(col(s"m$c"),
-          when(col("y_cls") === c, 1L).otherwise(-1L)).as(s"r$c")): _*)
-    val gAggs = (0 until Classes).map(c => sum(col(s"r$c") * col("x")).as(s"g$c"))
-    val g = r.join(xdb, Seq("doc_id"))
-      .groupBy(col("bucket")).agg(gAggs.head, gAggs.tail: _*)
-    val gn = g.crossJoin(broadcast(nDf))
-    asLocal(w.join(gn, Seq("bucket"))
-      .select(col("bucket") +: (0 until Classes).map(c =>
-        (col(s"w$c") - truncDivPos(col(s"g$c"), col("n") * lit(lrDen))).as(s"w$c")): _*))
-  }
+  private val svcResid: Resid = (m, y, c) =>
+    svcResidMicros(m, when(y === c, 1L).otherwise(-1L))
 
   /** Hinge GD over an arbitrary documents slice — q151 passes the
     * whole table; the held-out spec passes the 80% trainFilter slice.
-    * Same persist-once scaffold (and co-partition dial) as the LR
-    * paths.
+    * Same persist-once scaffold as the LR paths.
     */
-  private[graft] def trainedSvcWeightsFrom(docs: DataFrame): DataFrame = {
-    val (xdb, labels) = checkpointPair(
-      docTokFrom(docs).groupBy("doc_id", "bucket").agg(count(lit(1)).as("x")),
-      docLabelsFrom(docs))
-    val nDf = xdb.agg(countDistinct(col("doc_id")).as("n"))
-    val w0 = asLocal(xdb.select("bucket").distinct()
-      .select(col("bucket") +: (0 until Classes).map(c => lit(0L).as(s"w$c")): _*))
-    val sess = docs.sparkSession
-    val w = toLong(
-      Iterator.iterate(w0)(w => gdStepSvc(xdb, labels, nDf, w, LrDen(sess)))
-        .drop(Iters(sess)).next(),
-      Seq.empty)
-    freeCheckpoint(xdb); freeCheckpoint(labels)
-    w
-  }
+  private[graft] def trainedSvcWeightsFrom(docs: DataFrame): DataFrame =
+    toLong(docTrainPath(docs, svcResid, balanced = false).last, Seq.empty)
 
   private[graft] def trainedSvcWeights(s: SparkSession, dir: String): DataFrame =
     trainedSvcWeightsFrom(Tables.documents(s, dir))

@@ -411,8 +411,9 @@ object MlEval {
     // (bit-identical to tokenizing the filtered corpus — the form the
     // oracle replays).
     val foldOf = (col("lid") % k.toLong).cast(IntegerType)
-    // CO-PARTITION the shared checkpoints by lid (the r14/r15 FlipProbe
-    // discipline, mandatory here): the batched chain below processes the
+    // CO-PARTITION the shared checkpoints by lid (unconditionally: the
+    // r14/r15 crossover of BENCH_R15_FLIP.json is always passed here):
+    // the batched chain below processes the
     // (k−1)×-exploded corpus every iteration, which is past the measured
     // broadcast/co-partition crossover even at sf0.1 — without this the
     // planner broadcast the multi-M-row exploded frame per iteration and

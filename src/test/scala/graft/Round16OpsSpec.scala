@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{Classify, LrTrain}
 
-/** Round-16 dials and operators. */
+/** Round-16 operators. */
 class Round16OpsSpec extends GraftSpec {
 
   test("q151 SVC: subgradient semantics, and held-out accuracy beside q133's LR") {
@@ -45,49 +45,5 @@ class Round16OpsSpec extends GraftSpec {
     assert(svcAcc >= lrAcc - 0.05,
       f"SVC held-out accuracy $svcAcc%.4f collapsed below LR's $lrAcc%.4f")
     assert(svcAcc > 0.5)
-  }
-
-  test("coPartition=auto flips at the measured row threshold, results bit-unchanged") {
-    def weights: Seq[(Int, Long, Long)] =
-      LrTrain.q129LrTrain(spark, sfDir).collect()
-        .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSeq
-
-    // the decision function at the boundary
-    spark.conf.set("spark.graft.lr.coPartition", "auto")
-    spark.conf.set("spark.graft.lr.copartRows", "1000")
-    try {
-      assert(LrTrain.coPartDecided(spark, 1000L))
-      assert(!LrTrain.coPartDecided(spark, 999L))
-    } finally {
-      spark.conf.unset("spark.graft.lr.coPartition")
-      spark.conf.unset("spark.graft.lr.copartRows")
-    }
-    assert(!LrTrain.coPartDecided(spark, Long.MaxValue),
-      "unset must never co-partition")
-
-    val dflt = weights
-    def underConf(kv: (String, String)*)(expectDecision: Boolean): Unit = {
-      kv.foreach { case (k, v) => spark.conf.set(k, v) }
-      try {
-        LrTrain.lastCoPartDecision.set(None)
-        assert(weights === dflt,
-          s"weights must be bit-identical under $kv — partitioning never " +
-            "touches the integer GD arithmetic")
-        assert(LrTrain.lastCoPartDecision.get === Some(expectDecision),
-          s"decision under $kv")
-      } finally kv.foreach { case (k, _) => spark.conf.unset(k) }
-    }
-    // auto below threshold: baseline path taken
-    underConf("spark.graft.lr.coPartition" -> "auto")(expectDecision = false)
-    // auto with the threshold dialed under the corpus: co-partitioned path
-    underConf("spark.graft.lr.coPartition" -> "auto",
-      "spark.graft.lr.copartRows" -> "1")(expectDecision = true)
-    // explicit true keeps its r14 semantics
-    underConf("spark.graft.lr.coPartition" -> "true")(expectDecision = true)
-
-    // junk values fail loudly, not silently-false
-    spark.conf.set("spark.graft.lr.copartRows", "many")
-    try intercept[Exception](LrTrain.CopartRows(spark))
-    finally spark.conf.unset("spark.graft.lr.copartRows")
   }
 }
