@@ -39,11 +39,7 @@ object Bench {
             " (expected key=value; values must not contain commas)")
         }
       })
-    // warm the JVM/codegen/file-index paths so the first timed query
-    // doesn't absorb session startup (untimed; tolerate missing tables)
-    Seq("lineitem", "orders", "customer", "events", "documents", "embeddings")
-      .foreach(t => try Tables.load(spark, sfDir, t).count()
-        catch { case e: Throwable => System.err.println(s"[bench] warmup $t: ${e.getMessage}") })
+    Diag.warm(spark, sfDir)
 
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     only.foreach(_.diff(SparkEntry.queries.keySet).foreach(n =>
@@ -54,14 +50,11 @@ object Bench {
     val control = "q22_clean_numeric"
     val selected = SparkEntry.queries
       .filter { case (name, _) => name == control || only.forall(_.contains(name)) }
-    // Per-pass JIT compile-time delta (process-wide accumulated compile
-    // ms, same bean Diag reads): lands in the artifact beside every wall
-    // so a churn-dominated pass (jit delta ~ wall) is visible to a
-    // reader WITHOUT a standalone Diag rerun — self-adjudicating ladders.
-    val jitBean = java.lang.management.ManagementFactory.getCompilationMXBean
-    def jitMs(): Long =
-      if (jitBean != null && jitBean.isCompilationTimeMonitoringSupported)
-        jitBean.getTotalCompilationTime else -1L
+    // Per-pass JIT compile-time delta (Diag.jitMs): lands in the artifact
+    // beside every wall so a churn-dominated pass (jit delta ~ wall) is
+    // visible to a reader WITHOUT a standalone Diag rerun —
+    // self-adjudicating ladders.
+    import Diag.jitMs
     def timePasses(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
         n: Int): Seq[(Double, Long)] =
       (1 to n).map { _ =>
@@ -117,11 +110,6 @@ object Bench {
     val total = results.collect {
       case (name, v, _, _, _) if v >= 0 && only.forall(_.contains(name)) => v
     }.sum
-    // Locale.ROOT: f"$v%.3f" uses the JVM default locale and would emit
-    // comma decimals (invalid JSON) on e.g. de_DE JVMs
-    def fmt(v: Double): String =
-      if (v < 0) "-1"
-      else String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     val detail = results.map { case (k, v, _, _, _) => s"\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
     val allPasses = results.map { case (k, _, ps, _, _) =>
@@ -152,23 +140,31 @@ object Bench {
       (detailLine + "\n").getBytes("UTF-8"))
     catch { case e: Throwable => System.err.println(s"[bench] detail write: ${e.getMessage}") }
     System.err.println(detailLine)
-    // 2-decimal values on the stdout line ONLY (r17 verdict item 2): the
-    // harness keeps ~2000 chars of stdout tail and must parse the final
-    // line as one JSON object; at 152 queries the 3-decimal line ran
-    // ~2.5 KB and the capture truncated its head two rounds running
-    // (PERF_r17 prev_bench_ok:false). Dropping the stdout precision to
-    // 10 ms brings the full line + sbt's trailing [success] line inside
-    // the window; the 3-decimal per-query detail is unchanged in
-    // BENCH_WINDOW/BENCH_DETAIL.json and on stderr above. The queries
-    // map itself (every key, the timing methodology, the min-of-reps
-    // figure) is unchanged.
-    def fmt2(v: Double): String =
-      if (v < 0) "-1"
-      else String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
-    val compact = results.map { case (k, v, _, _, _) =>
-      s"\"" + k.takeWhile(_ != '_') + "\":" + fmt2(v)
-    }.mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$compact,"sf":"$sfDir"}""")
+    println(compactLine(results.map(r => (r._1, r._2)), total, sfDir))
     spark.stop()
   }
+
+  /** The stdout line: the total and each query's min wall keyed by its
+    * qNN prefix, at 2 decimals. The harness keeps only the last ~2000
+    * chars of stdout and must parse the final line as one JSON object;
+    * at 152 queries the 3-decimal line ran ~2.5 KB and the capture
+    * truncated its head two rounds running (PERF_r17
+    * prev_bench_ok:false). 10 ms precision brings the full line + sbt's
+    * trailing [success] line inside the window (BenchSpec bounds it);
+    * the 3-decimal per-query detail is unchanged in
+    * BENCH_WINDOW/BENCH_DETAIL.json and on stderr.
+    */
+  def compactLine(results: Seq[(String, Double)], total: Double, sfDir: String): String = {
+    val queries = results.map { case (k, v) =>
+      s"\"" + k.takeWhile(_ != '_') + "\":" + fmt2(v)
+    }.mkString("{", ",", "}")
+    s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$queries,"sf":"$sfDir"}"""
+  }
+
+  // Locale.ROOT: f"$v%.3f" uses the JVM default locale and would emit
+  // comma decimals (invalid JSON) on e.g. de_DE JVMs; -1 marks a failure
+  private def fmt(v: Double): String =
+    if (v < 0) "-1" else String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+  private def fmt2(v: Double): String =
+    if (v < 0) "-1" else String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
 }

@@ -144,8 +144,9 @@ object GraftSession {
     * UnknownPartitioning — so a repartition(n, key).localCheckpoint()
     * produced a LogicalRDD that advertised NO layout, and every
     * downstream consumer keyed on `key` re-exchanged the materialized
-    * table (measured by CkptProbe-style probe: consumer exchanges 2 vs
-    * 0; this silently defeated the r17 CC edge pre-partitioning and
+    * table (GraftSessionSpec pins it: a groupBy consumer's plan has
+    * >= 1 hash exchange after a plain localCheckpoint, 0 after this
+    * one; the gap silently defeated the r17 CC edge pre-partitioning and
     * the r18 CV co-partitioning). The checkpoint is executed with AQE
     * disabled FOR THIS ONE EAGER ACTION — localCheckpoint materializes
     * inside the call, so set-and-restore scopes it exactly (unlike

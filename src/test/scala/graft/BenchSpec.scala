@@ -1,0 +1,16 @@
+package graft
+
+import com.fasterxml.jackson.databind.ObjectMapper
+
+class BenchSpec extends GraftSpec {
+  test("the stdout line fits the harness's 2000-char tail at a 9.99 s wall per query") {
+    // the harness parses the last stdout line as one JSON object from
+    // the last ~2000 chars; sbt's trailing [success] line shares them
+    val names = SparkEntry.queries.keys.toSeq.sorted
+    val line = Bench.compactLine(names.map(_ -> 9.99), names.size * 9.99, sfDir)
+    assert(line.length < 1900, s"${line.length} chars for ${names.size} queries")
+    val parsed = new ObjectMapper().readTree(line)
+    // the qNN prefixes are the keys, so they must stay distinct
+    assert(parsed.get("queries").size == names.size)
+  }
+}

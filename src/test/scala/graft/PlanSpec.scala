@@ -214,13 +214,10 @@ class PlanSpec extends GraftSpec {
   }
 
   test("q53 corpus count is in-lineage — no driver-side count job at build") {
-    // job ids are assigned synchronously at submission, so a d.count()
-    // inside the query builder (the pre-round-10 shape) would register a
-    // job here; the in-lineage form must not
-    val before = spark.sparkContext.statusTracker.getJobIdsForGroup(null).length
-    val df = operators.TextOps.q53Tfidf(spark, sfDir)
-    val after = spark.sparkContext.statusTracker.getJobIdsForGroup(null).length
-    assert(after == before, s"query construction ran $before->$after jobs")
+    // a d.count() inside the query builder (the pre-round-10 shape)
+    // would run a job here; the in-lineage form must not
+    val (df, jobs) = JobCount(spark)(operators.TextOps.q53Tfidf(spark, sfDir))
+    assert(jobs == 0, s"query construction ran $jobs jobs")
     val p = planOf(df)
     // the one-row corpus count rides a broadcast nested-loop join inside
     // the same plan (1-row build side: bounded, not a real cartesian)
@@ -257,11 +254,9 @@ class PlanSpec extends GraftSpec {
     // per execution: q104 0.6 s -> 28 s in the r10 full-suite bench)
     LrTrain.docWeights(spark, sfDir).count()   // warm the registry
     LrTrain.sideWeights(spark, sfDir).count()
-    val before = spark.sparkContext.statusTracker.getJobIdsForGroup(null).length
-    val p28 = planOf(Classify.q28ClassifyLr(spark, sfDir))
-    val p104 = planOf(Classify.q104DualLr(spark, sfDir))
-    val after = spark.sparkContext.statusTracker.getJobIdsForGroup(null).length
-    assert(after == before, s"scoring-query construction ran ${after - before} jobs")
+    val ((p28, p104), jobs) = JobCount(spark)(
+      (planOf(Classify.q28ClassifyLr(spark, sfDir)), planOf(Classify.q104DualLr(spark, sfDir))))
+    assert(jobs == 0, s"scoring-query construction ran $jobs jobs")
     Seq("q28" -> p28, "q104" -> p104).foreach { case (n, p) =>
       assert(p.contains("LocalTableScan"), s"$n weights are not a local artifact:\n$p")
       assert(!p.contains("Checkpoint"), s"$n still carries training stages:\n$p")

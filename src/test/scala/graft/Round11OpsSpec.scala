@@ -130,10 +130,9 @@ class Round11OpsSpec extends GraftSpec {
     assert(Dedup.rpDerivedBitsFor(Dedup.RpTargetOcc * 1024) == 10)
     assert(Dedup.rpDerivedBitsFor(Dedup.RpTargetOcc * 1024 + 1) == 11)
     // the count is in-lineage: building the q109 plan launches no jobs
-    val before = spark.sparkContext.statusTracker.getJobIdsForGroup(null).length
-    Dedup.q109EmbedLsh(spark, sfDir).queryExecution.optimizedPlan.toString
-    val after = spark.sparkContext.statusTracker.getJobIdsForGroup(null).length
-    assert(after == before, s"plan build ran ${after - before} jobs")
+    val (_, jobs) = JobCount(spark)(
+      Dedup.q109EmbedLsh(spark, sfDir).queryExecution.optimizedPlan.toString)
+    assert(jobs == 0, s"plan build ran $jobs jobs")
   }
 
   test("q135 balanced fit beats the majority-class prior; plain fit never does") {
