@@ -180,13 +180,12 @@ object Diag {
       IndexSet.publish(spark, Tables.documents(spark, sfDir).select("doc_id", "text"),
         Tables.embeddings(spark, sfDir), root)
       val snap = IndexSet.loadSnapshot(spark, root)
-      val requests = Tables.documents(spark, sfDir)
+      val requests = GraftSession.checkpoint(Tables.documents(spark, sfDir)
         .filter(col("doc_id") < Retrieval.NumQueries)
         .select(col("doc_id").as("query_id"), col("text"))
         .join(Tables.embeddings(spark, sfDir)
           .select(col("vec_id").as("query_id"), col("embedding").as("pvec")),
-          Seq("query_id"))
-        .localCheckpoint()
+          Seq("query_id")))
       val paths = Seq[(String, () => DataFrame)](
         "bm25_score" -> (() => Retrieval.scoreQueries(
           requests.select("query_id", "text"), snap.bm25, excludeSelf = true)),
@@ -243,7 +242,10 @@ object Diag {
   }
 
   /** The duplicate-exchange screen: run `fn` twice (the first pass
-    * absorbs codegen/JIT) and record the second pass's stages. Two or
+    * absorbs codegen/JIT) and record the second pass's stages. Each pass
+    * counts the frame's own rows (`queryExecution.toRdd.count()`):
+    * `Dataset.count()` would add a one-row aggregate whose 59 B shuffle
+    * pairs with any one-row global aggregate in the frame. Two or
     * more distinct stages writing the SAME nonzero shuffle byte count
     * is the signature of an identical subtree that AQE stage reuse
     * failed to dedup (the q148 defect class: an optimizer-inferred
@@ -253,14 +255,14 @@ object Diag {
     * cpuMs against hash-only shuffle bytes is per-row work that belongs
     * in a native expression. A failure lands in the record as `err`.
     */
-  private def screen(rec: StageRecorder, key: String, name: String)(
+  private[graft] def screen(rec: StageRecorder, key: String, name: String)(
       fn: () => DataFrame): String = {
     val (wall, rows, err) =
       try {
-        fn().count()
+        fn().queryExecution.toRdd.count()
         rec.clear()
         val t0 = System.nanoTime()
-        fn().count()
+        fn().queryExecution.toRdd.count()
         ((System.nanoTime() - t0) / 1e9, rec.snapshot(), "")
       } catch {
         case e: Throwable => (-1.0, Vector.empty[StageRow], String.valueOf(e.getMessage))

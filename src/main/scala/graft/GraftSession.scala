@@ -1,6 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{classic, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.SortOrder
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning,
+  SinglePartition}
+import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Central place for engine configuration so Verify/Bench/tests all run
   * with the same tuned profile.
@@ -46,13 +54,17 @@ object GraftSession {
       // r18: allow co-partitioned joins to reuse a SUBSET-key layout
       // (hash(lid) satisfying a (lid, tf, side) equi-join) instead of
       // re-exchanging both sides. Only multi-key joins over explicitly
-      // pre-partitioned children are affected — in this engine exactly
-      // the iterative ML/CC machinery that pays for its layout once
-      // (q138's per-iteration gradient join); single-key joins and all
-      // aggregates were already subset-satisfiable. The default (true)
-      // guards against skew when a prefix key is low-cardinality; the
-      // layouts used here key on lid/doc_id — the highest-cardinality
-      // ids in the engine. Results are partitioning-invariant.
+      // pre-partitioned children are affected; single-key joins and all
+      // aggregates were already subset-satisfiable. Of the two layout
+      // checkpoint families, q138's k-fold corpus needs it: its
+      // per-iteration (lid, tf, side) gradient join reads hash(lid) in
+      // place only under this setting (PlanSpec pins that, and the
+      // bit-identical weights at `true`). The CC tables join on single
+      // keys and plan the same either way. The default
+      // (true) guards against skew when a prefix key is
+      // low-cardinality; these layouts key on lid/doc_id — the
+      // highest-cardinality ids in the engine. Results are
+      // partitioning-invariant.
       .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
@@ -138,39 +150,6 @@ object GraftSession {
     * value into every later query on the session. The child session is
     * the only shape that scopes a planning-time conf to one query.
     */
-  /** localCheckpoint that PRESERVES the frame's output partitioning
-    * (r18). Under AQE, `Dataset.localCheckpoint` captures the
-    * AdaptiveSparkPlanExec's partitioning, which reads
-    * UnknownPartitioning — so a repartition(n, key).localCheckpoint()
-    * produced a LogicalRDD that advertised NO layout, and every
-    * downstream consumer keyed on `key` re-exchanged the materialized
-    * table (GraftSessionSpec pins it: a groupBy consumer's plan has
-    * >= 1 hash exchange after a plain localCheckpoint, 0 after this
-    * one; the gap silently defeated the r17 CC edge pre-partitioning and
-    * the r18 CV co-partitioning). The checkpoint is executed with AQE
-    * disabled FOR THIS ONE EAGER ACTION — localCheckpoint materializes
-    * inside the call, so set-and-restore scopes it exactly (unlike
-    * planning-time confs, see autoShuffled above). The frames this is
-    * used on are explicit repartition/aggregate shapes that AQE could
-    * only coalesce — and a preserved layout is the entire point, so
-    * coalescing is unwanted there anyway. Results are partitioning-
-    * invariant; this is purely plan shape.
-    *
-    * Thread-safety: flips a session conf around an eager action, so
-    * callers must not run concurrent queries on the SAME session that
-    * could plan inside the window (the engine's concurrent paths —
-    * grid search — run on isolated child sessions already).
-    */
-  def layoutCheckpoint(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val conf = df.sparkSession.conf
-    val key = "spark.sql.adaptive.enabled"
-    val prev = conf.get(key)
-    try {
-      conf.set(key, "false")
-      df.localCheckpoint()
-    } finally conf.set(key, prev)
-  }
-
   def autoShuffled(s: SparkSession, paths: String*): SparkSession =
     if (s.conf.getOption("spark.graft.autoShufflePartitions")
         .exists(_.trim.toBoolean)) {
@@ -180,4 +159,86 @@ object GraftSession {
       s2.conf.set("spark.sql.shuffle.partitions", n.toString)
       s2
     } else s
+
+  // --- the checkpoint primitive ------------------------------------------
+
+  /** Truncates `df`'s lineage with an eager `localCheckpoint`: every
+    * iterative block (CC rounds, the LR trainers, k-means, q138 CV, the
+    * hierarchy walk) takes one so round N does not re-execute rounds
+    * 1..N-1. The job's stage is named `localCheckpoint at ...` on every
+    * path.
+    *
+    * Without `layout` this is `df.localCheckpoint()` and nothing more:
+    * under AQE the materialized table advertises no partitioning, and
+    * consumers exchange it as they need (the plain sites want exactly
+    * that — LrTrain.docTrainPath measured a doc_id layout slower at
+    * benchmark scale).
+    *
+    * With `layout`, the table keeps the hash layout on those keys, so a
+    * consumer keyed on them reads it in place instead of re-exchanging
+    * it every round. `Dataset.localCheckpoint` records the partitioning
+    * of the node it ran, and under AQE that node (AdaptiveSparkPlanExec)
+    * reports UnknownPartitioning; the final adaptive plan holds the real
+    * one. It is read after the run and must be a hash partitioning on
+    * exactly `layout` (or a single partition, which is clustered on any
+    * key); the checkpoint's LogicalRDD then advertises it. If AQE
+    * changed the layout (a coalesced read), just this frame is planned
+    * again without AQE (QueryExecution.prepareExecutedPlan) and
+    * checkpointed from that plan, at the cost of a second run. A frame
+    * not laid out on `layout` either way throws, naming what it found.
+    * No session conf is written, so queries running concurrently on
+    * the session plan as they would without this call.
+    */
+  def checkpoint(df: DataFrame, layout: Seq[String] = Nil): DataFrame = {
+    val ck = df.localCheckpoint()
+    if (layout.isEmpty) ck else keepLayout(df, ck, layout)
+  }
+
+  private def keepLayout(df: DataFrame, ck: DataFrame, layout: Seq[String]): DataFrame = {
+    val out = df.queryExecution.analyzed.output
+    val keys = layout.map(k => out.find(_.name == k).getOrElse(throw new IllegalArgumentException(
+      s"checkpoint layout key $k is not among ${out.map(_.name).mkString(", ")}")).canonicalized)
+    def onLayout(p: Partitioning): Boolean = p match {
+      case h: HashPartitioning => h.expressions.map(_.canonicalized) == keys
+      case SinglePartition => true
+      case _ => false
+    }
+    val ran = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.finalPhysicalPlan
+      case p => p
+    }
+    val sess = df.sparkSession.asInstanceOf[classic.SparkSession]
+    val lr = ck.queryExecution.analyzed.asInstanceOf[LogicalRDD]
+    def advertising(rdd: RDD[InternalRow], p: Partitioning, ordering: Seq[SortOrder]) =
+      Bridge.ofRows(sess, lr.copy(rdd = rdd, outputPartitioning = p, outputOrdering = ordering)(
+        sess, Some(lr.computeStats()), Some(lr.constraints)))
+    if (onLayout(ran.outputPartitioning))
+      advertising(lr.rdd, ran.outputPartitioning, lr.outputOrdering)
+    else {
+      free(ck)
+      val plan = QueryExecution.prepareExecutedPlan(sess, df.queryExecution.optimizedPlan)
+      require(onLayout(plan.outputPartitioning),
+        s"checkpoint: the frame is not laid out on ${layout.mkString("(", ", ", ")")}: " +
+          s"found ${plan.outputPartitioning} (adaptive run: ${ran.outputPartitioning})")
+      // the wrapped plan has no exchange left to adapt, so this
+      // checkpoint records the plan's partitioning itself
+      advertising(plan.execute(), plan.outputPartitioning, plan.outputOrdering).localCheckpoint()
+    }
+  }
+
+  /** Releases a checkpoint's blocks now. Training loops end in a driver
+    * collect (LrTrain.asLocal), so their corpus checkpoints are dead the
+    * moment a training function returns its local weights — but the
+    * blocks otherwise survive until a driver GC lets the ContextCleaner
+    * notice the dropped reference, and a long-lived serving session that
+    * trains many (corpus, dial) registry keys would carry every dead
+    * training corpus in storage memory. Call ONLY on frames whose
+    * consumers have all been collected: an unpersisted checkpoint cannot
+    * be recomputed (its lineage is truncated), which is why the k-fold
+    * harness materializes its tiny CV summary BEFORE freeing its shared
+    * corpus checkpoints.
+    */
+  def free(df: DataFrame): Unit =
+    df.queryExecution.analyzed.collect { case lr: LogicalRDD => lr.rdd }
+      .foreach(_.unpersist(blocking = false))
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import graft.operators.Relational.{dmoney, out2}
 
 /** Balance-sheet construction operators (SURVEY.md §2.2, E8/E14/E15).
@@ -275,7 +275,7 @@ object BalanceSheet {
     // plan's okey partitioning does not survive the RDD barrier), but
     // that exchange carries the NARROW 5-column rows — cheap relative
     // to the clean chain it stops from running twice.
-    val rows = if (checkpoint) rowsPlan.localCheckpoint() else rowsPlan
+    val rows = if (checkpoint) GraftSession.checkpoint(rowsPlan) else rowsPlan
     // stage 5a: synthesize the sheets' total rows from block sums with
     // the deterministic distortion (the groupBy reuses the okey exchange)
     val factor = when((col("l_orderkey") % 7).isin(1, 2, 3), lit("1.00"))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import graft.functions.{TextFunctions, VectorFunctions}
 
 /** Deduplication operators for an LLM-training-data pipeline
@@ -343,16 +343,46 @@ object Dedup {
   private[graft] val CcRowsPerPartition: Long = 2000000L
 
   def resolveClusters(pairs: DataFrame): DataFrame = {
+    val (edges, labels0, np) = ccLayout(pairs)
+    var labels = labels0
+    var converged = false
+    var rounds = 0
+    while (!converged && rounds < 30) {
+      // ONE hop per materialized round (a two-hop variant measured
+      // SLOWER: the doubled un-checkpointed join depth costs more than
+      // the saved checkpoint round-trips). The changed flag rides in the
+      // same checkpointed frame, so convergence detection is a cheap
+      // scan of materialized blocks.
+      val step = ccStep(edges, labels, np)
+      converged = step.filter(col("changed")).isEmpty
+      labels = step.select("doc_id", "label")
+      rounds += 1
+    }
+    // A silent partial result would diverge from the recursive-CTE oracle
+    // with no signal; a >30-diameter chain means the input isn't the
+    // small-clique near-dup graph this operator is for (use GraphX
+    // connectedComponents there).
+    if (!converged)
+      throw new IllegalStateException(
+        s"resolveClusters: min-label propagation not converged after $rounds rounds " +
+          "(pair-graph diameter exceeds the cap); raise the cap or use GraphX connectedComponents")
+    labels.select(col("doc_id"), col("label").as("cluster_id"),
+      (col("doc_id") === col("label")).as("is_keeper"))
+  }
+
+  /** The CC tables, laid out for the hop join: the undirected edge
+    * table hash(dst) and the initial labels hash(doc_id), both at the
+    * CC machinery's own width (the third element).
+    */
+  private[graft] def ccLayout(pairs: DataFrame): (DataFrame, DataFrame, Int) = {
     // iterative algorithms MUST truncate lineage each round or round N
     // re-executes rounds 1..N-1 (and the upstream pair generation) from
-    // scratch — localCheckpoint materializes the small label/edge tables.
+    // scratch — a checkpoint materializes the small label/edge tables.
     // On a cluster with a long-running job, checkpoint() to reliable
     // storage instead so executor loss can't lose the blocks.
     // Pre-partition the STATIC edge table by the hop-join key before the
-    // checkpoint (r17 opt), taken through GraftSession.layoutCheckpoint
-    // so the hash(dst) layout survives the RDD barrier (a plain
-    // localCheckpoint under AQE advertises UnknownPartitioning, r18),
-    // and every propagation round's edges⋈labels join reads the
+    // checkpoint (r17 opt), and keep that layout on the checkpoint, so
+    // every propagation round's edges⋈labels join reads the
     // materialized hash(dst) layout in place instead of RE-SHUFFLING the full edge set per round — at R
     // rounds that was R corpus-of-edges exchanges for a table that
     // never changes. The labels side gets the matching explicit
@@ -377,63 +407,51 @@ object Dedup {
     // next to the pair generation it sizes), and the repartition then
     // reads those blocks, not the pair pipeline again. Partitioning
     // never changes results — labels/joins are keyed aggregates.
+    // The floor is two partitions, not one: repartition(1, key) plans
+    // as SinglePartition, which Spark's co-partitioning check does not
+    // pair with the hop's aggregate side, so at one partition (every
+    // edge set under 2M rows) each round re-exchanged the labels and,
+    // from round 2 on, the edges (PlanSpec's CC checks; ccHop keeps the
+    // aggregate side at this width too).
     val confNp = pairs.sparkSession.sessionState.conf.numShufflePartitions
-    val edges0 = pairs.select(col("d1").as("src"), col("d2").as("dst"))
-      .union(pairs.select(col("d2").as("src"), col("d1").as("dst")))
-      .localCheckpoint(true)
-    val np = math.max(1, math.min(confNp.toLong,
+    val edges0 = GraftSession.checkpoint(pairs.select(col("d1").as("src"), col("d2").as("dst"))
+      .union(pairs.select(col("d2").as("src"), col("d1").as("dst"))))
+    val np = math.max(2, math.min(confNp.toLong,
       edges0.count() / CcRowsPerPartition + 1)).toInt
-    // layoutCheckpoint, not plain localCheckpoint (r18): under AQE the
-    // plain form advertised UnknownPartitioning on the materialized
-    // RDD, so every round's hop join silently RE-EXCHANGED both big
-    // sides — the exact defect the r17 pre-partitioning meant to fix
-    val edges = graft.GraftSession.layoutCheckpoint(
-      edges0.repartition(np, col("dst")))
-    val labels0 = graft.GraftSession.layoutCheckpoint(
+    val edges = GraftSession.checkpoint(edges0.repartition(np, col("dst")), Seq("dst"))
+    val labels0 = GraftSession.checkpoint(
       edges.select(col("src").as("doc_id")).distinct()
         .withColumn("label", col("doc_id"))
-        .repartition(np, col("doc_id")))
+        .repartition(np, col("doc_id")), Seq("doc_id"))
     // the un-partitioned staging checkpoint is dead once the laid-out
-    // copy exists (freeCheckpoint discipline — LrTrain's rationale)
-    edges0.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }.foreach(_.unpersist(blocking = false))
-    var labels = labels0
-    // one propagation hop: labels' = min(label, min over in-neighbors),
-    // keeping the caller's old_label column for change detection
-    def hop(ls: DataFrame): DataFrame = {
-      val nbrMin = edges.join(ls, edges("dst") === ls("doc_id"))
-        .groupBy(col("src")).agg(min(col("label")).as("nbr_label"))
-      ls.join(nbrMin, ls("doc_id") === nbrMin("src"), "left_outer")
-        .select(ls("doc_id"), col("old_label"),
-          least(col("label"), coalesce(col("nbr_label"), col("label"))).as("label"))
-    }
-    var converged = false
-    var rounds = 0
-    while (!converged && rounds < 30) {
-      // ONE hop per materialized round (a two-hop variant measured
-      // SLOWER: the doubled un-checkpointed join depth costs more than
-      // the saved checkpoint round-trips). The changed flag rides in the
-      // same checkpointed frame, so convergence detection is a cheap
-      // scan of materialized blocks.
-      val step = graft.GraftSession.layoutCheckpoint(
-        hop(labels.withColumn("old_label", col("label")))
-          .withColumn("changed", col("label") =!= col("old_label"))
-          .select("doc_id", "label", "changed"))
-      converged = step.filter(col("changed")).isEmpty
-      labels = step.select("doc_id", "label")
-      rounds += 1
-    }
-    // A silent partial result would diverge from the recursive-CTE oracle
-    // with no signal; a >30-diameter chain means the input isn't the
-    // small-clique near-dup graph this operator is for (use GraphX
-    // connectedComponents there).
-    if (!converged)
-      throw new IllegalStateException(
-        s"resolveClusters: min-label propagation not converged after $rounds rounds " +
-          "(pair-graph diameter exceeds the cap); raise the cap or use GraphX connectedComponents")
-    labels.select(col("doc_id"), col("label").as("cluster_id"),
-      (col("doc_id") === col("label")).as("is_keeper"))
+    // copy exists
+    GraftSession.free(edges0)
+    (edges, labels0, np)
+  }
+
+  /** One materialized propagation round: the hop, checkpointed on the
+    * hash(doc_id) layout the hop join produced, so the next round reads
+    * it in place.
+    */
+  private[graft] def ccStep(edges: DataFrame, labels: DataFrame, np: Int): DataFrame =
+    GraftSession.checkpoint(ccHop(edges, labels, np), Seq("doc_id"))
+
+  /** One propagation hop over the laid-out tables: labels' = min(label,
+    * min over in-neighbors), with a `changed` flag for convergence.
+    */
+  private[graft] def ccHop(edges: DataFrame, labels: DataFrame, np: Int): DataFrame = {
+    val ls = labels.withColumn("old_label", col("label"))
+    // the per-src minimum is exchanged at the tables' own width: at the
+    // session width (the aggregate's default) the wider side wins the
+    // co-partitioning choice and the labels were re-exchanged to it
+    val nbrMin = edges.join(ls, edges("dst") === ls("doc_id"))
+      .repartition(np, col("src"))
+      .groupBy(col("src")).agg(min(col("label")).as("nbr_label"))
+    ls.join(nbrMin, ls("doc_id") === nbrMin("src"), "left_outer")
+      .select(ls("doc_id"), col("old_label"),
+        least(col("label"), coalesce(col("nbr_label"), col("label"))).as("label"))
+      .withColumn("changed", col("label") =!= col("old_label"))
+      .select("doc_id", "label", "changed")
   }
 
   /** Unordered q55 verdicts — the composition form (q58 uses it). */
@@ -1282,8 +1300,7 @@ object Dedup {
     val minCols = (0 until MinhashK).map(i =>
       min((lit(mhA(i)) * col("base") + lit(mhB(i))) % MhMod).as(s"mh_$i"))
     val rowsPerBand = MinhashK / LshBands
-    val mhAgg = sh.groupBy("doc_id").agg(minCols.head, minCols.tail: _*)
-      .localCheckpoint()
+    val mhAgg = GraftSession.checkpoint(sh.groupBy("doc_id").agg(minCols.head, minCols.tail: _*))
     val sigs = mhAgg
       .withColumn("sig", array((0 until MinhashK).map(i => col(s"mh_$i")): _*))
       .select("doc_id", "sig")

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import Relational.{avg6, dmoney, out2}
 
 /** Round-5 relational extensions (SURVEY.md §2.1 R43–R45): time-series
@@ -180,7 +180,7 @@ object Extended {
   private[graft] def hierarchyWalk(nodes: DataFrame, edges: DataFrame): DataFrame = {
     val start = nodes.select(col("k"), col("k").as("cur"), lit(0L).as("depth"))
     var result = start.filter(col("cur") < 10)
-    var frontier = start.filter(col("cur") >= 10).localCheckpoint()
+    var frontier = GraftSession.checkpoint(start.filter(col("cur") >= 10))
     var round = 0
     while (frontier.limit(1).count() > 0) {
       round += 1
@@ -188,9 +188,8 @@ object Extended {
         throw new IllegalStateException(
           s"q96Hierarchy: frontier not drained after $HierarchyMaxDepth rounds — " +
             "cyclic edge relation or pathological depth; aborting instead of looping")
-      val stepped = frontier.join(edges, col("cur") === col("child"))
-        .select(col("k"), col("parent").as("cur"), (col("depth") + 1).as("depth"))
-        .localCheckpoint()
+      val stepped = GraftSession.checkpoint(frontier.join(edges, col("cur") === col("child"))
+        .select(col("k"), col("parent").as("cur"), (col("depth") + 1).as("depth")))
       result = result.unionAll(stepped.filter(col("cur") < 10))
       frontier = stepped.filter(col("cur") >= 10)
     }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 
 /** Distributed hashed-TF logistic-regression TRAINING (SURVEY.md §2.2 —
   * the reference fits its asset/liability LR models in
@@ -190,24 +190,6 @@ object LrTrain {
     df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
   }
 
-  /** Deterministically release a `localCheckpoint`'s blocks. Every GD
-    * iteration ends in asLocal (a driver collect), so the corpus
-    * checkpoints are DEAD the moment a training function returns its
-    * local weight matrix — but their MEMORY_AND_DISK blocks otherwise
-    * survive until a driver GC lets the ContextCleaner notice the
-    * dropped reference: a long-lived serving session that trains many
-    * (corpus, dial) registry keys would carry every dead training
-    * corpus in storage memory indefinitely. Call ONLY on frames whose
-    * consumers have all been collected — an unpersisted localCheckpoint
-    * cannot be recomputed (its lineage is truncated), which is why the
-    * k-fold harness materializes its tiny CV summary via asLocal
-    * BEFORE freeing its shared corpus checkpoints (r13 verdict item 5).
-    */
-  private[graft] def freeCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }.foreach(_.unpersist(blocking = false))
-
   // --- wide (packed-class) training loop --------------------------------
   // The class count is a FIXED small constant, so the class axis lives
   // in COLUMNS (w0..w4 / m0..m4 / r0..r4 / g0..g4), not rows:
@@ -286,7 +268,7 @@ object LrTrain {
     */
   private def docTrainPath(docs: DataFrame, resid: Resid,
       balanced: Boolean): Seq[DataFrame] = {
-    // Persist the feature frame ONCE (localCheckpoint), iterate over the
+    // Persist the feature frame ONCE (a checkpoint), iterate over the
     // materialized form — the textbook distributed-LR shape: each
     // iteration is one pass over cached features, not a re-scan +
     // re-tokenize of the corpus. w0 goes through asLocal like every
@@ -297,15 +279,15 @@ object LrTrain {
     // (r11: the lazy form re-scanned the documents parquet per
     // iteration; at 100 TB that is Iters extra corpus scans for a
     // 2-column frame); the balanced class-count frame derives from it.
-    // Both stay plain checkpoints, left to AQE's runtime broadcasts: a
-    // doc_id co-partitioned layout won only past ~50M xdb rows
-    // (BENCH_R15_FLIP.json, BENCH_R16_FLIP_AUTO.json; the layoutCheckpoint
+    // Both stay plain checkpoints (no layout), left to AQE's runtime
+    // broadcasts: a doc_id co-partitioned layout won only past ~50M xdb
+    // rows (BENCH_R15_FLIP.json, BENCH_R16_FLIP_AUTO.json; the laid-out
     // form in BENCH_R18_FLIP_FIXED.json) and lost at sf0.1 (curate_train
     // job-latency p50 +35%). No benchmark workload reaches that size, so
     // there is no size-selected co-partitioned path.
-    val xdb = docTokFrom(docs).groupBy("doc_id", "bucket")
-      .agg(count(lit(1)).as("x")).localCheckpoint()
-    val labels = docLabelsFrom(docs).localCheckpoint()
+    val xdb = GraftSession.checkpoint(docTokFrom(docs).groupBy("doc_id", "bucket")
+      .agg(count(lit(1)).as("x")))
+    val labels = GraftSession.checkpoint(docLabelsFrom(docs))
     val nDf = xdb.agg(countDistinct(col("doc_id")).as("n"))
     val ncDf = Option.when(balanced)(labels.agg(count(lit(1)).as("n_total"),
       (0 until Classes).map(c =>
@@ -317,7 +299,7 @@ object LrTrain {
         Seq.empty, LrDen(sess), resid, ncDf))
       .take(Iters(sess) + 1).toList
     // the trajectory is all local relations now — release the corpus
-    freeCheckpoint(xdb); freeCheckpoint(labels)
+    GraftSession.free(xdb); GraftSession.free(labels)
     path
   }
 
@@ -1103,10 +1085,10 @@ object LrTrain {
     // Same persist-once + wide loop as docWeightPath — doubly important
     // here because sidedLines carries a window over l_orderkey that
     // would otherwise be re-shuffled by every frame of every iteration.
-    val sided = sidedLines(s, dir).filter(keep).localCheckpoint()
-    val xdb = sideXdb(sided).localCheckpoint()
+    val sided = GraftSession.checkpoint(sidedLines(s, dir).filter(keep))
+    val xdb = GraftSession.checkpoint(sideXdb(sided))
     val w = trainedSideWeightsOn(s, sided, xdb)
-    freeCheckpoint(sided); freeCheckpoint(xdb)
+    GraftSession.free(sided); GraftSession.free(xdb)
     w
   }
 

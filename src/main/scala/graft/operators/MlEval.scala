@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 
 /** Held-out model evaluation + calibrated probability output
   * (SURVEY.md §2.2/§2.3 — the EVALUATION half of the reference's ML
@@ -399,8 +399,11 @@ object MlEval {
     */
   @volatile private[graft] var cvEntryHook: () => Unit = () => ()
 
-  private[graft] def sidedCrossVal(s: SparkSession, dir: String, k: Int): DataFrame = {
-    require(k >= 2, s"k-fold needs k >= 2, got $k")
+  /** The k-fold corpus, prepared once for all folds: the sided lines
+    * with their fold, and their bucket counts, both checkpointed on the
+    * hash(lid) layout.
+    */
+  private[graft] def cvCorpus(s: SparkSession, dir: String, k: Int): (DataFrame, DataFrame) = {
     // ONE shared corpus prep for all k folds: the sidedLines window and
     // the tokenize→bucket-count aggregate each run exactly once; fold
     // membership is a pure function of lid (a 60-bit non-negative md5
@@ -413,7 +416,7 @@ object MlEval {
     val foldOf = (col("lid") % k.toLong).cast(IntegerType)
     // CO-PARTITION the shared checkpoints by lid (unconditionally: the
     // r14/r15 crossover of BENCH_R15_FLIP.json is always passed here):
-    // the batched chain below processes the
+    // sidedCrossVal's batched fold chain processes the
     // (k−1)×-exploded corpus every iteration, which is past the measured
     // broadcast/co-partition crossover even at sf0.1 — without this the
     // planner broadcast the multi-M-row exploded frame per iteration and
@@ -421,22 +424,27 @@ object MlEval {
     // passes with GC storms). hash(lid) is a SUBSET of every downstream
     // grouping/join key — (lid,tf,side) margins, the lid label join, the
     // (lid,tf,side) gradient join, the (lid,fold,side,y_cls) scoring
-    // aggregate — and layoutCheckpoint keeps that outputPartitioning
-    // (a plain localCheckpoint under AQE drops it, r18), so ONE corpus
+    // aggregate — and the checkpoint keeps that layout, so ONE corpus
     // exchange here makes every
     // per-iteration corpus operation exchange-free; only the KB-scale
     // gradient/nDf/summary aggregates still shuffle. Explicit count so
     // AQE cannot coalesce one side out of co-partition.
     val np = s.sessionState.conf.numShufflePartitions
-    val sidedAll = graft.GraftSession.layoutCheckpoint(
+    val sidedAll = GraftSession.checkpoint(
       LrTrain.sidedLines(s, dir)
         .withColumn("fold", foldOf)
-        .repartition(np, col("lid")))
+        .repartition(np, col("lid")), Seq("lid"))
     // sideXdb's groupBy(lid, side, bucket) is satisfied by hash(lid), so
-    // this aggregate — and the scoring/label/margin frames below — read
-    // the materialized layout in place
-    val xdbAll = graft.GraftSession.layoutCheckpoint(
-      LrTrain.sideXdb(sidedAll).withColumn("fold", foldOf))
+    // this aggregate — and the fold fit's scoring/label/margin frames —
+    // read the materialized layout in place
+    val xdbAll = GraftSession.checkpoint(
+      LrTrain.sideXdb(sidedAll).withColumn("fold", foldOf), Seq("lid"))
+    (sidedAll, xdbAll)
+  }
+
+  private[graft] def sidedCrossVal(s: SparkSession, dir: String, k: Int): DataFrame = {
+    require(k >= 2, s"k-fold needs k >= 2, got $k")
+    val (sidedAll, xdbAll) = cvCorpus(s, dir, k)
     // snapshot the LR dials ONCE, before any training launches (r13
     // verdict item 3): every fold provably trains under the entry dial
     // (the spec re-dials the parent mid-CV and checks the folds)
@@ -494,7 +502,7 @@ object MlEval {
     // plan-equivalent for every consumer (orderBy/agg over ≤ 2k
     // rows) and the oracle row is unchanged.
     val local = LrTrain.asLocal(folds)
-    LrTrain.freeCheckpoint(sidedAll); LrTrain.freeCheckpoint(xdbAll)
+    GraftSession.free(sidedAll); GraftSession.free(xdbAll)
     local
   }
 

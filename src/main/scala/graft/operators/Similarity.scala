@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import graft.functions.VectorFunctions
 
 /** Approximate-nearest-neighbor similarity search over the embedding
@@ -555,12 +555,11 @@ object Similarity {
     // scans where one + checkpoint does). The frame is the SPARSE
     // vectorization — ≤ TkVocab (dim, w) pairs per doc — so it is far
     // smaller than the token stream it derives from. A/B in SURVEY §8.
-    val docs = weights
+    val docs = GraftSession.checkpoint(weights
       .groupBy("doc_id")
       .agg(array_sort(collect_list(struct(col("dim"), col("w")))).as("entries"))
       .withColumn("n2x", aggregate(col("entries"), lit(0.0),
-        (a, e) => a + e.getField("w") * e.getField("w")))
-      .localCheckpoint()
+        (a, e) => a + e.getField("w") * e.getField("w"))))
     val seedTriples = docs.filter(col("doc_id") < TkK)
       .select(col("doc_id").cast(IntegerType).as("cid"), explode(col("entries")).as("e"))
       .select(col("cid"), col("e.dim").as("dim"), col("e.w").as("wv"))
@@ -572,7 +571,7 @@ object Similarity {
     // Lloyd pass (and everything above it) is not replayed per consumer.
     // One materialization per Lloyd round, each round's lineage
     // truncated — the standard iterative-refinement shape.
-    tkAssign(docs, tkRecompute(s, tkAssign(docs, seeds))).localCheckpoint()
+    GraftSession.checkpoint(tkAssign(docs, tkRecompute(s, tkAssign(docs, seeds))))
   }
 
   def q105TfidfKmeans(s: SparkSession, dir: String): DataFrame = {
@@ -633,7 +632,7 @@ object Similarity {
     // the same row multiset (dim↔token is 1:1 within the vocabulary,
     // and the entries' w values ARE the weights' w values), and the
     // decimal sum is order-exact — oracle rows unchanged.
-    val wts = tfidfWeights(s, dir).localCheckpoint()
+    val wts = GraftSession.checkpoint(tfidfWeights(s, dir))
     tfidfAssignmentsFrom(s, wts)
       .select(col("doc_id"), col("cid"))
       .join(wts, Seq("doc_id"))

@@ -3,8 +3,10 @@ package graft
 import java.nio.file.Files
 
 import scala.jdk.CollectionConverters._
+import scala.util.Using
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import org.apache.spark.sql.functions.{col, sum}
 
 /** Diag's JSON escaper, and one smoke call of every mode, so the tool
   * cannot drift from the engine paths it times without a failing spec.
@@ -38,6 +40,18 @@ class DiagSpec extends GraftSpec {
     assert(r.size == 1)
     assert(keysOf(r.get(0)) == screenKeys + "query")
     assert(r.get(0).get("err").asText == "" && r.get(0).get("wall").asDouble > 0)
+  }
+
+  test("screen: a one-row global aggregate is not flagged as a duplicate writer") {
+    // the sum's partial aggregate writes one row per range partition;
+    // a timing count() over the frame would write the same rows again
+    def frame = spark.range(0, 1000)
+      .crossJoin(spark.range(0, 1000).agg(sum("id").as("s")))
+      .filter(col("id") < col("s"))
+    val r = json.readTree(Using.resource(new Diag.StageRecorder(spark))(rec =>
+      Diag.screen(rec, "path", "range_sum")(() => frame)))
+    assert(r.get("err").asText == "" && r.get("stages").asInt > 0, r)
+    assert(!r.get("dupFlag").asBoolean, r)
   }
 
   test("serve mode screens the three serve reads, fusedWithContent among them") {

@@ -1,7 +1,12 @@
 package graft
 
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
-import graft.operators.{Dedup, Edgar, Relational, Similarity}
+import org.apache.spark.sql.util.QueryExecutionListener
+import graft.operators.{Dedup, Edgar, LrTrain, MlEval, Relational, Similarity}
 
 /** Physical-plan audits (SURVEY.md §5): these lock in the properties that
   * make the engine scale — pushdown reaching the parquet scan, column
@@ -315,5 +320,90 @@ class PlanSpec extends GraftSpec {
     // (treeAggregate); the pre-round-10 shape added a counting pass on
     // top (3+) — that extra pass is what must be gone
     assert(jobs <= 2, s"q62 build ran $jobs jobs")
+  }
+
+  // --- the five layout checkpoints (GraftSession.checkpoint with keys) --
+  // Each check reads a consumer of the checkpoint and counts the hash
+  // exchanges on the layout key: 0 means the consumer reads the
+  // materialized layout in place.
+
+  private def assertInPlace(df: DataFrame, keys: String*): Unit = {
+    df.collect()
+    val p = planOf(df)
+    keys.foreach(k => assert(!p.contains(s"Exchange hashpartitioning($k#"), s"$k:\n$p"))
+  }
+
+  /** The executed plans of the actions `body` runs on `s`. */
+  private def plansOf[T](s: SparkSession)(body: => T): (T, Seq[String]) = {
+    val plans = ArrayBuffer.empty[String]
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.synchronized(plans += qe.executedPlan.toString)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    s.listenerManager.register(listener)
+    // JobCount's closing sentinel drains the bus the listener rides on
+    try (JobCount(s)(body)._1, plans.synchronized(plans.toSeq))
+    finally s.listenerManager.unregister(listener)
+  }
+
+  // CC tables this small would be broadcast, which hides the layout:
+  // the fixture plans on a child session with broadcast joins off
+  private lazy val cc = {
+    val s = GraftSession.childSessionFrom(spark)
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val pairs = s.createDataFrame(Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L)))
+      .toDF("d1", "d2")
+    val (edges, labels, np) = Dedup.ccLayout(pairs)
+    (edges, labels, np, Dedup.ccStep(edges, labels, np))
+  }
+
+  test("CC edges keep hash(dst): the hop join reads them in place") {
+    val (edges, labels, np, _) = cc
+    assertInPlace(Dedup.ccHop(edges, labels, np), "dst")
+  }
+
+  test("CC labels keep hash(doc_id): the first hop reads them in place") {
+    val (edges, labels, np, _) = cc
+    assertInPlace(Dedup.ccHop(edges, labels, np), "doc_id")
+  }
+
+  test("CC round output keeps hash(doc_id): the next hop reads it and the edges in place") {
+    val (edges, _, np, step) = cc
+    assertInPlace(Dedup.ccHop(edges, step.select("doc_id", "label"), np), "doc_id", "dst")
+  }
+
+  private def withCv[T](s: SparkSession)(check: (DataFrame, DataFrame) => T): T = {
+    val (sided, xdb) = MlEval.cvCorpus(s, sfDir, 3)
+    try check(sided, xdb) finally { GraftSession.free(sided); GraftSession.free(xdb) }
+  }
+
+  test("CV sidedAll keeps hash(lid): the bucket-count aggregate reads it in place") {
+    withCv(spark)((sided, _) => assertInPlace(LrTrain.sideXdb(sided), "lid"))
+  }
+
+  test("CV xdbAll keeps hash(lid): a per-line margin aggregate reads it in place") {
+    withCv(spark)((_, xdb) =>
+      assertInPlace(xdb.groupBy("lid", "fold", "side").agg(sum("x")), "lid"))
+  }
+
+  test("q138 fold fit: the 3-key join reads hash(lid) in place, same weights at all-keys") {
+    def fit(s: SparkSession): (Seq[Row], Seq[String]) = withCv(s)((sided, xdb) =>
+      plansOf(s)(LrTrain.trainedSideWeightsAllFolds(sided, xdb, 3,
+        LrTrain.Iters(s), LrTrain.LrDen(s)).collect().toSeq))
+    val gradJoin = "SortMergeJoin \\[lid#\\d+L, tf#\\d+, side#\\d+\\]".r
+    val (w, plans) = fit(spark)
+    val iters = plans.filter(gradJoin.findFirstIn(_).isDefined)
+    assert(iters.size >= LrTrain.Iters(spark), plans.mkString("\n\n"))
+    iters.foreach(p => assert(!p.contains("Exchange hashpartitioning(lid"), p))
+    // requireAllClusterKeysForCoPartition=false is what lets hash(lid)
+    // serve the three-key join: at true the join re-exchanges, and the
+    // weights are the same bits
+    val strict = GraftSession.childSessionFrom(spark)
+    strict.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "true")
+    val (wStrict, strictPlans) = fit(strict)
+    assert(strictPlans.exists(p => gradJoin.findFirstIn(p).isDefined &&
+      p.contains("Exchange hashpartitioning(lid")))
+    assert(wStrict.map(_.toString).sorted == w.map(_.toString).sorted)
   }
 }

@@ -180,8 +180,8 @@ class Round14OpsSpec extends GraftSpec {
 
   test("CV folds all train under the ENTRY dial even if the parent re-dials mid-CV") {
     // the dial-explicit fit ignores later session re-dials entirely...
-    val sided = LrTrain.sidedLines(spark, sfDir).localCheckpoint()
-    val xdb = LrTrain.sideXdb(sided).localCheckpoint()
+    val sided = GraftSession.checkpoint(LrTrain.sidedLines(spark, sfDir))
+    val xdb = GraftSession.checkpoint(LrTrain.sideXdb(sided))
     try {
       val w2 = LrTrain.trainedSideWeightsOn(spark, sided, xdb, 2, 16L)
         .collect().toSeq
@@ -194,7 +194,7 @@ class Round14OpsSpec extends GraftSpec {
           .collect().toSeq == w2,
           "a dial-explicit fit read the session conf")
       } finally spark.conf.unset("spark.graft.lr.iters")
-    } finally { LrTrain.freeCheckpoint(sided); LrTrain.freeCheckpoint(xdb) }
+    } finally { GraftSession.free(sided); GraftSession.free(xdb) }
     // ...and the CV harness snapshots ONCE at entry: a parent re-dial
     // planted between the snapshot and the fold launches (the hook
     // fires exactly there) must not change the output
@@ -281,7 +281,7 @@ class Round14OpsSpec extends GraftSpec {
     val cv = MlEval.q138SidedCrossval(spark, sfDir)
     val rows = cv.collect().toSeq
     assert(rows.size == 6, s"2 sides x 3 folds expected: $rows")
-    // the two corpus-sized localCheckpoints are freed by the time the
+    // the two corpus-sized checkpoints are freed by the time the
     // frame is handed back (r13 verdict item 5: a serving session
     // running many CVs accreted corpus blocks until a driver GC) —
     // assert no ADDITIONS, Round13OpsSpec's shared-session discipline
