@@ -22,23 +22,9 @@ object Bench {
     // min read 4.3x its standalone steady from suite churn).
     val warmup = sys.env.getOrElse("SPARK_GRAFT_WARMUP", "0").toInt.max(0)
     val spark = GraftSession(s"local[$cpus]", cpus)
-    // optional runtime-conf overrides for tuned soak runs, e.g.
-    // SPARK_GRAFT_CONF=spark.graft.rplsh.bandBits=8 — the per-round
-    // driver bench never sets this, so its numbers are always defaults.
-    // Entries are comma-separated k=v pairs; values must not contain
-    // commas. A malformed entry aborts the run LOUDLY — a silently
-    // dropped conf would make a tuned soak masquerade as defaults.
-    // empty/whitespace entries are tolerated (SPARK_GRAFT_CONF="" is a
-    // common wrapper-script default); a NON-empty malformed entry still
-    // aborts loudly so a tuned soak can't silently run at defaults
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(",").map(_.trim)
-      .filter(_.nonEmpty).foreach { kv =>
-        kv.split("=", 2) match {
-          case Array(k, v) if k.nonEmpty => spark.conf.set(k, v)
-          case _ => sys.error(s"[bench] malformed SPARK_GRAFT_CONF entry: '$kv'" +
-            " (expected key=value; values must not contain commas)")
-        }
-      })
+    sys.env.get("SPARK_GRAFT_CONF").foreach(confEntries(_).foreach {
+      case (k, v) => spark.conf.set(k, v)
+    })
     Diag.warm(spark, sfDir)
 
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
@@ -143,6 +129,28 @@ object Bench {
     println(compactLine(results.map(r => (r._1, r._2)), total, sfDir))
     spark.stop()
   }
+
+  /** Parses SPARK_GRAFT_CONF, the optional runtime-conf overrides for
+    * tuned soak runs, e.g. SPARK_GRAFT_CONF=spark.graft.autoShufflePartitions=true
+    * — the per-round driver bench never sets this, so its numbers are
+    * always defaults. Entries are comma-separated k=v pairs; values must
+    * not contain commas. Empty/whitespace entries are tolerated
+    * (SPARK_GRAFT_CONF="" is a common wrapper-script default). A
+    * malformed entry, or a spark.graft.* key graft does not read
+    * (GraftSession.GraftKeys), aborts the run LOUDLY — a silently
+    * dropped conf would make a tuned soak masquerade as defaults.
+    */
+  def confEntries(raw: String): Seq[(String, String)] =
+    raw.split(",").map(_.trim).filter(_.nonEmpty).toSeq.map { kv =>
+      kv.split("=", 2) match {
+        case Array(k, _) if k.startsWith("spark.graft.") && !GraftSession.GraftKeys(k) =>
+          sys.error(s"[bench] unknown SPARK_GRAFT_CONF key: '$k' (graft reads only " +
+            GraftSession.GraftKeys.toSeq.sorted.mkString(", ") + ")")
+        case Array(k, v) if k.nonEmpty => k -> v
+        case _ => sys.error(s"[bench] malformed SPARK_GRAFT_CONF entry: '$kv'" +
+          " (expected key=value; values must not contain commas)")
+      }
+    }
 
   /** The stdout line: the total and each query's min wall keyed by its
     * qNN prefix, at 2 decimals. The harness keeps only the last ~2000

@@ -21,6 +21,23 @@ import org.apache.spark.sql.graftbridge.Bridge
   */
 object GraftSession {
 
+  // --- the spark.graft.* session keys --------------------------------------
+  // Only a deployment path, a safety budget and one opt-in rule are session
+  // settings; hyperparameters are constants or arguments of the operators.
+  // Bench refuses any other spark.graft.* key, so a retired or mistyped key
+  // cannot make a tuned run silently run at defaults.
+
+  /** Where the LR model registry persists its artifacts (unset: in-memory). */
+  val RegistryDirKey = "spark.graft.model.registry.dir"
+
+  /** BroadcastGuard's byte budget for a hinted broadcast side. */
+  val BroadcastGuardKey = "spark.graft.broadcastGuard.maxBytes"
+
+  /** Opts the shuffle-heavy families into autoShuffled. */
+  val AutoShuffleKey = "spark.graft.autoShufflePartitions"
+
+  val GraftKeys: Set[String] = Set(RegistryDirKey, BroadcastGuardKey, AutoShuffleKey)
+
   def apply(master: String, cores: Int): SparkSession = {
     val b = SparkSession
       .builder()
@@ -112,10 +129,9 @@ object GraftSession {
   }.sum
 
   /** A fresh child session carrying the parent's ENTIRE modifiable
-    * runtime conf plus the unregistered spark.graft.* dials — the r12
-    * grid-search discipline (MlEval.gridChildSession), shared: copying
+    * runtime conf plus the unregistered spark.graft.* keys: copying
     * only the graft keys silently reverts any other per-session tuning
-    * to context defaults, and copying nothing loses the dials. The
+    * to context defaults, and copying nothing loses them. The
     * child shares the SparkContext and the GraftExtensions function
     * registry (newSession re-applies the builder's extensions), so a
     * plan built on it computes bit-identically.
@@ -135,7 +151,7 @@ object GraftSession {
   }
 
   /** Opt-in hook the shuffle-heavy families consult before building
-    * their plans: when `spark.graft.autoShufflePartitions` is true,
+    * their plans: when `AutoShuffleKey` is true,
     * returns a CHILD session whose shuffle.partitions derives from the
     * scan size of the given inputs; the caller builds its plan on the
     * returned session. Off by default (returns `s` unchanged) so the
@@ -151,7 +167,7 @@ object GraftSession {
     * the only shape that scopes a planning-time conf to one query.
     */
   def autoShuffled(s: SparkSession, paths: String*): SparkSession =
-    if (s.conf.getOption("spark.graft.autoShufflePartitions")
+    if (s.conf.getOption(AutoShuffleKey)
         .exists(_.trim.toBoolean)) {
       val cores = s.sparkContext.defaultParallelism
       val n = deriveShufflePartitions(scanBytes(s, paths: _*), cores)
@@ -165,8 +181,11 @@ object GraftSession {
   /** Truncates `df`'s lineage with an eager `localCheckpoint`: every
     * iterative block (CC rounds, the LR trainers, k-means, q138 CV, the
     * hierarchy walk) takes one so round N does not re-execute rounds
-    * 1..N-1. The job's stage is named `localCheckpoint at ...` on every
-    * path.
+    * 1..N-1. Every job the checkpoint starts, AQE's shuffle-map jobs
+    * included, is named `localCheckpoint at GraftSession.checkpoint`:
+    * the call site is set for the duration of the action (AQE's stage
+    * threads copy it from the caller's local properties) and the
+    * caller's own call site is restored afterwards.
     *
     * Without `layout` this is `df.localCheckpoint()` and nothing more:
     * under AQE the materialized table advertises no partitioning, and
@@ -190,8 +209,15 @@ object GraftSession {
     * the session plan as they would without this call.
     */
   def checkpoint(df: DataFrame, layout: Seq[String] = Nil): DataFrame = {
-    val ck = df.localCheckpoint()
-    if (layout.isEmpty) ck else keepLayout(df, ck, layout)
+    val sc = df.sparkSession.sparkContext
+    // SparkContext's call-site local properties; the short form names the
+    // stages. setLocalProperty(k, null) removes a key the caller had not set.
+    val callerSite = Seq("callSite.short", "callSite.long").map(k => k -> sc.getLocalProperty(k))
+    sc.setCallSite("localCheckpoint at GraftSession.checkpoint")
+    try {
+      val ck = df.localCheckpoint()
+      if (layout.isEmpty) ck else keepLayout(df, ck, layout)
+    } finally callerSite.foreach { case (k, v) => sc.setLocalProperty(k, v) }
   }
 
   private def keepLayout(df: DataFrame, ck: DataFrame, layout: Seq[String]): DataFrame = {
@@ -236,9 +262,11 @@ object GraftSession {
     * consumers have all been collected: an unpersisted checkpoint cannot
     * be recomputed (its lineage is truncated), which is why the k-fold
     * harness materializes its tiny CV summary BEFORE freeing its shared
-    * corpus checkpoints.
+    * corpus checkpoints. The release goes straight to the block
+    * manager: RDD.unpersist would log a WARN that a locally
+    * checkpointed RDD cannot be recomputed, which is the point here.
     */
   def free(df: DataFrame): Unit =
     df.queryExecution.analyzed.collect { case lr: LogicalRDD => lr.rdd }
-      .foreach(_.unpersist(blocking = false))
+      .foreach(rdd => Bridge.unpersistRDD(rdd.sparkContext, rdd.id))
 }

@@ -719,18 +719,12 @@ object Dedup {
   // of the plan and the oracle twin replays it from the same data).
   // Per-bit evaluation is lazily gated on i < bits, so a small corpus
   // computes exactly the planes its derived dial needs, not the
-  // RpMaxBits ceiling. The conf keys remain as explicit overrides
-  // (bandBits pins the dial; bands scales recall); beyond
-  // n ≈ occ·2^RpMaxBits ≈ 5M vectors per job, occupancy grows again —
-  // raise spark.graft.rplsh.bandBits (or RpMaxBits, one constant) for
+  // RpMaxBits ceiling. Beyond n ≈ occ·2^RpMaxBits ≈ 5M vectors per
+  // job, occupancy grows again — raise RpMaxBits (one constant) for
   // larger single-job corpora.
   val RpBands = 4
   val RpMaxBits = 16
   val RpTargetOcc = 80L // expected bucket occupancy the derivation holds
-
-  private[graft] def rpConf(s: SparkSession): (Int, Option[Int]) = (
-    s.conf.get("spark.graft.rplsh.bands", RpBands.toString).toInt,
-    s.conf.getOption("spark.graft.rplsh.bandBits").map(_.toInt))
 
   /** bits = max(1, Σ_{k<RpMaxBits} [n > occ·2^k]) ≡ clamp(ceil(log2(
     * n/occ)), 1, RpMaxBits) for n > occ — integer comparisons only, so
@@ -746,83 +740,34 @@ object Dedup {
   private[graft] def rpDerivedBitsFor(n: Long): Int =
     math.max(1, (0 until RpMaxBits).count(k => n > (RpTargetOcc << k)))
 
-  /** Optional per-cell occupancy cap (r12 verdict item 4): the auto
-    * dial holds the MEDIAN cell at target occupancy, but un-splittable
-    * dense clusters (vectors that agree on every hyperplane no matter
-    * how many bits) give the tail p99/max occupancies orders of
-    * magnitude higher, and their Θ(cell²) pair blocks dominate candidate
-    * work. With the cap set, cells over it are excluded from pair
-    * enumeration ENTIRELY (a cluster dense enough to blow one band's
-    * cell collides in every band, so partial exclusion would be
-    * noise) and REPORTED through q109OverflowCells — the T30 df-cap
-    * discipline with no silent truncation: a 100 TB operator routes the
-    * reported cells to the q55/q81 representative path instead of
-    * enumerating their quadratic pair mass. Default OFF — the oracle
-    * row and the default plan are untouched.
-    */
-  private[graft] def rpMaxOcc(s: SparkSession): Option[Long] =
-    s.conf.getOption("spark.graft.rplsh.maxOcc").map(_.trim.toLong)
-
-  /** q139's occupancy cap: unlike q109's optional maxOcc it is ALWAYS
-    * on (the routed operator exists precisely to handle the cells a cap
-    * excludes), defaulting to the target occupancy the auto-dial holds
-    * the median cell at — anything above it is the dense tail.
+  /** q139's occupancy cap, always on (the routed operator exists
+    * precisely to handle the cells a cap excludes): the target
+    * occupancy the auto-dial holds the median cell at — anything above
+    * it is the dense tail.
     */
   val RouteCapDefault: Long = RpTargetOcc
 
-  private[graft] def routeCap(s: SparkSession): Long =
-    s.conf.getOption("spark.graft.rplsh.routeCap").map(_.trim.toLong)
-      .getOrElse(RouteCapDefault)
-
   def q109EmbedLsh(s: SparkSession, dir: String): DataFrame =
-    q109Core(s, dir)._1
+    rpLshParts(s, dir).pairs
 
-  /** The over-cap cell report (band, key, occ): empty when the cap is
-    * off or nothing exceeds it. Cell count is bounded by n/cap, so the
-    * report — and its broadcast in the exclusion anti-join — stays tiny
-    * for any sane cap.
+  /** The LSH pipeline's two frames: the verified pair set and the
+    * over-cap cell report (band, key, occ).
     */
-  def q109OverflowCells(s: SparkSession, dir: String): DataFrame =
-    q109Core(s, dir)._2
-
-  /** The overflow report at an EXPLICIT cap (spec/probe convenience —
-    * q139's routing spec checks verdict coverage against it).
-    */
-  private[graft] def q109OverflowCellsAt(s: SparkSession, dir: String,
-      cap: Long): DataFrame =
-    rpLshParts(s, dir, Some(cap)).over
-
-  private def q109Core(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val p = rpLshParts(s, dir, rpMaxOcc(s))
-    (p.pairs, p.over)
-  }
-
-  /** The LSH pipeline's three shareable frames: the verified pair set,
-    * the over-cap cell report, and the exploded (band, key, vector)
-    * rows BEFORE cap exclusion — q139's routing pass draws its
-    * dense-cell membership from the last, so the representative
-    * verdicts cover exactly the rows the cap removed from pair
-    * enumeration.
-    */
-  private final case class RpLshParts(pairs: DataFrame, over: DataFrame,
-      exploded: DataFrame)
+  private[graft] final case class RpLshParts(pairs: DataFrame, over: DataFrame)
 
   /** The signature frame shared by q109 and q139: filtered corpus with
-    * norms, the auto-sized (or pinned) bit dial, and the per-band key
-    * array from the native RpLshKeysExpr. Returns (sigs, nBands).
+    * norms, the auto-sized bit dial, and the per-band key array from
+    * the native RpLshKeysExpr. `bits` pins the dial instead of deriving
+    * it (specs only: a high pinned value exercises every plane).
     */
-  private[graft] def rpSigs(s: SparkSession, dir: String): (DataFrame, Int) = {
+  private[graft] def rpSigs(s: SparkSession, dir: String,
+      bits: Option[Int] = None): DataFrame = {
     val e = Tables.embeddings(s, dir)
       .withColumn("nrm", sqrt(VectorFunctions.norm2(col("embedding"))))
       .filter(col("nrm") > 0)
-    val (nBands, fixedBits) = rpConf(s)
-    require(nBands >= 1 && nBands <= 64,
-      s"spark.graft.rplsh.bands=$nBands outside [1, 64]")
-    fixedBits.foreach(b => require(b >= 1 && b <= RpMaxBits,
-      s"spark.graft.rplsh.bandBits=$b outside [1, $RpMaxBits]"))
-    // the dial column: a conf literal, or the corpus-derived scalar
+    // the dial column: a pinned literal, or the corpus-derived scalar
     // broadcast into every row (one-row aggregate — KBs, in-lineage)
-    val withBits = fixedBits match {
+    val withBits = bits match {
       case Some(b) => e.withColumn("bits", lit(b))
       case None => e.crossJoin(broadcast(
         e.agg(count(lit(1)).as("n")).select(rpDerivedBits(col("n")).as("bits"))))
@@ -836,9 +781,9 @@ object Dedup {
     // expression computes every band key in one fused codegen'd pass
     // with the identical IEEE sequence (spec-proven bit-for-bit, and
     // the DuckDB twin below is unchanged).
-    (withBits.select(col("vec_id"), col("embedding"), col("nrm"),
+    withBits.select(col("vec_id"), col("embedding"), col("nrm"),
       call_function("rp_lsh_keys", col("embedding"), col("bits"),
-        lit(nBands), lit(RpMaxBits)).as("keys")), nBands)
+        lit(RpBands), lit(RpMaxBits)).as("keys"))
   }
 
   /** First-colliding-band gate over both sides' full key arrays: a pair
@@ -852,9 +797,24 @@ object Dedup {
         (element_at(col("ka"), bp + 1) =!= element_at(col("kb"), bp + 1))
     }.foldLeft(lit(true))(_ && _)
 
-  private def rpLshParts(s: SparkSession, dir: String,
-      capOpt: Option[Long]): RpLshParts = {
-    val (sigs, nBands) = rpSigs(s, dir)
+  /** Optional per-cell occupancy cap `capOpt` (r12 verdict item 4): the
+    * auto dial holds the MEDIAN cell at target occupancy, but
+    * un-splittable dense clusters (vectors that agree on every
+    * hyperplane no matter how many bits) give the tail p99/max
+    * occupancies orders of magnitude higher, and their Θ(cell²) pair
+    * blocks dominate candidate work. With a cap, cells over it are
+    * excluded from pair enumeration ENTIRELY (a cluster dense enough to
+    * blow one band's cell collides in every band, so partial exclusion
+    * would be noise) and REPORTED in `over` — the T30 df-cap discipline
+    * with no silent truncation; q139 is the operator that routes the
+    * reported cells to a representative pass. Registry q109 runs
+    * uncapped. Cell count is bounded by n/cap, so the report — and its
+    * broadcast in the exclusion anti-join — stays tiny for any sane
+    * cap. `bits` pins the bits per band (see rpSigs).
+    */
+  private[graft] def rpLshParts(s: SparkSession, dir: String,
+      capOpt: Option[Long] = None, bits: Option[Int] = None): RpLshParts = {
+    val sigs = rpSigs(s, dir, bits)
     // The band shuffle CARRIES THE PAYLOAD (embedding + norm): bands ×
     // one embedding per vector is strictly linear (~1.2 KB/vector at
     // bands=4), and it means exact-cosine verification runs INLINE in
@@ -902,7 +862,7 @@ object Dedup {
     // dense cluster lands in one cell in EVERY band, so its quadratic
     // pair block would be enumerated and cosine-verified bands× times
     // (rpFirstBandGate — shared with q139).
-    val firstBand = rpFirstBandGate(nBands)
+    val firstBand = rpFirstBandGate(RpBands)
     // exact verification FIRST, dedup AFTER the gate (r11): the ≥τ
     // gate leaves survivors measured in thousands, so the distinct
     // costs nothing. Same result set: cos is a pure function of the
@@ -924,7 +884,7 @@ object Dedup {
       .select(col("v1"), col("v2"), col("cos"))
       .distinct()
       .orderBy("v1", "v2")
-    RpLshParts(pairs, over, exploded)
+    RpLshParts(pairs, over)
   }
 
   /** Shared CTE prefix of the rp-LSH twins (q109 / q139): filtered
@@ -989,7 +949,7 @@ object Dedup {
   // hand-compose. q139 is that composition as ONE oracle-checked
   // operator:
   //   - in-cap cells: exactly the capped q109 pair set (bit-for-bit —
-  //     spec-pinned against q109 under maxOcc = the same cap);
+  //     spec-pinned against q109 capped at the same value);
   //   - over-cap cells: a q81-style keeper pass WITHIN each reported
   //     cell. Each over-cap member is assigned to its FIRST reported
   //     cell (min (band, key) — one verdict per member, even when a
@@ -1011,10 +971,15 @@ object Dedup {
   // key arrays, so a pair whose first shared cell was excluded is never
   // emitted from a later band. With the cap off this degenerates to
   // q109's plain DISTINCT (every pair's first cell is present).
-  def q139RoutedDedup(s: SparkSession, dir: String): DataFrame = {
-    val cap = routeCap(s)
-    require(cap >= 1, s"spark.graft.rplsh.routeCap=$cap must be >= 1")
-    val (sigs, nBands) = rpSigs(s, dir)
+  def q139RoutedDedup(s: SparkSession, dir: String): DataFrame =
+    q139RoutedDedup(s, dir, RouteCapDefault)
+
+  /** q139 at an explicit occupancy cap (specs: sf0.01's corpus needs a
+    * smaller cap than the default for both routes to carry rows).
+    */
+  private[graft] def q139RoutedDedup(s: SparkSession, dir: String,
+      cap: Long): DataFrame = {
+    val sigs = rpSigs(s, dir)
     // ONE payload exchange feeds the whole operator: unlike q109 (which
     // anti-joins over-cap cells away BEFORE its shuffle, because capped
     // q109 never looks at them again), q139 CONSUMES the over-cap rows
@@ -1041,7 +1006,7 @@ object Dedup {
     val y = inCap.select(col("band"), col("key"), col("vec_id").as("v2"),
       col("embedding").as("e2"), col("nrm").as("n2"), col("keys").as("kb"))
     val pairs = x.join(y, Seq("band", "key"))
-      .filter(col("v1") < col("v2") && rpFirstBandGate(nBands))
+      .filter(col("v1") < col("v2") && rpFirstBandGate(RpBands))
       .withColumn("cos",
         round(VectorFunctions.dot(col("e1"), col("e2")) / (col("n1") * col("n2")), 6))
       .filter(col("cos") >= 0.35)
@@ -1084,22 +1049,17 @@ object Dedup {
   /** The DuckDB twin replays the WHOLE routed operator from the same
     * parquet: auto-sized bits, band keys, occupancy census, cap
     * exclusion under first-colliding-band semantics, per-cell
-    * assignment + representative selection, and both cosine passes.
-    * The cap mirrors the session default (the driver gate runs
-    * defaults; a re-dialed session regenerates the twin through the
-    * ambient conf, the q138 pattern).
+    * assignment + representative selection, and both cosine passes,
+    * at the registry's cap RouteCapDefault.
     */
   def q139Sql: String = {
-    val cap = org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-      .map(routeCap).getOrElse(RouteCapDefault)
     val dot = VectorFunctions.dotSql("a.embedding", "b.embedding")
     val repDot = VectorFunctions.dotSql("va.embedding", "vr.embedding")
     s"""$rpLshCommonCteSql,
        |occ AS (
        | SELECT band, key, COUNT(*) AS occ FROM buckets GROUP BY 1, 2
        |), over AS (
-       | SELECT band, key FROM occ WHERE occ > $cap
+       | SELECT band, key FROM occ WHERE occ > $RouteCapDefault
        |), colls AS (
        | SELECT x.vec_id AS v1, y.vec_id AS v2, band, key
        | FROM buckets x JOIN buckets y USING (band, key)

@@ -374,8 +374,8 @@ object IndexSet {
     * present (deletion is not durable until the manifest commits).
     *
     * Bulk-delete guard (the deleteFromBm25 discipline, sharing its
-    * `spark.graft.bm25.deleteRepublishFraction` dial): above the
-    * victim fraction — decided upfront from the manifest's nDocs, no
+    * `republishFraction`, default DefaultDeleteRepublishFraction):
+    * above the victim fraction — decided upfront from the manifest's nDocs, no
     * probe job — the delete degrades to a survivor REPUBLISH (fresh
     * segments containing all survivors, df/stats recomputed with no
     * victim-derived driver state, one new manifest referencing only
@@ -383,7 +383,8 @@ object IndexSet {
     * vocabulary and rewrite nearly every partition anyway.
     */
   private[graft] def delete(s: SparkSession, ids: Seq[Long], root: String,
-      beforeCommit: () => Unit): HybridManifest = {
+      beforeCommit: () => Unit,
+      republishFraction: Double = Retrieval.DefaultDeleteRepublishFraction): HybridManifest = {
     import s.implicits._
     require(ids.nonEmpty, "empty victim set")
     val m = readManifest(s, root)
@@ -392,7 +393,7 @@ object IndexSet {
     val victims = ids.distinct.toDF("doc_id")
     val vVictims = ids.distinct.toDF("vec_id")
 
-    if (ids.distinct.size >= Retrieval.deleteRepublishFraction(s) * m.nDocs) {
+    if (ids.distinct.size >= republishFraction * m.nDocs) {
       val survPost = readSegs(s, postingsRoot(root), m.bm25Postings)
         .join(victims, Seq("doc_id"), "left_anti").drop("tb")
       writePostingsSeg(survPost, root, id)

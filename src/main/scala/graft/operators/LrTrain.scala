@@ -56,38 +56,14 @@ object LrTrain {
   val Buckets: Int = Classify.NumBuckets // 1024 hashed-TF buckets
   val Classes: Int = Classify.NumClasses // 5 one-vs-rest heads
 
-  /** Iteration count and step denominator, SESSION-CONFIGURABLE
-    * (round-11 verdict item 5): defaults replay the r10 oracle rows
-    * bit-for-bit; a production fit raises iters without touching code.
-    * Both the Spark plans AND the DuckDB twin SQL are generated
-    * through these accessors, so a tuned session stays oracle-aligned
-    * — the twin unrolls exactly the configured iteration count (the
-    * driver gate always runs defaults).
-    *
-    * Every PLAN-building and cache-keying path resolves the dial from
-    * the EXPLICIT session it was handed (r11 ADVICE: the ambient
-    * active-or-default session can be a different session in a
-    * multi-session JVM, silently training under another session's
-    * hyperparameters). The no-arg forms exist ONLY for the SQL-twin
-    * boundary — `SparkEntry.oracleSql` has no session parameter — and
-    * resolve the ambient session there, where the caller genuinely has
-    * no handle.
+  /** Iteration count and step denominator. The Spark plans and the
+    * DuckDB twin SQL both read these, so the twin unrolls exactly the
+    * iterations the plans run. The training paths take them as
+    * arguments; only specs pass other values (e.g. the balanced fit's
+    * 12-iteration accuracy claim and the grid search's lrDen points).
     */
-  private def confInt(s: SparkSession, key: String, dflt: Int): Int =
-    s.conf.getOption(key).map { v =>
-      try v.trim.toInt
-      catch { case _: NumberFormatException =>
-        sys.error(s"$key must be an integer, got '$v'") }
-    }.getOrElse(dflt)
-
-  def Iters(s: SparkSession): Int  = confInt(s, "spark.graft.lr.iters", 3)
-  def LrDen(s: SparkSession): Long = confInt(s, "spark.graft.lr.lrDen", 16).toLong
-
-  /** Ambient resolution — the oracleSql boundary only (see above). */
-  private def ambient: Option[SparkSession] =
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-  def Iters: Int  = ambient.map(Iters(_)).getOrElse(3)
-  def LrDen: Long = ambient.map(LrDen(_)).getOrElse(16L)
+  val Iters: Int = 3
+  val LrDen: Long = 16L
 
   import graft.functions.TextFunctions.{md5Long, md5LongSql}
 
@@ -264,10 +240,10 @@ object LrTrain {
 
   /** The documents training scaffold shared by q129 (LR), q135
     * (balanced LR) and q151 (SVC): the wide weight trajectory
-    * w0..wIters over a documents slice.
+    * w0..w{iters} over a documents slice.
     */
   private def docTrainPath(docs: DataFrame, resid: Resid,
-      balanced: Boolean): Seq[DataFrame] = {
+      balanced: Boolean, iters: Int, lrDen: Long): Seq[DataFrame] = {
     // Persist the feature frame ONCE (a checkpoint), iterate over the
     // materialized form — the textbook distributed-LR shape: each
     // iteration is one pass over cached features, not a re-scan +
@@ -294,10 +270,9 @@ object LrTrain {
         sum(when(col("y_cls") === c, 1L).otherwise(0L)).as(s"nc$c")): _*))
     val w0 = asLocal(xdb.select("bucket").distinct()
       .select(col("bucket") +: (0 until Classes).map(c => lit(0L).as(s"w$c")): _*))
-    val sess = docs.sparkSession
     val path = Iterator.iterate(w0)(w => gdStep(xdb, labels, nDf, w, Seq("doc_id"),
-        Seq.empty, LrDen(sess), resid, ncDf))
-      .take(Iters(sess) + 1).toList
+        Seq.empty, lrDen, resid, ncDf))
+      .take(iters + 1).toList
     // the trajectory is all local relations now — release the corpus
     GraftSession.free(xdb); GraftSession.free(labels)
     path
@@ -307,8 +282,9 @@ object LrTrain {
     * (in the long public form) so the spec can prove the training loss
     * is monotone.
     */
-  private[graft] def docWeightPathFrom(docs: DataFrame): Seq[DataFrame] =
-    docTrainPath(docs, lrResid, balanced = false).map(toLong(_, Seq.empty))
+  private[graft] def docWeightPathFrom(docs: DataFrame,
+      iters: Int = Iters): Seq[DataFrame] =
+    docTrainPath(docs, lrResid, balanced = false, iters, LrDen).map(toLong(_, Seq.empty))
 
   private[graft] def docWeightPath(s: SparkSession, dir: String): Seq[DataFrame] =
     docWeightPathFrom(Tables.documents(s, dir))
@@ -349,8 +325,9 @@ object LrTrain {
     * slice (the same slice-parameterization discipline as
     * docWeightPathFrom).
     */
-  private[graft] def trainedDocWeightsBalancedFrom(docs: DataFrame): DataFrame =
-    toLong(docTrainPath(docs, lrResid, balanced = true).last, Seq.empty)
+  private[graft] def trainedDocWeightsBalancedFrom(docs: DataFrame,
+      iters: Int = Iters): DataFrame =
+    toLong(docTrainPath(docs, lrResid, balanced = true, iters, LrDen).last, Seq.empty)
 
   private[graft] def trainedDocWeightsBalanced(s: SparkSession, dir: String): DataFrame =
     trainedDocWeightsBalancedFrom(Tables.documents(s, dir))
@@ -441,9 +418,9 @@ object LrTrain {
   // runs unset, so its oracle compare always exercises the full
   // train-path). Design points:
   //  - the artifact key IS the cache key (corpus dir + freshness token +
-  //    dial + an algorithm-version tag), so a rewritten corpus, a
-  //    re-dialed session, or a changed training algorithm falls through
-  //    to retrain instead of serving a stale fit;
+  //    hyperparameters + an algorithm-version tag), so a rewritten
+  //    corpus, changed Iters/LrDen, or a changed training algorithm
+  //    falls through to retrain instead of serving a stale fit;
   //  - ALL I/O goes through the Hadoop FileSystem of the CONFIGURED
   //    path (the freshnessToken discipline) — on a cluster the registry
   //    lives on shared storage (hdfs://, s3a://, file:// on NFS), where
@@ -490,7 +467,7 @@ object LrTrain {
   @volatile private[graft] var raceHook: () => Unit = () => ()
 
   private def registryRoot(s: SparkSession): Option[String] =
-    s.conf.getOption("spark.graft.model.registry.dir").map(_.trim).filter(_.nonEmpty)
+    s.conf.getOption(GraftSession.RegistryDirKey).map(_.trim).filter(_.nonEmpty)
 
   private def keyHash(key: String): String =
     java.security.MessageDigest.getInstance("SHA-256")
@@ -714,12 +691,14 @@ object LrTrain {
   private[graft] def clearModelCache(): Unit = modelCache.clear()
 
   /** The full model identity: algorithm version, model name, corpus dir
-    * + freshness token, and the session's dials — shared by the cache,
-    * the persisted artifacts, and pruneArtifacts' keep-set.
+    * + freshness token, and Iters/LrDen — shared by the cache, the
+    * persisted artifacts, and pruneArtifacts' keep-set. The text at the
+    * default hyperparameters is what artifacts on disk were written
+    * under, so it must not change without an AlgoVersion bump.
     */
   private def modelKey(s: SparkSession, dir: String, table: String,
       name: String): String =
-    s"$AlgoVersion|$name|$dir|it=${Iters(s)}|den=${LrDen(s)}|" +
+    s"$AlgoVersion|$name|$dir|it=$Iters|den=$LrDen|" +
       graft.Tables.freshnessToken(s, s"$dir/$table.parquet")
 
   private[graft] def cachedModel(s: SparkSession, dir: String, table: String,
@@ -730,9 +709,6 @@ object LrTrain {
     require(ModelInventory.get(name).contains(table),
       s"model '$name' over '$table' is not in LrTrain.ModelInventory — " +
         "register it there or pruneArtifacts will GC its artifact")
-    // hyperparameters are part of the model identity: a session that
-    // re-dials iters/lrDen must retrain, not reuse another dial's fit
-    // (resolved from the EXPLICIT session — r11 ADVICE)
     val key = modelKey(s, dir, table, name)
     // get + putIfAbsent, NOT computeIfAbsent: the wide-pivot entries
     // train their long artifact inside the thunk, i.e. a nested cache
@@ -890,7 +866,7 @@ object LrTrain {
     * Same persist-once scaffold as the LR paths.
     */
   private[graft] def trainedSvcWeightsFrom(docs: DataFrame): DataFrame =
-    toLong(docTrainPath(docs, svcResid, balanced = false).last, Seq.empty)
+    toLong(docTrainPath(docs, svcResid, balanced = false, Iters, LrDen).last, Seq.empty)
 
   private[graft] def trainedSvcWeights(s: SparkSession, dir: String): DataFrame =
     trainedSvcWeightsFrom(Tables.documents(s, dir))
@@ -1087,7 +1063,7 @@ object LrTrain {
     // would otherwise be re-shuffled by every frame of every iteration.
     val sided = GraftSession.checkpoint(sidedLines(s, dir).filter(keep))
     val xdb = GraftSession.checkpoint(sideXdb(sided))
-    val w = trainedSideWeightsOn(s, sided, xdb)
+    val w = trainedSideWeightsOn(sided, xdb, Iters, LrDen)
     GraftSession.free(sided); GraftSession.free(xdb)
     w
   }
@@ -1100,19 +1076,8 @@ object LrTrain {
     * redundant corpus scans per CV on top of the inherent k× training
     * cost); at 100 TB the CV costs k fits over one shared scan.
     */
-  private[graft] def trainedSideWeightsOn(s: SparkSession, sided: DataFrame,
-      xdb: DataFrame): DataFrame =
-    trainedSideWeightsOn(s, sided, xdb, Iters(s), LrDen(s))
-
-  /** The dial-explicit form: `iters`/`lrDen` are plain VALUES, so a
-    * harness that runs several fits as one logical unit (the k-fold
-    * CV) snapshots the session dials ONCE at entry and every fit
-    * provably trains under that snapshot — a concurrent re-dial of the
-    * session mid-flight can no longer split the folds across
-    * hyperparameters (r13 verdict item 3).
-    */
-  private[graft] def trainedSideWeightsOn(s: SparkSession, sided: DataFrame,
-      xdb: DataFrame, iters: Int, lrDen: Long): DataFrame = {
+  private[graft] def trainedSideWeightsOn(sided: DataFrame, xdb: DataFrame,
+      iters: Int, lrDen: Long): DataFrame = {
     val labels = sided.select("lid", "y_cls")
     val nDf = sided.groupBy("side").agg(count(lit(1)).as("n"))
     val w0 = asLocal(xdb.select("side", "bucket").distinct()

@@ -75,7 +75,7 @@ object MlEval {
   /** The shared evaluation body: score `ev` with the wide matrix `w`,
     * emit the complete K×K confusion matrix + per-class report.
     */
-  private def holdoutEvalWith(s: SparkSession, w: DataFrame,
+  private[graft] def holdoutEvalWith(s: SparkSession, w: DataFrame,
       ev0: DataFrame): DataFrame = {
     val ev = ev0.select(col("doc_id"),
       LrTrain.labelIdx(col("text")).cast(IntegerType).as("actual_cls"),
@@ -383,22 +383,6 @@ object MlEval {
   // the cross_val_score / GridSearchCV half of mlClassification.ipynb).
   // ---------------------------------------------------------------------
 
-  /** k-fold CV over the sided models: fold id = pmod(lid, k) — the lid
-    * is already an md5-derived hash, so folds are deterministic,
-    * disjoint, exhaustive, and stable under any partitioning. Each fold
-    * trains the E28 loop on the complement and scores the fold; returns
-    * (side, fold, n_eval, acc). Pure orchestration of existing
-    * operators: k sided fits + k broadcast-scored evaluations, each the
-    * plan q104 already runs — nothing here collects data, only the
-    * K-row metric frames.
-    */
-  /** Test seam for the dial-snapshot contract: invoked after
-    * sidedCrossVal snapshots the session dials and before any fold
-    * launches — a spec plants a parent-session re-dial here and proves
-    * every fold still trained under the entry dial. No-op in prod.
-    */
-  @volatile private[graft] var cvEntryHook: () => Unit = () => ()
-
   /** The k-fold corpus, prepared once for all folds: the sided lines
     * with their fold, and their bucket counts, both checkpointed on the
     * hash(lid) layout.
@@ -442,15 +426,17 @@ object MlEval {
     (sidedAll, xdbAll)
   }
 
-  private[graft] def sidedCrossVal(s: SparkSession, dir: String, k: Int): DataFrame = {
+  /** k-fold CV over the sided models: fold id = pmod(lid, k) — the lid
+    * is already an md5-derived hash, so folds are deterministic,
+    * disjoint, exhaustive, and stable under any partitioning. Each fold
+    * trains the E28 loop (step denominator `lrDen`) on the complement
+    * and scores the fold; returns (side, fold, n_eval, n_correct,
+    * acc_micros) as a local frame.
+    */
+  private[graft] def sidedCrossVal(s: SparkSession, dir: String, k: Int,
+      lrDen: Long): DataFrame = {
     require(k >= 2, s"k-fold needs k >= 2, got $k")
     val (sidedAll, xdbAll) = cvCorpus(s, dir, k)
-    // snapshot the LR dials ONCE, before any training launches (r13
-    // verdict item 3): every fold provably trains under the entry dial
-    // (the spec re-dials the parent mid-CV and checks the folds)
-    val itersSnap = LrTrain.Iters(s)
-    val lrDenSnap = LrTrain.LrDen(s)
-    cvEntryHook() // deterministic-interleave test seam; no-op in prod
     // BATCHED FOLDS (r17 verdict item 1): the k complement fits run as
     // ONE wide-GD chain with (tf, side) as the model key — one gradient
     // job per iteration and one codegen surface, instead of k
@@ -463,7 +449,7 @@ object MlEval {
     // trainedSideWeightsAllFolds). The concurrency pool went with the
     // per-fold jobs: a single chain has no independent jobs to overlap.
     val w = LrTrain.trainedSideWeightsAllFolds(
-      sidedAll, xdbAll, k, itersSnap, lrDenSnap)
+      sidedAll, xdbAll, k, LrTrain.Iters, lrDen)
     // Fold scoring, also one pass: each eval line joins its OWN fold's
     // matrix — the (fold, side, bucket) broadcast join against the
     // local wide weights, then the same grouped argmax as scoreSided
@@ -514,7 +500,7 @@ object MlEval {
   val CvFolds = 3
 
   def q138SidedCrossval(s: SparkSession, dir: String): DataFrame =
-    sidedCrossVal(s, dir, CvFolds).orderBy("side", "fold")
+    sidedCrossVal(s, dir, CvFolds, LrTrain.LrDen).orderBy("side", "fold")
 
   def q138Sql: String = {
     val it = LrTrain.Iters
@@ -548,37 +534,14 @@ object MlEval {
        |ORDER BY side, fold""".stripMargin
   }
 
-  /** One grid point's isolated child session: the parent's ENTIRE
-    * modifiable runtime conf is copied (r12 ADVICE: copying only
-    * spark.graft.* silently reverted any other per-session tuning —
-    * e.g. spark.sql.shuffle.partitions — to context defaults inside
-    * the sweep), then the point's dial is set. Nothing mutates the
-    * caller's conf, so a concurrent query on `s` can never train or
-    * serve under a transient dial (r11 ADVICE; the dial-keyed model
-    * cache then holds each point's fit under its own key).
-    */
-  private[graft] def gridChildSession(s: SparkSession, lrDen: Int): SparkSession = {
-    // full-conf copy shared with the autoShuffled hook (r16: the same
-    // discipline now scopes the shuffle rule's derived value)
-    val s2 = graft.GraftSession.childSessionFrom(s)
-    s2.conf.set("spark.graft.lr.lrDen", lrDen.toString)
-    s2
-  }
-
-  /** GridSearchCV's shape: one CV sweep per hyperparameter point, one
-    * summary row (point, mean accuracy) each, points submitted
-    * CONCURRENTLY (r12 verdict item 6): the child sessions and the
-    * dial-keyed cache already isolate the points completely, and each
-    * point — like the fold fits inside it — spends much of its wall
-    * time at driver-side parameter-server barriers, so overlapping
-    * points keeps the cluster busy. Results return in grid order.
-    *
-    * Session lifetime contract: Spark offers no way to dispose a child
-    * session's SessionState short of stopping the context, so each
-    * point's session lives for the JVM. The pool caps CONCURRENCY at 4
-    * points, not session count — an unbounded grid should chunk its
-    * dials across JVMs (a grid big enough for that to matter retrains
-    * thousands of models and has far larger concerns than SessionState).
+  /** GridSearchCV's shape: one CV sweep per step denominator, one
+    * summary row (lrDen, mean accuracy) each, points submitted
+    * CONCURRENTLY (r12 verdict item 6): each point — like the fold fits
+    * inside it — spends much of its wall time at driver-side
+    * parameter-server barriers, so overlapping points keeps the cluster
+    * busy. The points share the caller's session: lrDen is an argument
+    * of the fit, so no point reads or writes session conf. Results
+    * return in grid order.
     */
   private[graft] def sidedGridSearch(s: SparkSession, dir: String,
       lrDens: Seq[Int], k: Int): Seq[(Int, Double)] = {
@@ -589,7 +552,7 @@ object MlEval {
     try scala.concurrent.Await.result(
       scala.concurrent.Future.sequence(lrDens.map { den =>
         scala.concurrent.Future {
-          val mean = sidedCrossVal(gridChildSession(s, den), dir, k)
+          val mean = sidedCrossVal(s, dir, k, den.toLong)
             .agg(avg(col("acc_micros").cast(DoubleType) / lit(1000000.0)))
             .head.getDouble(0)
           den -> mean

@@ -456,15 +456,6 @@ object Retrieval {
     */
   val DefaultDeleteRepublishFraction = 0.01
 
-  private[graft] def deleteRepublishFraction(s: SparkSession): Double = {
-    val f = s.conf.getOption("spark.graft.bm25.deleteRepublishFraction")
-      .map(_.trim.toDouble).getOrElse(DefaultDeleteRepublishFraction)
-    require(f > 0,
-      s"spark.graft.bm25.deleteRepublishFraction=$f must be > 0 " +
-        "(victim fraction of the corpus; > 1 disables the fallback)")
-    f
-  }
-
   /** Bulk-delete path (r16 verdict #5): recompute every index piece
     * from the survivors in one pass — postings/dl anti-join, df as a
     * count over survivor postings, stats as one aggregate — staged
@@ -517,7 +508,14 @@ object Retrieval {
     fs.delete(new org.apache.hadoop.fs.Path(staging), true)
   }
 
-  def deleteFromBm25(s: SparkSession, docIds: Seq[Long], outDir: String): Unit = {
+  def deleteFromBm25(s: SparkSession, docIds: Seq[Long], outDir: String): Unit =
+    deleteFromBm25(s, docIds, outDir, DefaultDeleteRepublishFraction)
+
+  /** The delete at an explicit republish fraction (specs pin either
+    * path on a fixture whose victim fraction sits near the default).
+    */
+  private[graft] def deleteFromBm25(s: SparkSession, docIds: Seq[Long], outDir: String,
+      republishFraction: Double): Unit = {
     import s.implicits._
     if (docIds.isEmpty) return
     val victims = docIds.distinct.toDF("doc_id")
@@ -526,7 +524,7 @@ object Retrieval {
     // itself a full postings scan; measured at 2x the small-delete
     // wall and rejected, BENCH_R17_BM25_DELETE)
     val nDocs = s.read.parquet(s"$outDir/stats").collect()(0).getLong(0)
-    if (docIds.distinct.size >= deleteRepublishFraction(s) * nDocs) {
+    if (docIds.distinct.size >= republishFraction * nDocs) {
       republishSurvivors(s, victims, outDir)
       return
     }

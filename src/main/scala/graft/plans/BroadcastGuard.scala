@@ -33,7 +33,7 @@ object BroadcastGuard {
 case class BroadcastGuard(spark: SparkSession) extends Rule[LogicalPlan] {
 
   private def maxBytes: Long =
-    spark.conf.get("spark.graft.broadcastGuard.maxBytes", (1L << 30).toString).toLong
+    spark.conf.get(graft.GraftSession.BroadcastGuardKey, (1L << 30).toString).toLong
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
     val limit = maxBytes

@@ -13,4 +13,12 @@ class BenchSpec extends GraftSpec {
     // the qNN prefixes are the keys, so they must stay distinct
     assert(parsed.get("queries").size == names.size)
   }
+
+  test("SPARK_GRAFT_CONF refuses a spark.graft.* key graft does not read") {
+    assert(Bench.confEntries(" spark.graft.autoShufflePartitions=true, ,spark.sql.shuffle.partitions=8") ==
+      Seq("spark.graft.autoShufflePartitions" -> "true", "spark.sql.shuffle.partitions" -> "8"))
+    val e = intercept[RuntimeException](Bench.confEntries("spark.graft.rplsh.bandBits=8"))
+    assert(e.getMessage.contains("spark.graft.rplsh.bandBits"), e.getMessage)
+    intercept[RuntimeException](Bench.confEntries("spark.sql.shuffle.partitions"))
+  }
 }

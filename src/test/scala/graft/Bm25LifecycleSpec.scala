@@ -72,7 +72,6 @@ class Bm25LifecycleSpec extends GraftSpec {
     // pin the SURGICAL path: this fixture's victim fraction (~14%) is
     // above the default republish threshold, and this test's contract
     // is the per-partition swap (untouched partitions byte-identical)
-    spark.conf.set("spark.graft.bm25.deleteRepublishFraction", "2.0")
     val victims = docs.filter(col("doc_id") >= 20 && col("doc_id") % 7 === 3)
       .select("doc_id").collect().map(_.getLong(0)).toSeq
     assert(victims.nonEmpty)
@@ -91,7 +90,7 @@ class Bm25LifecycleSpec extends GraftSpec {
       .listFiles().map(f => (f.getName, f.lastModified())).sortBy(_._1).toSeq
     val before = untouchedTb.map(files)
 
-    Retrieval.deleteFromBm25(spark, victims, delDir)
+    Retrieval.deleteFromBm25(spark, victims, delDir, republishFraction = 2.0)
     untouchedTb.foreach(t => assert(files(t) === before.get,
       "an untouched tb partition must not be rewritten"))
 
@@ -107,42 +106,32 @@ class Bm25LifecycleSpec extends GraftSpec {
     assert(serveRows(Retrieval.loadBm25(spark, delDir)) ===
       serveRows(Retrieval.loadBm25(spark, freshDir)),
       "post-delete rankings must equal the survivor-set serve")
-    spark.conf.unset("spark.graft.bm25.deleteRepublishFraction")
   }
 
   test("bulk delete degrades to a survivor republish: every piece equals a fresh publish") {
-    // r16 verdict #5: above the victim-fraction dial the surgical path
-    // collects near the full vocabulary and swaps every partition — the
-    // guard republishes instead. Same victim set as the surgical test,
-    // threshold forced BELOW its fraction: results must be identical to
-    // a fresh publish of the survivors, with no victim-derived driver
-    // state and no staging/rename leftovers.
-    spark.conf.set("spark.graft.bm25.deleteRepublishFraction", "0.01")
-    try {
-      val victims = docs.filter(col("doc_id") >= 20 && col("doc_id") % 7 === 3)
-        .select("doc_id").collect().map(_.getLong(0)).toSeq
-      val survivors = docs.filter(!col("doc_id").isin(victims: _*))
-      val delDir = tmp("bm25_bulkdel")
-      Retrieval.publishBm25(Retrieval.buildBm25IndexFrom(docs), delDir)
-      Retrieval.deleteFromBm25(spark, victims, delDir)
-      val freshDir = tmp("bm25_bulksurv")
-      Retrieval.publishBm25(Retrieval.buildBm25IndexFrom(survivors), freshDir)
-      val (dp, ddf, ddl, dst) = pieces(delDir)
-      val (sp2, sdf, sdl, sst) = pieces(freshDir)
-      assert(dp === sp2 && ddf === sdf && ddl === sdl && dst === sst,
-        "republished survivor pieces must equal a fresh survivor publish")
-      assert(serveRows(Retrieval.loadBm25(spark, delDir)) ===
-        serveRows(Retrieval.loadBm25(spark, freshDir)))
-      assert(!new java.io.File(delDir).listFiles()
-        .exists(f => f.getName.contains("-staging-") ||
-          f.getName.contains("-replaced-")))
-      // the dial validates loudly
-      spark.conf.set("spark.graft.bm25.deleteRepublishFraction", "0")
-      val err = intercept[Exception] {
-        Retrieval.deleteFromBm25(spark, Seq(1L), delDir)
-      }
-      assert(err.getMessage.contains("deleteRepublishFraction"))
-    } finally spark.conf.unset("spark.graft.bm25.deleteRepublishFraction")
+    // r16 verdict #5: above the victim-fraction threshold the surgical
+    // path collects near the full vocabulary and swaps every partition
+    // — the guard republishes instead. Same victim set as the surgical
+    // test, whose fraction is above the default threshold: results must
+    // be identical to a fresh publish of the survivors, with no
+    // victim-derived driver state and no staging/rename leftovers.
+    val victims = docs.filter(col("doc_id") >= 20 && col("doc_id") % 7 === 3)
+      .select("doc_id").collect().map(_.getLong(0)).toSeq
+    val survivors = docs.filter(!col("doc_id").isin(victims: _*))
+    val delDir = tmp("bm25_bulkdel")
+    Retrieval.publishBm25(Retrieval.buildBm25IndexFrom(docs), delDir)
+    Retrieval.deleteFromBm25(spark, victims, delDir)
+    val freshDir = tmp("bm25_bulksurv")
+    Retrieval.publishBm25(Retrieval.buildBm25IndexFrom(survivors), freshDir)
+    val (dp, ddf, ddl, dst) = pieces(delDir)
+    val (sp2, sdf, sdl, sst) = pieces(freshDir)
+    assert(dp === sp2 && ddf === sdf && ddl === sdl && dst === sst,
+      "republished survivor pieces must equal a fresh survivor publish")
+    assert(serveRows(Retrieval.loadBm25(spark, delDir)) ===
+      serveRows(Retrieval.loadBm25(spark, freshDir)))
+    assert(!new java.io.File(delDir).listFiles()
+      .exists(f => f.getName.contains("-staging-") ||
+        f.getName.contains("-replaced-")))
   }
 
   test("a fully-victimized tb partition is removed outright") {
@@ -150,7 +139,6 @@ class Bm25LifecycleSpec extends GraftSpec {
     import sp.implicits._
     // pin the surgical path (1 victim of 3 docs is above any sane
     // republish threshold; the partition-removal contract is surgical)
-    spark.conf.set("spark.graft.bm25.deleteRepublishFraction", "2.0")
     // crafted corpus: pick a word whose bucket no other corpus term
     // shares, so deleting its only document must EMPTY that partition
     val words = Seq("zzzuniq", "qqq", "aaa", "bbb")
@@ -163,7 +151,7 @@ class Bm25LifecycleSpec extends GraftSpec {
     Retrieval.publishBm25(Retrieval.buildBm25IndexFrom(tiny), dir)
     val tb = buckets("zzzuniq")
     assert(new java.io.File(s"$dir/postings/tb=$tb").exists())
-    Retrieval.deleteFromBm25(spark, Seq(1L), dir)
+    Retrieval.deleteFromBm25(spark, Seq(1L), dir, republishFraction = 2.0)
     assert(!new java.io.File(s"$dir/postings/tb=$tb").exists(),
       "a partition whose every posting was a victim must be gone")
     // the deleted doc's vocabulary left the df table entirely
@@ -178,7 +166,6 @@ class Bm25LifecycleSpec extends GraftSpec {
     assert(!new java.io.File(dir).listFiles()
       .exists(f => f.getName.contains("-staging-") ||
         f.getName.contains("-replaced-")))
-    spark.conf.unset("spark.graft.bm25.deleteRepublishFraction")
   }
 
   test("compaction restores publish form after appends; rankings unchanged") {

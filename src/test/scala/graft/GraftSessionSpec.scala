@@ -4,8 +4,12 @@ import java.util.Properties
 
 import scala.collection.mutable.ArrayBuffer
 
+import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.logging.log4j.core.{LogEvent, Logger}
+import org.apache.logging.log4j.core.appender.AbstractAppender
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 /** GraftSession.checkpoint: with a layout, the checkpoint keeps the
@@ -74,5 +78,48 @@ class GraftSessionSpec extends GraftSpec {
     finally spark.sparkContext.removeSparkListener(listener)
     assert(props.nonEmpty, "no checkpoint-named job")
     props.foreach(p => assert(p.getProperty(Aqe) == spark.conf.get(Aqe)))
+  }
+
+  test("every job a checkpoint starts is named localCheckpoint; the caller's call site comes back") {
+    val sc = spark.sparkContext
+    val names = ArrayBuffer.empty[Seq[String]]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (!Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+            .exists(_.startsWith("graft-jobcount")))
+          names.synchronized(names += e.stageInfos.map(_.name))
+    }
+    sc.setCallSite("the caller's site")
+    sc.addSparkListener(listener)
+    try {
+      // under AQE the repartition's shuffle-map stage runs as its own job
+      val (_, jobs) = JobCount(spark)(GraftSession.checkpoint(keyed))
+      assert(jobs >= 2 && names.size == jobs, s"$jobs jobs, names $names")
+      names.foreach(ns => assert(ns.forall(_.contains("localCheckpoint")), ns))
+      assert(sc.getLocalProperty("callSite.short") == "the caller's site")
+      // also when the checkpoint throws
+      intercept[IllegalArgumentException](GraftSession.checkpoint(keyed, Seq("v")))
+      assert(sc.getLocalProperty("callSite.short") == "the caller's site")
+    } finally { sc.removeSparkListener(listener); sc.clearCallSite() }
+  }
+
+  test("free releases a checkpoint's blocks without logging a WARN") {
+    val sc = spark.sparkContext
+    val ck = GraftSession.checkpoint(keyed)
+    val ids = ck.queryExecution.analyzed.collect { case lr: LogicalRDD => lr.rdd.id }
+    assert(ids.nonEmpty && ids.forall(sc.getPersistentRDDs.contains))
+    val warns = ArrayBuffer.empty[String]
+    val appender = new AbstractAppender("graft-free-spec", null, null, true, Array.empty) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.WARN))
+          warns.synchronized(warns += e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val root = LogManager.getRootLogger.asInstanceOf[Logger]
+    root.addAppender(appender)
+    try GraftSession.free(ck)
+    finally { root.removeAppender(appender); appender.stop() }
+    assert(warns.isEmpty, warns.mkString("\n"))
+    assert(!ids.exists(sc.getPersistentRDDs.contains))
   }
 }

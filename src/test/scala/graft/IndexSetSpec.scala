@@ -170,7 +170,6 @@ class IndexSetSpec extends GraftSpec {
     // pin the SURGICAL path: this fixture's victim fraction (~2%) is
     // above the shared republish default, and this test's contract is
     // exclusions + untouched old segments
-    spark.conf.set("spark.graft.bm25.deleteRepublishFraction", "2.0")
     IndexSet.publish(spark, docs, vecs, root)
     // victims: every doc in db bucket 3 (fully victimizes dl/docs db=3)
     // plus one stray — survivors of other buckets must be untouched
@@ -186,7 +185,7 @@ class IndexSetSpec extends GraftSpec {
     }
     val dlUntouchedBefore = fileState(s"$root/bm25/dl/seg=1/db=5")
 
-    val m2 = IndexSet.delete(spark, victims, root)
+    val m2 = IndexSet.delete(spark, victims, root, () => (), republishFraction = 2.0)
     assert(m2.corpusVersion === 2L)
     assert(m2.nDocs === docs.count() - victims.size)
 
@@ -203,39 +202,35 @@ class IndexSetSpec extends GraftSpec {
     assert(IndexSet.fetchDocs(snap, victims.take(3)).count() === 0L)
     // survivor parity: serving equals the frozen-fit survivor composition
     assert(snapRows(snap) === frozenFitRows(survD, vecs, survV))
-    spark.conf.unset("spark.graft.bm25.deleteRepublishFraction")
   }
 
   test("bulk delete republishes survivor segments under one manifest version") {
     // the deleteFromBm25 guard inside the manifest world: above the
-    // shared victim-fraction dial, fresh survivor segments replace the
+    // shared victim-fraction default, fresh survivor segments replace the
     // whole family (df/stats recomputed from the staged survivors, no
     // victim-derived driver state), committed as one version
     val root = tmp("ixset_bulk")
-    spark.conf.set("spark.graft.bm25.deleteRepublishFraction", "0.005")
-    try {
-      IndexSet.publish(spark, docs, vecs, root)
-      val all = docs.select("doc_id").collect().map(_.getLong(0))
-      val victims = all.filter(_ % 7 == 3).toSeq
-      val survD = docs.filter(!col("doc_id").isin(victims.map(Long.box): _*))
-      val survV = vecs.filter(!col("vec_id").isin(victims.map(Long.box): _*))
-      val m2 = IndexSet.delete(spark, victims, root)
-      assert(m2.corpusVersion === 2L)
-      assert(m2.bm25Postings.map(_.id) === Seq("2") &&
-        m2.bm25Dl.map(_.id) === Seq("2") && m2.pqCodes.map(_.id) === Seq("2") &&
-        m2.docs.map(_.id) === Seq("2"),
-        "bulk delete must reference only the fresh survivor segments")
-      assert(m2.nDocs === all.length - victims.size)
-      val snap = IndexSet.loadSnapshot(spark, root)
-      assert(IndexSet.fetchDocs(snap, victims.take(5)).count() === 0L)
-      assert(snapRows(snap) === frozenFitRows(survD, vecs, survV),
-        "bulk-path serving must equal the frozen-fit survivor composition")
-      // the pre-delete segments become vacuum-able orphans
-      val deleted = IndexSet.vacuum(spark, root)
-      assert(deleted.exists(_.endsWith("seg=1")))
-      assert(snapRows(IndexSet.loadSnapshot(spark, root)) ===
-        frozenFitRows(survD, vecs, survV))
-    } finally spark.conf.unset("spark.graft.bm25.deleteRepublishFraction")
+    IndexSet.publish(spark, docs, vecs, root)
+    val all = docs.select("doc_id").collect().map(_.getLong(0))
+    val victims = all.filter(_ % 7 == 3).toSeq
+    val survD = docs.filter(!col("doc_id").isin(victims.map(Long.box): _*))
+    val survV = vecs.filter(!col("vec_id").isin(victims.map(Long.box): _*))
+    val m2 = IndexSet.delete(spark, victims, root)
+    assert(m2.corpusVersion === 2L)
+    assert(m2.bm25Postings.map(_.id) === Seq("2") &&
+      m2.bm25Dl.map(_.id) === Seq("2") && m2.pqCodes.map(_.id) === Seq("2") &&
+      m2.docs.map(_.id) === Seq("2"),
+      "bulk delete must reference only the fresh survivor segments")
+    assert(m2.nDocs === all.length - victims.size)
+    val snap = IndexSet.loadSnapshot(spark, root)
+    assert(IndexSet.fetchDocs(snap, victims.take(5)).count() === 0L)
+    assert(snapRows(snap) === frozenFitRows(survD, vecs, survV),
+      "bulk-path serving must equal the frozen-fit survivor composition")
+    // the pre-delete segments become vacuum-able orphans
+    val deleted = IndexSet.vacuum(spark, root)
+    assert(deleted.exists(_.endsWith("seg=1")))
+    assert(snapRows(IndexSet.loadSnapshot(spark, root)) ===
+      frozenFitRows(survD, vecs, survV))
   }
 
   test("compaction preserves corpusVersion and rankings; vacuum reclaims orphans") {

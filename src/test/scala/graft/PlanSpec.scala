@@ -390,11 +390,11 @@ class PlanSpec extends GraftSpec {
   test("q138 fold fit: the 3-key join reads hash(lid) in place, same weights at all-keys") {
     def fit(s: SparkSession): (Seq[Row], Seq[String]) = withCv(s)((sided, xdb) =>
       plansOf(s)(LrTrain.trainedSideWeightsAllFolds(sided, xdb, 3,
-        LrTrain.Iters(s), LrTrain.LrDen(s)).collect().toSeq))
+        LrTrain.Iters, LrTrain.LrDen).collect().toSeq))
     val gradJoin = "SortMergeJoin \\[lid#\\d+L, tf#\\d+, side#\\d+\\]".r
     val (w, plans) = fit(spark)
     val iters = plans.filter(gradJoin.findFirstIn(_).isDefined)
-    assert(iters.size >= LrTrain.Iters(spark), plans.mkString("\n\n"))
+    assert(iters.size >= LrTrain.Iters, plans.mkString("\n\n"))
     iters.foreach(p => assert(!p.contains("Exchange hashpartitioning(lid"), p))
     // requireAllClusterKeysForCoPartition=false is what lets hash(lid)
     // serve the three-key join: at true the join re-exchanges, and the

@@ -144,39 +144,30 @@ class Round10OpsSpec extends GraftSpec {
     assert(acc > 0.95, s"side-model accuracy $acc")
   }
 
-  test("q109 occupancy dial: conf is honored and tuned pairs stay sound") {
+  test("q109 pinned bits: the plan carries them and tuned pairs stay sound") {
     import graft.operators.Dedup
     val sf01 = "/root/testdata/sf0.01"
-    // dial honored: the band columns in the plan follow the conf, so a
-    // tuned run genuinely re-partitions the candidate space
-    spark.conf.set("spark.graft.rplsh.bands", "2")
-    spark.conf.set("spark.graft.rplsh.bandBits", "6")
-    try {
-      val tunedPlan = Dedup.q109EmbedLsh(spark, sf01)
-        .queryExecution.analyzed.toString
-      // the native signature expression carries the dial as literal
-      // children, so the plan shows the effective (bands, maxBits)
-      assert(tunedPlan.contains(", 2, 16)") && !tunedPlan.contains(", 4, 16)"),
-        s"band count must follow spark.graft.rplsh.bands:\n$tunedPlan")
-      // soundness under ANY dial: banding changes which candidates are
-      // probed (recall), never a verified pair's value — every tuned
-      // pair must carry the same exact cosine the default run computes
-      val tuned = Dedup.q109EmbedLsh(spark, sf01).collect()
-        .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2))
-      assert(tuned.nonEmpty, "tuned run found no pairs at sf0.01")
-      spark.conf.unset("spark.graft.rplsh.bands")
-      spark.conf.unset("spark.graft.rplsh.bandBits")
-      val dflt = Dedup.q109EmbedLsh(spark, sf01).collect()
-        .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-      val overlap = tuned.filter { case (k, _) => dflt.contains(k) }
-      assert(overlap.nonEmpty, "no overlapping pairs to compare")
-      overlap.foreach { case (k, c) =>
-        assert(dflt(k) == c, s"pair $k cosine diverged under tuning")
-      }
-      tuned.foreach { case (_, c) => assert(c >= 0.35) }
-    } finally {
-      spark.conf.unset("spark.graft.rplsh.bands")
-      spark.conf.unset("spark.graft.rplsh.bandBits")
+    // the pinned dial folds into the native signature expression as a
+    // literal child, so the optimized plan shows the effective (bits,
+    // bands, maxBits); the default plan derives bits from the corpus
+    val tunedDf = Dedup.rpLshParts(spark, sf01, bits = Some(6)).pairs
+    val tunedPlan = tunedDf.queryExecution.optimizedPlan.toString
+    assert(tunedPlan.contains(", 6, 4, 16)"), s"pinned bits not in the plan:\n$tunedPlan")
+    assert(!Dedup.q109EmbedLsh(spark, sf01).queryExecution.optimizedPlan.toString
+      .contains(", 6, 4, 16)"))
+    // soundness under ANY dial: banding changes which candidates are
+    // probed (recall), never a verified pair's value — every tuned
+    // pair must carry the same exact cosine the default run computes
+    val tuned = tunedDf.collect()
+      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2))
+    assert(tuned.nonEmpty, "tuned run found no pairs at sf0.01")
+    val dflt = Dedup.q109EmbedLsh(spark, sf01).collect()
+      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    val overlap = tuned.filter { case (k, _) => dflt.contains(k) }
+    assert(overlap.nonEmpty, "no overlapping pairs to compare")
+    overlap.foreach { case (k, c) =>
+      assert(dflt(k) == c, s"pair $k cosine diverged under tuning")
     }
+    tuned.foreach { case (_, c) => assert(c >= 0.35) }
   }
 }

@@ -94,18 +94,14 @@ class Round11OpsSpec extends GraftSpec {
   }
 
   test("lr hyperparameter dials keep Spark and the oracle twin in lockstep") {
-    // the twin SQL is GENERATED through the same conf accessors the
-    // plans read, so a dialed session's oracle unrolls exactly the
-    // configured iteration count
-    try {
-      spark.conf.set("spark.graft.lr.iters", "2")
-      assert(LrTrain.Iters == 2)
-      val sql = LrTrain.q129Sql
-      assert(sql.contains("FROM w2 ") && !sql.contains("w3"),
-        "q129Sql must unroll exactly the configured iterations")
-      assert(LrTrain.docWeightPath(spark, sfDir).length == 3) // w0..w2
-    } finally spark.conf.unset("spark.graft.lr.iters")
-    assert(LrTrain.Iters == 3 && LrTrain.LrDen == 16L, "defaults restored")
+    // the twin SQL is GENERATED from the same constants the plans read,
+    // so the oracle unrolls exactly the iterations the plans run
+    assert(LrTrain.Iters == 3 && LrTrain.LrDen == 16L)
+    val sql = LrTrain.q129Sql
+    assert(sql.contains("FROM w3 ") && !sql.contains("w4"),
+      "q129Sql must unroll exactly Iters iterations")
+    assert(sql.contains("* 16))"), "q129Sql must divide by LrDen")
+    assert(LrTrain.docWeightPath(spark, sfDir).length == 4) // w0..w3
     // the exact-division primitive truncates toward zero like DuckDB's
     // `//` (-7 div 2 = -3, NOT floor's -4) — every quantized update in
     // the LR family leans on this
@@ -155,23 +151,16 @@ class Round11OpsSpec extends GraftSpec {
     // the prior: 12 (measured: balanced 0.856 / 0.894 at 12 / 20 iters
     // vs plain pinned at the 0.792 prior even at 20 — the sample
     // weighting changes what GD learns, not just how fast). The
-    // registry default stays 3 so every oracle row replays unchanged;
-    // a production fit dials spark.graft.lr.iters exactly like this.
-    try {
-      spark.conf.set("spark.graft.lr.iters", "12")
-      // through the REGISTRY accessor: exercises the dial-keyed cache
-      // (a 12-iteration session must train fresh, not reuse the
-      // default fit) alongside the accuracy claim
-      val balanced = accuracyOf(LrTrain.docWeightsBalanced(spark, sfDir))
-      val plain = accuracyOf(LrTrain.trainedDocWeights(spark, sfDir))
-      assert(plain <= prior + 0.01, s"plain $plain vs prior $prior")
-      assert(balanced > prior + 0.05,
-        s"balanced $balanced does not beat prior $prior")
-    } finally spark.conf.unset("spark.graft.lr.iters")
+    // registry default stays 3 so every oracle row replays unchanged.
+    val balanced = accuracyOf(LrTrain.trainedDocWeightsBalancedFrom(d, iters = 12))
+    val plain = accuracyOf(LrTrain.docWeightPathFrom(d, iters = 12).last)
+    assert(plain <= prior + 0.01, s"plain $plain vs prior $prior")
+    assert(balanced > prior + 0.05,
+      s"balanced $balanced does not beat prior $prior")
   }
 
   test("k-fold CV partitions the corpus; per-fold sided accuracy and grid search hold") {
-    val cv = MlEval.sidedCrossVal(spark, sfDir, 3).collect()
+    val cv = MlEval.sidedCrossVal(spark, sfDir, 3, LrTrain.LrDen).collect()
     assert(cv.length == 6, s"expected 2 sides × 3 folds, got ${cv.length}")
     assert(cv.map(r => (r.getString(0), r.getInt(1))).toSet ==
       (for (s <- Seq("assets", "liabilities"); f <- 0 until 3) yield (s, f)).toSet)
@@ -188,50 +177,43 @@ class Round11OpsSpec extends GraftSpec {
     val universe = LrTrain.sidedLines(spark, sfDir)
       .select("lid").distinct().count()
     assert(scored == universe, s"$scored scored vs $universe lines")
-    // GridSearchCV's shape: one mean-accuracy summary per dial point;
-    // conf restored afterwards
+    // GridSearchCV's shape: one mean-accuracy summary per lrDen point
     val grid = MlEval.sidedGridSearch(spark, sfDir, Seq(16, 64), 2)
     assert(grid.map(_._1) == Seq(16, 64))
     grid.foreach { case (den, a) =>
       assert(a > 0.8 && a <= 1.0, s"den=$den mean acc $a") }
-    assert(spark.conf.getOption("spark.graft.lr.lrDen").isEmpty)
   }
 
   test("rp_lsh_keys native signature matches an independent fold bit for bit") {
     import graft.operators.Dedup
-    val s = spark
-    try {
-      // a HIGH dial (the oracle gate only exercises the small derived
-      // bits): every bit of every band must match a driver-side
-      // reimplementation of the published formula on the same floats
-      s.conf.set("spark.graft.rplsh.bandBits", "12")
-      val got = Dedup.q109EmbedLsh(spark, sfDir) // sanity: plan executes
-      got.collect()
-      val rows = graft.Tables.embeddings(spark, sfDir)
-        .select(col("vec_id"), col("embedding"),
-          call_function("rp_lsh_keys", col("embedding"), lit(12),
-            lit(Dedup.RpBands), lit(Dedup.RpMaxBits)).as("keys"))
-        .collect()
-      assert(rows.nonEmpty)
-      rows.foreach { r =>
-        val e = r.getSeq[Float](1)
-        val keys = r.getSeq[Int](2)
-        val want = (0 until Dedup.RpBands).map { b =>
-          (0 until 12).foldLeft(0) { (key, i) =>
-            val seed = (b * Dedup.RpMaxBits + i).toLong * 1000003L
-            var acc = 0.0
-            var d = 1
-            while (d <= e.length) {
-              val lcg = (1103515245L * (seed + d) + 12345L) % 2147483648L
-              acc += e(d - 1).toDouble * (lcg.toDouble / 2147483648.0 - 0.5)
-              d += 1
-            }
-            (key << 1) | (if (acc >= 0.0) 1 else 0)
+    // a HIGH dial (the oracle gate only exercises the small derived
+    // bits): every bit of every band must match a driver-side
+    // reimplementation of the published formula on the same floats
+    Dedup.rpLshParts(spark, sfDir, bits = Some(12)).pairs.collect() // sanity: plan executes
+    val rows = graft.Tables.embeddings(spark, sfDir)
+      .select(col("vec_id"), col("embedding"),
+        call_function("rp_lsh_keys", col("embedding"), lit(12),
+          lit(Dedup.RpBands), lit(Dedup.RpMaxBits)).as("keys"))
+      .collect()
+    assert(rows.nonEmpty)
+    rows.foreach { r =>
+      val e = r.getSeq[Float](1)
+      val keys = r.getSeq[Int](2)
+      val want = (0 until Dedup.RpBands).map { b =>
+        (0 until 12).foldLeft(0) { (key, i) =>
+          val seed = (b * Dedup.RpMaxBits + i).toLong * 1000003L
+          var acc = 0.0
+          var d = 1
+          while (d <= e.length) {
+            val lcg = (1103515245L * (seed + d) + 12345L) % 2147483648L
+            acc += e(d - 1).toDouble * (lcg.toDouble / 2147483648.0 - 0.5)
+            d += 1
           }
+          (key << 1) | (if (acc >= 0.0) 1 else 0)
         }
-        assert(keys == want, s"vec ${r.getLong(0)}: $keys vs $want")
       }
-    } finally s.conf.unset("spark.graft.rplsh.bandBits")
+      assert(keys == want, s"vec ${r.getLong(0)}: $keys vs $want")
+    }
   }
 
   test("q136 side-routed probabilities: sums calibrated, argmax = q104 verdict") {

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Dedup, LrTrain, MlEval}
+import graft.operators.{Dedup, LrTrain}
 
 /** Round-13 hardening specs: the persisted model registry's Hadoop-FS
   * port (r12 verdict item 3 / ADVICE medium) — scheme'd paths, torn
@@ -90,16 +90,12 @@ class Round13OpsSpec extends GraftSpec {
       LrTrain.docWeights(spark, sfDir).count()
       LrTrain.docWeightsWide(spark, sfDir).count()
       val current = LrTrain.currentKeys(spark, sfDir)
-      // ...plus one under a re-dialed session (a superseded fit), and a
-      // crashed writer's stale staging dir
-      try {
-        spark.conf.set("spark.graft.lr.iters", "2")
-        LrTrain.clearModelCache()
-        LrTrain.docWeights(spark, sfDir).count()
-      } finally {
-        spark.conf.unset("spark.graft.lr.iters")
-        LrTrain.clearModelCache()
-      }
+      // ...plus one under other hyperparameters (a superseded fit), and
+      // a crashed writer's stale staging dir
+      val docKey = current.find(_.contains("|doc_lr|")).get
+      val w = LrTrain.docWeights(spark, sfDir)
+      LrTrain.saveArtifact(spark, dir.toString, "doc_lr",
+        docKey.replace("|it=3|", "|it=2|"), w.schema, w.collect())
       val staleTmp = dir.resolve(".tmp-doc_lr-deadbeef-crashed")
       java.nio.file.Files.createDirectories(staleTmp)
       java.nio.file.Files.setLastModifiedTime(staleTmp,
@@ -111,7 +107,7 @@ class Round13OpsSpec extends GraftSpec {
       assert(before.forall(a => !a.complete || a.key.nonEmpty))
 
       val deleted = LrTrain.pruneArtifacts(spark, current)
-      assert(deleted.size == 1, s"expected exactly the re-dialed fit pruned: $deleted")
+      assert(deleted.size == 1, s"expected exactly the superseded fit pruned: $deleted")
       val after = LrTrain.listArtifacts(spark)
       assert(after.count(_.complete) == 2, s"current artifacts must survive: $after")
       assert(after.forall(a => current.contains(a.key)))
@@ -126,51 +122,32 @@ class Round13OpsSpec extends GraftSpec {
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
 
-  test("grid child sessions inherit the parent's FULL runtime conf, not just graft dials") {
-    try {
-      spark.conf.set("spark.sql.shuffle.partitions", "7")
-      spark.conf.set("spark.graft.lr.iters", "2")
-      val child = MlEval.gridChildSession(spark, 64)
-      assert(child.conf.get("spark.sql.shuffle.partitions") == "7",
-        "non-graft runtime tuning reverted to context defaults in the sweep")
-      assert(child.conf.get("spark.graft.lr.iters") == "2")
-      assert(child.conf.get("spark.graft.lr.lrDen") == "64")
-      // isolation is one-way: the point's dial never leaks to the parent
-      assert(spark.conf.getOption("spark.graft.lr.lrDen").isEmpty)
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", "4")
-      spark.conf.unset("spark.graft.lr.iters")
-    }
-  }
-
   test("q109 occupancy cap: off == today's result, on == subset with a loud overflow report") {
-    def pairs(): Set[(Long, Long)] =
-      Dedup.q109EmbedLsh(spark, sfDir).collect()
+    def pairs(cap: Option[Long]): Set[(Long, Long)] =
+      Dedup.rpLshParts(spark, sfDir, cap).pairs.collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     // cap OFF: the overflow report is empty and the result is the
     // committed oracle-green default
-    val dflt = pairs()
-    assert(Dedup.q109OverflowCells(spark, sfDir).count() == 0)
+    val dflt = pairs(None)
+    assert(Dedup.q109EmbedLsh(spark, sfDir).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet == dflt)
+    assert(Dedup.rpLshParts(spark, sfDir).over.count() == 0)
     assert(dflt.nonEmpty)
-    try {
-      // a cap below the densest cell: that cell must vanish from pair
-      // enumeration and surface — loudly — in the report
-      spark.conf.set("spark.graft.rplsh.maxOcc", "8")
-      val capped = pairs()
-      val over = Dedup.q109OverflowCells(spark, sfDir)
-        .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2)))
-      assert(over.nonEmpty, "cap=8 dropped nothing at sf0.001 — dial the spec")
-      assert(over.forall(_._3 > 8), s"reported cells must exceed the cap: ${over.toSeq}")
-      assert(capped.subsetOf(dflt),
-        "capped output must be a subset of the uncapped pairs")
-      assert(capped != dflt,
-        "cap=8 changed nothing — the report would be vacuous")
-      // a generous cap reproduces the default exactly (no off-by-one at
-      // the boundary: only cells STRICTLY over the cap are excluded)
-      spark.conf.set("spark.graft.rplsh.maxOcc", "1000000")
-      assert(pairs() == dflt)
-      assert(Dedup.q109OverflowCells(spark, sfDir).count() == 0)
-    } finally spark.conf.unset("spark.graft.rplsh.maxOcc")
+    // a cap below the densest cell: that cell must vanish from pair
+    // enumeration and surface — loudly — in the report
+    val capped = pairs(Some(8))
+    val over = Dedup.rpLshParts(spark, sfDir, Some(8)).over
+      .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2)))
+    assert(over.nonEmpty, "cap=8 dropped nothing at sf0.001 — dial the spec")
+    assert(over.forall(_._3 > 8), s"reported cells must exceed the cap: ${over.toSeq}")
+    assert(capped.subsetOf(dflt),
+      "capped output must be a subset of the uncapped pairs")
+    assert(capped != dflt,
+      "cap=8 changed nothing — the report would be vacuous")
+    // a generous cap reproduces the default exactly (no off-by-one at
+    // the boundary: only cells STRICTLY over the cap are excluded)
+    assert(pairs(Some(1000000)) == dflt)
+    assert(Dedup.rpLshParts(spark, sfDir, Some(1000000)).over.count() == 0)
   }
 
   test("the session carries the enlarged codegen class cache (static conf)") {

@@ -9,8 +9,8 @@ import graft.operators.{Dedup, LrTrain, MlEval}
   * inventory (r13 ADVICE medium: a hand-maintained keep-set omitted
   * doc_lr_bal and pruneArtifacts GC'd the current balanced-doc
   * artifact), the concurrent-writer save race (r13 verdict item 6),
-  * the length-prefixed content digest, the CV dial snapshot (item 3),
-  * and the CV checkpoint release (item 5).
+  * the length-prefixed content digest, and the CV checkpoint release
+  * (item 5).
   */
 class Round14OpsSpec extends GraftSpec {
 
@@ -176,47 +176,6 @@ class Round14OpsSpec extends GraftSpec {
       LrTrain.rowsDigest(Array(Row("r", "s"), Row("p", "q"))))
   }
 
-  // --- CV dial snapshot + checkpoint release ----------------------------
-
-  test("CV folds all train under the ENTRY dial even if the parent re-dials mid-CV") {
-    // the dial-explicit fit ignores later session re-dials entirely...
-    val sided = GraftSession.checkpoint(LrTrain.sidedLines(spark, sfDir))
-    val xdb = GraftSession.checkpoint(LrTrain.sideXdb(sided))
-    try {
-      val w2 = LrTrain.trainedSideWeightsOn(spark, sided, xdb, 2, 16L)
-        .collect().toSeq
-      val w1 = LrTrain.trainedSideWeightsOn(spark, sided, xdb, 1, 16L)
-        .collect().toSeq
-      assert(w1 != w2, "iters=1 and iters=2 fits coincide — dial is vacuous")
-      try {
-        spark.conf.set("spark.graft.lr.iters", "1")
-        assert(LrTrain.trainedSideWeightsOn(spark, sided, xdb, 2, 16L)
-          .collect().toSeq == w2,
-          "a dial-explicit fit read the session conf")
-      } finally spark.conf.unset("spark.graft.lr.iters")
-    } finally { GraftSession.free(sided); GraftSession.free(xdb) }
-    // ...and the CV harness snapshots ONCE at entry: a parent re-dial
-    // planted between the snapshot and the fold launches (the hook
-    // fires exactly there) must not change the output
-    val expected = try {
-      spark.conf.set("spark.graft.lr.iters", "2")
-      MlEval.q138SidedCrossval(spark, sfDir).collect().toSeq
-    } finally spark.conf.unset("spark.graft.lr.iters")
-    val out = try {
-      spark.conf.set("spark.graft.lr.iters", "2")
-      MlEval.cvEntryHook = () => {
-        MlEval.cvEntryHook = () => ()
-        spark.conf.set("spark.graft.lr.iters", "1")
-      }
-      MlEval.q138SidedCrossval(spark, sfDir).collect().toSeq
-    } finally {
-      MlEval.cvEntryHook = () => ()
-      spark.conf.unset("spark.graft.lr.iters")
-    }
-    assert(out == expected,
-      "a mid-CV re-dial leaked into the fold fits — folds split across dials")
-  }
-
   // --- q139: the dense-cell routing made executable ---------------------
 
   test("q139: every over-cap member gets exactly ONE verdict; reps keep themselves") {
@@ -231,7 +190,7 @@ class Round14OpsSpec extends GraftSpec {
     val v1s = verd.map(_.getLong(3))
     assert(v1s.distinct.length == v1s.length,
       "a member got multiple verdicts (assignment window leaked)")
-    val reported = Dedup.q109OverflowCellsAt(spark, sfDir, Dedup.RouteCapDefault)
+    val reported = Dedup.rpLshParts(spark, sfDir, Some(Dedup.RouteCapDefault)).over
       .collect().map(r => (r.getInt(0), r.getInt(1))).toSet
     assert(reported.nonEmpty)
     // the verdicts' (band, key) cells are all reported cells
@@ -256,23 +215,19 @@ class Round14OpsSpec extends GraftSpec {
     val routed = Dedup.q139RoutedDedup(spark, sfDir).collect()
       .filter(_.getString(0) == "pair")
       .map(r => (r.getLong(3), r.getLong(4), r.getDouble(5))).toSet
-    val capped = try {
-      spark.conf.set("spark.graft.rplsh.maxOcc", Dedup.RouteCapDefault.toString)
-      Dedup.q109EmbedLsh(spark, sfDir).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    } finally spark.conf.unset("spark.graft.rplsh.maxOcc")
+    val capped = Dedup.rpLshParts(spark, sfDir, Some(Dedup.RouteCapDefault)).pairs
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(routed == capped,
       s"in-cap pairs diverged from capped q109: ${(routed diff capped).take(3)} / ${(capped diff routed).take(3)}")
     // and a cap above every cell degenerates to plain q109 + zero verdicts
-    val all = try {
-      spark.conf.set("spark.graft.rplsh.routeCap", "1000000")
-      Dedup.q139RoutedDedup(spark, sfDir).collect()
-    } finally spark.conf.unset("spark.graft.rplsh.routeCap")
+    val all = Dedup.q139RoutedDedup(spark, sfDir, 1000000L).collect()
     assert(all.forall(_.getString(0) == "pair"))
     val dflt = Dedup.q109EmbedLsh(spark, sfDir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(all.map(r => (r.getLong(3), r.getLong(4), r.getDouble(5))).toSet == dflt)
   }
+
+  // --- CV checkpoint release --------------------------------------------
 
   test("q138 releases its shared corpus checkpoints when it returns") {
     def persisted: Set[Int] =

@@ -8,9 +8,10 @@ import scala.util.Using
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Source guards over `src/main/scala`: lineage is truncated only
-  * through GraftSession.checkpoint, and no code path switches AQE on a
+  * through GraftSession.checkpoint, no code path switches AQE on a
   * live session (a session conf is shared by every query planning on it
-  * at the same time).
+  * at the same time), and the only spark.graft.* keys are the ones
+  * GraftSession lists.
   */
 class SourceGuardSpec extends AnyFunSuite {
   private val Owner = "GraftSession.scala"
@@ -38,5 +39,12 @@ class SourceGuardSpec extends AnyFunSuite {
     val hits = lines(_.contains("spark.sql.adaptive.enabled"))
     assert(hits.map(h => (h._1, h._3.startsWith(".config("))) == Seq((Owner, true)),
       "AQE is set once, at session build:\n" + show(hits))
+  }
+
+  test("the spark.graft.* keys named in src/main are exactly GraftSession.GraftKeys") {
+    val key = "\"(spark\\.graft\\.[A-Za-z0-9.]+)\"".r
+    val named = lines(l => key.findFirstIn(l).isDefined)
+      .flatMap(h => key.findAllMatchIn(h._3).map(_.group(1))).toSet
+    assert(named == GraftSession.GraftKeys, s"named: ${named.toSeq.sorted}")
   }
 }
