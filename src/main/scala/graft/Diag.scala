@@ -6,7 +6,8 @@ import scala.collection.mutable.ArrayBuffer
 import scala.util.Using
 
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart,
+  SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.functions.col
@@ -32,9 +33,12 @@ import graft.streaming.HybridServe
   *       out interpreted fallback.
   *   sweep <sfDir> [names...]      the duplicate-exchange screen over
   *       registry queries (all when none are named), see [[screen]].
-  *   serve <sfDir>                 the same screen over the serve reads
-  *       (bm25_score, pq_probe, hybrid_fused_content) on a freshly
-  *       published index set.
+  *   serve <sfDir>                 the index-set lifecycle and the serve
+  *       reads: publishes 4/5 of the corpus, then records the `append`
+  *       of the rest and the `loadSnapshot` after it (wall, jobs,
+  *       stages, and a per-job ledger of name and wall), then runs the
+  *       same screen over the serve reads (bm25_score, pq_probe,
+  *       hybrid_fused_content) on that snapshot.
   *   plan <sfDir> [--dir <d> [--suffix <s>]] [names...]   the formatted
   *       (pre-AQE) physical plan per query: one `<d>/<name><s>.txt` each
   *       (the plans/rNN ledger), or inside the record without `--dir`.
@@ -93,14 +97,23 @@ object Diag {
       s""""memSpill":$memSpill,"diskSpill":$diskSpill,"shufReadB":$shufReadB,"shufWriteB":$shufWriteB}"""
   }
 
-  /** The stages completed on a session since the last `clear`. Listener
-    * events arrive asynchronously, so clearing right after a pass or
-    * reading right after one can misattribute late StageCompleted
-    * events: `clear` and `snapshot` first drain the bus, polling until
-    * the table has held still for ~300 ms.
+  /** One finished job: its id, the name of its last stage (the call
+    * site that submitted it), its wall time and its stage count.
+    */
+  final case class JobRow(jobId: Int, name: String, ms: Long, stages: Int) {
+    def json: String = s"""{"job":$jobId,"name":${jstr(name)},"ms":$ms,"stages":$stages}"""
+  }
+
+  /** The stages and jobs completed on a session since the last `clear`.
+    * Listener events arrive asynchronously, so clearing right after a
+    * pass or reading right after one can misattribute late events:
+    * `clear`, `snapshot` and `jobs` first drain the bus, polling until
+    * the tables have held still for ~300 ms.
     */
   final class StageRecorder(spark: SparkSession) extends AutoCloseable {
     private val rows = ArrayBuffer.empty[StageRow]
+    private val started = scala.collection.mutable.Map.empty[Int, (Long, String, Int)]
+    private val jobRows = ArrayBuffer.empty[JobRow]
     private val listener = new SparkListener {
       override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
         val si = sc.stageInfo
@@ -110,19 +123,32 @@ object Diag {
           m.memoryBytesSpilled, m.diskBytesSpilled,
           m.shuffleReadMetrics.totalBytesRead, m.shuffleWriteMetrics.bytesWritten))
       }
+      override def onJobStart(e: SparkListenerJobStart): Unit = rows.synchronized {
+        val last = if (e.stageInfos.isEmpty) "" else e.stageInfos.maxBy(_.stageId).name
+        started(e.jobId) = (e.time, last.takeWhile(_ != '\n'), e.stageInfos.size)
+      }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = rows.synchronized {
+        started.remove(e.jobId).foreach { case (t0, name, n) =>
+          jobRows += JobRow(e.jobId, name, e.time - t0, n)
+        }
+      }
     }
     spark.sparkContext.addSparkListener(listener)
 
     private def drain(): Unit = {
       var prev = -1; var stable = 0
       while (stable < 2) {
-        val n = rows.synchronized(rows.size)
+        val n = rows.synchronized(rows.size + started.size + jobRows.size)
         if (n == prev) stable += 1 else { stable = 0; prev = n }
         Thread.sleep(150)
       }
     }
-    def clear(): Unit = { drain(); rows.synchronized(rows.clear()) }
+    def clear(): Unit = {
+      drain(); rows.synchronized { rows.clear(); jobRows.clear() }
+    }
     def snapshot(): Vector[StageRow] = { drain(); rows.synchronized(rows.toVector) }
+    /** The jobs finished since the last `clear`, by id. */
+    def jobs(): Vector[JobRow] = { drain(); rows.synchronized(jobRows.sortBy(_.jobId).toVector) }
     def close(): Unit = spark.sparkContext.removeSparkListener(listener)
   }
 
@@ -174,12 +200,21 @@ object Diag {
     val sfDir = args.head
     val tmp = Files.createTempDirectory("graft_diag_serve")
     try {
-      // one unscreened publish; the reads run on the loaded snapshot,
+      // one unscreened publish of 4/5 of the corpus; the rest arrives as
+      // one append, and the reads run on the snapshot loaded after it,
       // the shape a production micro-batch serves
       val root = tmp.resolve("index").toString
-      IndexSet.publish(spark, Tables.documents(spark, sfDir).select("doc_id", "text"),
-        Tables.embeddings(spark, sfDir), root)
-      val snap = IndexSet.loadSnapshot(spark, root)
+      val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
+      val vecs = Tables.embeddings(spark, sfDir)
+      def arrives(id: String) = col(id) % 5 === 0
+      IndexSet.publish(spark, docs.filter(!arrives("doc_id")), vecs.filter(!arrives("vec_id")), root)
+      var snap: IndexSet.HybridSnapshot = null
+      val lifecycle = Using.resource(new StageRecorder(spark)) { rec =>
+        Seq(
+          lifecycleStep(rec, "append")(() => IndexSet.append(spark,
+            docs.filter(arrives("doc_id")), vecs.filter(arrives("vec_id")), root)),
+          lifecycleStep(rec, "snapshot")(() => snap = IndexSet.loadSnapshot(spark, root)))
+      }
       val requests = GraftSession.checkpoint(Tables.documents(spark, sfDir)
         .filter(col("doc_id") < Retrieval.NumQueries)
         .select(col("doc_id").as("query_id"), col("text"))
@@ -194,11 +229,27 @@ object Diag {
           excludeSelf = true)),
         "hybrid_fused_content" -> (() =>
           HybridServe.fusedWithContent(requests, snap, excludeSelf = true)))
-      Using.resource(new StageRecorder(spark)) { rec =>
+      (lifecycle ++ Using.resource(new StageRecorder(spark)) { rec =>
         paths.map { case (n, fn) => screen(rec, "path", n)(fn) }
-      }.mkString("[\n", ",\n", "\n]")
+      }).mkString("[\n", ",\n", "\n]")
     } finally Using.resource(Files.walk(tmp))(
       _.sorted(java.util.Comparator.reverseOrder[Path]()).forEach(f => Files.delete(f)))
+  }
+
+  /** Times one index-set lifecycle step, once: its wall, its jobs and
+    * stages, and the per-job ledger (name, wall, stages).
+    */
+  private def lifecycleStep(rec: StageRecorder, name: String)(step: () => Unit): String = {
+    rec.clear()
+    val t0 = System.nanoTime()
+    step()
+    val wall = (System.nanoTime() - t0) / 1e9
+    val jobs = rec.jobs()
+    val stages = rec.snapshot()
+    log(f"[lifecycle] $name%-9s wall=$wall%7.3f jobs=${jobs.size}%3d stages=${stages.size}%3d")
+    jobs.foreach(j => log(s"  ${j.json}"))
+    s"""{"lifecycle":${jstr(name)},"wall":${fmt(wall)},"jobs":${jobs.size},""" +
+    s""""stages":${stages.size},"jobLedger":[${jobs.map(_.json).mkString(",")}]}"""
   }
 
   def plan(spark: SparkSession, args: Seq[String]): String = {

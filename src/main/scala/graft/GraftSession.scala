@@ -176,6 +176,42 @@ object GraftSession {
       s2
     } else s
 
+  // --- independent job submissions ----------------------------------------
+
+  /** Runs `tasks` at the same time, each on a thread created for this
+    * call, and returns their results in order. Each task submits its own
+    * Spark jobs from the driver (an index-set write, a grid point), so
+    * one-task jobs that would queue behind each other share the cores
+    * instead. A thread created here inherits the caller's Spark local
+    * properties (job group, call site, scheduler pool); a pooled thread
+    * made earlier would carry whatever properties it was made with.
+    *
+    * Waits for every task, failed or not, so nothing the call started
+    * is still running when it returns; then rethrows the first failure,
+    * in the order the failures happened, with the later ones attached
+    * as suppressed exceptions.
+    */
+  def concurrently[T](tasks: Seq[() => T]): Seq[T] = {
+    val results = new Array[Any](tasks.size)
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val threads = tasks.zipWithIndex.map { case (task, i) =>
+      val t = new Thread(() =>
+        try results(i) = task()
+        catch { case e: Throwable => failures.add(e) },
+        s"graft-concurrently-$i")
+      t.setDaemon(true)
+      t.start()
+      t
+    }
+    threads.foreach(_.join())
+    if (!failures.isEmpty) {
+      val first = failures.poll()
+      failures.forEach(e => first.addSuppressed(e))
+      throw first
+    }
+    results.toSeq.asInstanceOf[Seq[T]]
+  }
+
   // --- the checkpoint primitive ------------------------------------------
 
   /** Truncates `df`'s lineage with an eager `localCheckpoint`: every

@@ -2,10 +2,16 @@ package graft.operators
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, LocatedFileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation,
+  InMemoryFileIndex, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
+
+import graft.GraftSession
 
 /** Atomic, versioned publish of the HYBRID artifact family (r16 verdict
   * next-round #1): the BM25 inverted index, the IVFADC vector index,
@@ -60,6 +66,18 @@ import org.apache.spark.sql.types._
   * one increment-sized write + one vocabulary-sized df merge; a delete
   * rewrites only touched partitions' survivors. The manifest itself is
   * O(segments) bytes; compaction bounds segment count.
+  *
+  * Reads resolve from the manifest, the rule the shape above cites: the
+  * committed version already names every directory a reader sees, so
+  * each read lists those directories' files on the driver (segments ×
+  * buckets listings) and takes its component's declared schema instead
+  * of a parallel-listing job and a footer-inference job per component;
+  * `loadSnapshot` runs one Spark job, the codebook collect. Mutations
+  * stage their independent writes concurrently
+  * (`GraftSession.concurrently`): an append's postings-then-df,
+  * dl, fit-then-codes and docs chains share the cores instead of
+  * queueing one-task jobs, and the manifest commit still waits for all
+  * of them.
   *
   * Single-writer contract: mutations are serialized by the caller (a
   * production deployment runs maintenance from one scheduler). The
@@ -190,6 +208,16 @@ object IndexSet {
   private def bookRoot(root: String) = s"$root/pq/book"
   private def docsRoot(root: String) = s"$root/docs"
 
+  // Each writer's declared schema: the columns its files hold, then its
+  // partition column, all nullable as a parquet read reports them. Reads
+  // take it from here instead of inferring it from a footer (a Spark job
+  // per read); IndexSetSpec pins each against the schema a fresh
+  // publish and an append leave on disk.
+
+  private[graft] val PostingsSchema = StructType(Seq(StructField("doc_id", LongType),
+    StructField("term", StringType), StructField("tf", LongType),
+    StructField("dl", LongType), StructField("tb", IntegerType)))
+
   private def writePostingsSeg(postings: DataFrame, root: String, id: String): Unit =
     postings.withColumn("tb",
         pmod(graft.functions.TextFunctions.md5Long(col("term")),
@@ -199,19 +227,39 @@ object IndexSet {
       .option("parquet.block.size", Retrieval.PostingsRowGroupBytes.toString)
       .parquet(s"${postingsRoot(root)}/seg=$id")
 
+  private[graft] val DlSchema = StructType(Seq(StructField("doc_id", LongType),
+    StructField("dl", LongType), StructField("db", IntegerType)))
+
+  private[graft] val DocsSchema = StructType(Seq(StructField("doc_id", LongType),
+    StructField("text", StringType), StructField("db", IntegerType)))
+
+  /** Writes the dl (DlSchema) and content store (DocsSchema) segments. */
   private def writeDocKeyedSeg(rows: DataFrame, compRoot: String, id: String): Unit =
     rows.withColumn("db",
         pmod(col("doc_id"), lit(Retrieval.DocBuckets.toLong)).cast(IntegerType))
       .repartition(col("db")).sortWithinPartitions("doc_id")
       .write.mode("overwrite").partitionBy("db").parquet(s"$compRoot/seg=$id")
 
+  private[graft] val CodesSchema = StructType(Seq(StructField("vec_id", LongType),
+    StructField("code", LongType), StructField("cell", IntegerType)))
+
   private def writeCodesSeg(codes: DataFrame, root: String, id: String): Unit =
     codes.repartition(col("cell")).sortWithinPartitions("vec_id")
       .write.mode("overwrite").partitionBy("cell").parquet(s"${codesRoot(root)}/seg=$id")
 
+  private[graft] val DfSchema = StructType(Seq(StructField("term", StringType),
+    StructField("df", LongType)))
+
   private def writeDfGen(df: DataFrame, root: String, id: String): Unit =
     df.write.mode("overwrite").parquet(s"${dfRoot(root)}/gen=$id")
 
+  private[graft] val CoarseSchema = StructType(Seq(StructField("cell", IntegerType),
+    StructField("ccent", ArrayType(DoubleType))))
+
+  private[graft] val BookSchema = StructType(Seq(StructField("book", ArrayType(DoubleType)),
+    StructField("dims", ArrayType(IntegerType))))
+
+  /** Writes the coarse (CoarseSchema) and book (BookSchema) generations. */
   private def writeFitGen(idx: Quantize.PqIndex, root: String, id: String): Unit = {
     idx.coarse.write.mode("overwrite").parquet(s"${coarseRoot(root)}/gen=$id")
     val s = idx.coarse.sparkSession
@@ -223,42 +271,86 @@ object IndexSet {
 
   // --- snapshot assembly ---------------------------------------------------
 
-  private def partDirs(fs: FileSystem, segDir: Path): Seq[String] =
+  private def partDirs(fs: FileSystem, segDir: Path): Seq[Path] =
     if (!fs.exists(segDir)) Seq.empty
-    else fs.listStatus(segDir).filter(_.isDirectory)
-      .map(_.getPath.getName).filter(_.contains("=")).toSeq.sorted
+    else fs.listStatus(segDir).filter(s => s.isDirectory && s.getPath.getName.contains("="))
+      .map(_.getPath).toSeq.sortBy(_.getName)
+
+  /** A parquet frame over `dirs` with `schema`, in no Spark job. The
+    * committed manifest names every directory a version reads, so the
+    * leaf files are listed here on the driver (segments × buckets
+    * directories; compaction bounds the segments) and handed to the
+    * file index through a cache it consults before listing anything:
+    * no parallel-listing job however many directories. Partition values
+    * parse from the paths under `base`, typed by `schema`; the data
+    * columns are the rest of `schema`, so no footer is read to infer
+    * them either. Snapshot directories are immutable, so the cache
+    * never needs refreshing.
+    */
+  private def manifestRead(s: SparkSession, base: Path, dirs: Seq[Path],
+      schema: StructType): DataFrame = {
+    val fs = base.getFileSystem(s.sparkContext.hadoopConfiguration)
+    // data files only (no _SUCCESS, no .crc), located the way Spark's
+    // own listing locates them: a status carrying permissions would
+    // make the local filesystem fork a shell per file to read them
+    val listed: Map[Path, Array[FileStatus]] = dirs.map { d =>
+      d -> fs.listStatus(d).filter { f =>
+        val n = f.getPath.getName
+        f.isFile && !n.startsWith("_") && !n.startsWith(".")
+      }.map(f => new LocatedFileStatus(f.getLen, false, f.getReplication, f.getBlockSize,
+        f.getModificationTime, 0, null, null, null, null, f.getPath, false, false, false,
+        fs.getFileBlockLocations(f, 0, f.getLen)): FileStatus)
+    }.toMap
+    val seeded = new FileStatusCache {
+      override def getLeafFiles(p: Path): Option[Array[FileStatus]] = listed.get(p)
+      override def putLeafFiles(p: Path, files: Array[FileStatus]): Unit = ()
+      override def invalidateAll(): Unit = ()
+    }
+    val opts = Map("basePath" -> base.toString)
+    val index = new InMemoryFileIndex(s, dirs, opts, Some(schema), seeded)
+    val parts = index.partitionSchema
+    val data = StructType(schema.filterNot(f => parts.fieldNames.contains(f.name)))
+    Bridge.ofRows(s, LogicalRelation(
+      HadoopFsRelation(index, parts, data, None, new ParquetFileFormat, opts)(s)))
+  }
 
   /** Assemble a component from its manifest segments: each segment's
-    * partition dirs minus its exclusions, read with basePath so the
-    * partition columns survive. `keepSeg` retains the seg column for
-    * mutation planning (per-segment touched-partition lists).
+    * partition dirs minus its exclusions, read with the seg column as
+    * a partition column too. `keepSeg` retains it for mutation planning
+    * (per-segment touched-partition lists).
     */
-  private def readSegs(s: SparkSession, compRoot: String, segs: Seq[SegRef],
-      keepSeg: Boolean = false): DataFrame = {
+  private def readSegs(s: SparkSession, compRoot: String, schema: StructType,
+      segs: Seq[SegRef], keepSeg: Boolean = false): DataFrame = {
     val fs = fsOf(s, compRoot)
+    val base = fs.makeQualified(new Path(compRoot))
     val dirs = segs.flatMap { seg =>
-      val segDir = new Path(compRoot, s"seg=${seg.id}")
       val excluded = seg.excluded.toSet
-      partDirs(fs, segDir).filterNot(excluded)
-        .map(p => new Path(segDir, p).toString)
+      partDirs(fs, new Path(base, s"seg=${seg.id}")).filterNot(p => excluded(p.getName))
     }
     require(dirs.nonEmpty,
       s"component $compRoot has no live partitions — the manifest is empty")
-    val df = s.read.option("basePath", compRoot).parquet(dirs: _*)
+    val df = manifestRead(s, base, dirs, StructType(StructField("seg", IntegerType) +: schema.fields))
     if (keepSeg) df else df.drop("seg")
   }
 
+  /** One whole-table generation (df, coarse, book). */
+  private def readGen(s: SparkSession, compRoot: String, gen: String,
+      schema: StructType): DataFrame = {
+    val dir = fsOf(s, compRoot).makeQualified(new Path(compRoot, s"gen=$gen"))
+    manifestRead(s, dir, Seq(dir), schema)
+  }
+
   private def loadFit(s: SparkSession, root: String, gen: String): (DataFrame, Array[Double]) = {
-    val bookRow = s.read.parquet(s"${bookRoot(root)}/gen=$gen").collect().head
+    val bookRow = readGen(s, bookRoot(root), gen, BookSchema).collect().head
     require(bookRow.getSeq[Int](1) == Seq(Quantize.PqM, Quantize.PqK, Quantize.PqD),
       s"published fit dims ${bookRow.getSeq[Int](1)} != engine (M, K, D)")
-    (s.read.parquet(s"${coarseRoot(root)}/gen=$gen"),
-      bookRow.getSeq[Double](0).toArray)
+    (readGen(s, coarseRoot(root), gen, CoarseSchema), bookRow.getSeq[Double](0).toArray)
   }
 
   /** Resolve ONE version (default: current) into an immutable snapshot.
     * This is the only read path — every component comes from the same
-    * manifest, so a consumer can never fuse two corpus versions.
+    * manifest, so a consumer can never fuse two corpus versions. The
+    * codebook collect is its one Spark job.
     */
   def loadSnapshot(s: SparkSession, root: String,
       version: Option[Long] = None): HybridSnapshot = {
@@ -266,15 +358,25 @@ object IndexSet {
     val (coarse, book) = loadFit(s, root, m.pqFitGen)
     HybridSnapshot(m,
       Retrieval.Bm25Index(
-        readSegs(s, postingsRoot(root), m.bm25Postings),
-        s.read.parquet(s"${dfRoot(root)}/gen=${m.bm25DfGen}"),
-        readSegs(s, dlRoot(root), m.bm25Dl),
+        readSegs(s, postingsRoot(root), PostingsSchema, m.bm25Postings),
+        readGen(s, dfRoot(root), m.bm25DfGen, DfSchema),
+        readSegs(s, dlRoot(root), DlSchema, m.bm25Dl),
         m.nDocs, m.sumDl),
-      Quantize.PqIndex(coarse, book, readSegs(s, codesRoot(root), m.pqCodes)),
-      readSegs(s, docsRoot(root), m.docs))
+      Quantize.PqIndex(coarse, book, readSegs(s, codesRoot(root), CodesSchema, m.pqCodes)),
+      readSegs(s, docsRoot(root), DocsSchema, m.docs))
   }
 
   // --- lifecycle -------------------------------------------------------
+
+  /** Per-term document counts of the postings segment `id` staged by the
+    * running mutation.
+    */
+  private def stagedDf(s: SparkSession, root: String, id: String): DataFrame =
+    readSegs(s, postingsRoot(root), PostingsSchema, only(id))
+      .groupBy("term").agg(count(lit(1)).as("df"))
+
+  /** A segment list holding only the one segment `id`. */
+  private def only(id: String): Seq[SegRef] = Seq(SegRef(id, Nil))
 
   /** Initial publish: fit + encode + index the corpus, everything in
     * segment/generation `000000001`, manifest v1 committed last.
@@ -286,26 +388,29 @@ object IndexSet {
     val id = segId(1L)
     val bm = Retrieval.buildBm25IndexFrom(docs.select("doc_id", "text"))
     require(bm.nDocs > 0, "cannot publish an empty corpus")
-    writePostingsSeg(bm.postings, root, id)
-    writeDocKeyedSeg(bm.dl, dlRoot(root), id)
-    // df derives from the STAGED postings seg (the publishBm25 r17
-    // discipline, A/B'd in BENCH_R17_PUBLISH.json): exchange reuse
-    // cannot span write actions, so the in-memory frame would re-run
-    // the corpus explode plus a second full (doc, term) shuffle — the
-    // staged read is one column-pruned pass with map-side term counts.
-    // dl stays on its in-memory frame: the raw-toks aggregate map-side
-    // combines to doc granularity, a light shuffle
-    writeDfGen(s.read.parquet(s"${postingsRoot(root)}/seg=$id")
-      .groupBy("term").agg(count(lit(1)).as("df")), root, id)
-    val pq = Quantize.buildIndexFrom(vecs)
-    writeFitGen(pq, root, id)
-    writeCodesSeg(pq.codes, root, id)
-    writeDocKeyedSeg(docs.select("doc_id", "text"), docsRoot(root), id)
+    GraftSession.concurrently(Seq(
+      () => {
+        writePostingsSeg(bm.postings, root, id)
+        // df derives from the STAGED postings seg (the publishBm25 r17
+        // discipline, A/B'd in BENCH_R17_PUBLISH.json): exchange reuse
+        // cannot span write actions, so the in-memory frame would re-run
+        // the corpus explode plus a second full (doc, term) shuffle — the
+        // staged read is one column-pruned pass with map-side term counts
+        writeDfGen(stagedDf(s, root, id), root, id)
+      },
+      // dl stays on its in-memory frame: the raw-toks aggregate map-side
+      // combines to doc granularity, a light shuffle
+      () => writeDocKeyedSeg(bm.dl, dlRoot(root), id),
+      () => {
+        val pq = Quantize.buildIndexFrom(vecs)
+        writeFitGen(pq, root, id)
+        writeCodesSeg(pq.codes, root, id)
+      },
+      () => writeDocKeyedSeg(docs.select("doc_id", "text"), docsRoot(root), id)))
     val m = HybridManifest(1L, 1L, bm.nDocs, bm.sumDl,
       Retrieval.TermBuckets, Retrieval.DocBuckets,
       Seq(Quantize.PqM, Quantize.PqK, Quantize.PqD),
-      Seq(SegRef(id, Nil)), Seq(SegRef(id, Nil)), id,
-      Seq(SegRef(id, Nil)), id, Seq(SegRef(id, Nil)))
+      only(id), only(id), id, only(id), id, only(id))
     commitManifest(s, root, m)
     m
   }
@@ -337,25 +442,25 @@ object IndexSet {
     val id = segId(v2)
     val inc = Retrieval.buildBm25IndexFrom(newDocs.select("doc_id", "text"))
     require(inc.nDocs > 0, "empty ingest batch — nothing to append")
-    writePostingsSeg(inc.postings, root, id)
-    writeDocKeyedSeg(inc.dl, dlRoot(root), id)
-    // the increment's df derives from its staged seg, as in publish
-    val mergedDf = s.read.parquet(s"${dfRoot(root)}/gen=${m.bm25DfGen}")
-      .unionByName(s.read.parquet(s"${postingsRoot(root)}/seg=$id")
-        .groupBy("term").agg(count(lit(1)).as("df")))
-      .groupBy("term").agg(sum("df").as("df"))
-    writeDfGen(mergedDf, root, id)
-    val (coarse, book) = loadFit(s, root, m.pqFitGen)
-    writeCodesSeg(Quantize.encodeUnder(coarse, book, newVecs), root, id)
-    writeDocKeyedSeg(newDocs.select("doc_id", "text"), docsRoot(root), id)
+    GraftSession.concurrently(Seq(
+      () => {
+        writePostingsSeg(inc.postings, root, id)
+        // the increment's df derives from its staged seg, as in publish
+        writeDfGen(readGen(s, dfRoot(root), m.bm25DfGen, DfSchema)
+          .unionByName(stagedDf(s, root, id))
+          .groupBy("term").agg(sum("df").as("df")), root, id)
+      },
+      () => writeDocKeyedSeg(inc.dl, dlRoot(root), id),
+      () => {
+        val (coarse, book) = loadFit(s, root, m.pqFitGen)
+        writeCodesSeg(Quantize.encodeUnder(coarse, book, newVecs), root, id)
+      },
+      () => writeDocKeyedSeg(newDocs.select("doc_id", "text"), docsRoot(root), id)))
     beforeCommit()
     val m2 = m.copy(version = v2, corpusVersion = m.corpusVersion + 1,
       nDocs = m.nDocs + inc.nDocs, sumDl = m.sumDl + inc.sumDl,
-      bm25Postings = m.bm25Postings :+ SegRef(id, Nil),
-      bm25Dl = m.bm25Dl :+ SegRef(id, Nil),
-      bm25DfGen = id,
-      pqCodes = m.pqCodes :+ SegRef(id, Nil),
-      docs = m.docs :+ SegRef(id, Nil))
+      bm25Postings = m.bm25Postings ++ only(id), bm25Dl = m.bm25Dl ++ only(id),
+      bm25DfGen = id, pqCodes = m.pqCodes ++ only(id), docs = m.docs ++ only(id))
     commitManifest(s, root, m2)
     m2
   }
@@ -394,34 +499,30 @@ object IndexSet {
     val vVictims = ids.distinct.toDF("vec_id")
 
     if (ids.distinct.size >= republishFraction * m.nDocs) {
-      val survPost = readSegs(s, postingsRoot(root), m.bm25Postings)
-        .join(victims, Seq("doc_id"), "left_anti").drop("tb")
-      writePostingsSeg(survPost, root, id)
-      val survDl = readSegs(s, dlRoot(root), m.bm25Dl)
-        .join(victims, Seq("doc_id"), "left_anti").drop("db")
-      writeDocKeyedSeg(survDl, dlRoot(root), id)
       // df/stats from the STAGED survivors so every piece derives from
       // one corpus state (and nothing victim-sized reaches the driver)
-      val staged = s.read.option("basePath", postingsRoot(root))
-        .parquet(s"${postingsRoot(root)}/seg=$id")
-      writeDfGen(staged.groupBy("term").agg(count(lit(1)).as("df")), root, id)
-      val st = s.read.option("basePath", dlRoot(root))
-        .parquet(s"${dlRoot(root)}/seg=$id")
+      GraftSession.concurrently(Seq(
+        () => {
+          writePostingsSeg(readSegs(s, postingsRoot(root), PostingsSchema, m.bm25Postings)
+            .join(victims, Seq("doc_id"), "left_anti").drop("tb"), root, id)
+          writeDfGen(stagedDf(s, root, id), root, id)
+        },
+        () => writeDocKeyedSeg(readSegs(s, dlRoot(root), DlSchema, m.bm25Dl)
+          .join(victims, Seq("doc_id"), "left_anti").drop("db"), dlRoot(root), id),
+        () => writeCodesSeg(readSegs(s, codesRoot(root), CodesSchema, m.pqCodes)
+          .join(vVictims, Seq("vec_id"), "left_anti"), root, id),
+        () => writeDocKeyedSeg(readSegs(s, docsRoot(root), DocsSchema, m.docs)
+          .join(victims, Seq("doc_id"), "left_anti").drop("db"), docsRoot(root), id)))
+      val st = readSegs(s, dlRoot(root), DlSchema, only(id))
         .agg(count(lit(1)).as("n"), coalesce(sum("dl"), lit(0L)).as("s"))
         .collect()(0)
       require(st.getLong(0) > 0,
         "deleting every document empties the index set — nothing to republish")
-      writeCodesSeg(readSegs(s, codesRoot(root), m.pqCodes)
-        .join(vVictims, Seq("vec_id"), "left_anti"), root, id)
-      writeDocKeyedSeg(readSegs(s, docsRoot(root), m.docs)
-        .join(victims, Seq("doc_id"), "left_anti").drop("db"),
-        docsRoot(root), id)
       beforeCommit()
       val m2 = m.copy(version = v2, corpusVersion = m.corpusVersion + 1,
         nDocs = st.getLong(0), sumDl = st.getLong(1),
-        bm25Postings = Seq(SegRef(id, Nil)), bm25Dl = Seq(SegRef(id, Nil)),
-        bm25DfGen = id, pqCodes = Seq(SegRef(id, Nil)),
-        docs = Seq(SegRef(id, Nil)))
+        bm25Postings = only(id), bm25Dl = only(id),
+        bm25DfGen = id, pqCodes = only(id), docs = only(id))
       commitManifest(s, root, m2)
       return m2
     }
@@ -436,7 +537,8 @@ object IndexSet {
         .distinct().collect()
         .map(r => (r.getLong(0), r.getInt(1))).toSeq
 
-    val postings = readSegs(s, postingsRoot(root), m.bm25Postings, keepSeg = true)
+    val postings = readSegs(s, postingsRoot(root), PostingsSchema, m.bm25Postings,
+      keepSeg = true)
     val pTouched = touchPairs(postings, "doc_id", victims, "tb")
     val lostRows = postings.join(broadcast(victims), Seq("doc_id"))
       .groupBy("term").agg(count(lit(1)).as("lost")).collect()
@@ -444,56 +546,44 @@ object IndexSet {
       java.util.Arrays.asList(lostRows: _*),
       StructType(Seq(StructField("term", StringType),
         StructField("lost", LongType))))
-    val dl = readSegs(s, dlRoot(root), m.bm25Dl, keepSeg = true)
+    val dl = readSegs(s, dlRoot(root), DlSchema, m.bm25Dl, keepSeg = true)
     val victimSt = dl.join(broadcast(victims), Seq("doc_id"))
       .agg(count(lit(1)).as("n"), coalesce(sum("dl"), lit(0L)).as("s"))
       .collect()(0)
     require(m.nDocs - victimSt.getLong(0) > 0,
       "deleting every document empties the index set — republish instead")
     val dTouched = touchPairs(dl, "doc_id", victims, "db")
-    val codes = readSegs(s, codesRoot(root), m.pqCodes, keepSeg = true)
+    val codes = readSegs(s, codesRoot(root), CodesSchema, m.pqCodes, keepSeg = true)
     val cTouched = touchPairs(codes, "vec_id", vVictims, "cell")
-    val store = readSegs(s, docsRoot(root), m.docs, keepSeg = true)
+    val store = readSegs(s, docsRoot(root), DocsSchema, m.docs, keepSeg = true)
     val sTouched = touchPairs(store, "doc_id", victims, "db")
 
     // survivor segment: ONLY the touched (segment, partition) pairs'
     // survivors — untouched data stays where it is, visible as before.
     // OR-of-equalities (not a struct isin) so the predicate prunes at
     // the partition-directory layer
-    def touchedOnly(df: DataFrame, touched: Seq[(Long, Int)],
-        partCol: String): DataFrame =
+    def survivors(df: DataFrame, touched: Seq[(Long, Int)], partCol: String,
+        vict: DataFrame, keyCol: String): DataFrame =
       df.filter(touched.map { case (sg, p) =>
-        col("seg") === sg && col(partCol) === p
-      }.reduce(_ || _))
-    if (pTouched.nonEmpty)
-      writePostingsSeg(
-        touchedOnly(postings, pTouched, "tb")
-          .join(broadcast(victims), Seq("doc_id"), "left_anti")
-          .drop("seg", "tb"),
-        root, id)
-    if (dTouched.nonEmpty)
-      writeDocKeyedSeg(
-        touchedOnly(dl, dTouched, "db")
-          .join(broadcast(victims), Seq("doc_id"), "left_anti")
-          .drop("seg", "db"),
-        dlRoot(root), id)
-    if (cTouched.nonEmpty)
-      writeCodesSeg(
-        touchedOnly(codes, cTouched, "cell")
-          .join(broadcast(vVictims), Seq("vec_id"), "left_anti")
-          .drop("seg"),
-        root, id)
-    if (sTouched.nonEmpty)
-      writeDocKeyedSeg(
-        touchedOnly(store, sTouched, "db")
-          .join(broadcast(victims), Seq("doc_id"), "left_anti")
-          .drop("seg", "db"),
-        docsRoot(root), id)
-    val newDf = s.read.parquet(s"${dfRoot(root)}/gen=${m.bm25DfGen}")
+          col("seg") === sg && col(partCol) === p
+        }.reduce(_ || _))
+        .join(broadcast(vict), Seq(keyCol), "left_anti")
+        .drop("seg")
+    val survivorWrites = Seq(
+      pTouched -> (() => writePostingsSeg(
+        survivors(postings, pTouched, "tb", victims, "doc_id").drop("tb"), root, id)),
+      dTouched -> (() => writeDocKeyedSeg(
+        survivors(dl, dTouched, "db", victims, "doc_id").drop("db"), dlRoot(root), id)),
+      cTouched -> (() => writeCodesSeg(
+        survivors(codes, cTouched, "cell", vVictims, "vec_id"), root, id)),
+      sTouched -> (() => writeDocKeyedSeg(
+        survivors(store, sTouched, "db", victims, "doc_id").drop("db"), docsRoot(root), id)))
+      .collect { case (touched, write) if touched.nonEmpty => write }
+    val dfWrite = () => writeDfGen(readGen(s, dfRoot(root), m.bm25DfGen, DfSchema)
       .join(broadcast(lost), Seq("term"), "left")
       .select(col("term"), (col("df") - coalesce(col("lost"), lit(0L))).as("df"))
-      .filter(col("df") > 0)
-    writeDfGen(newDf, root, id)
+      .filter(col("df") > 0), root, id)
+    GraftSession.concurrently(survivorWrites :+ dfWrite)
 
     beforeCommit()
     def excluded(segs: Seq[SegRef], touched: Seq[(Long, Int)],
@@ -504,7 +594,7 @@ object IndexSet {
           (r.excluded ++ ps.map(p => s"$partCol=${p._2}")).distinct.sorted)
         case None => r
       })
-      if (touched.nonEmpty) upd :+ SegRef(id, Nil) else upd
+      if (touched.nonEmpty) upd ++ only(id) else upd
     }
     val m2 = m.copy(version = v2, corpusVersion = m.corpusVersion + 1,
       nDocs = m.nDocs - victimSt.getLong(0),
@@ -528,16 +618,16 @@ object IndexSet {
     val m = readManifest(s, root)
     val v2 = m.version + 1
     val id = segId(v2)
-    writePostingsSeg(
-      readSegs(s, postingsRoot(root), m.bm25Postings).drop("tb"), root, id)
-    writeDocKeyedSeg(
-      readSegs(s, dlRoot(root), m.bm25Dl).drop("db"), dlRoot(root), id)
-    writeCodesSeg(readSegs(s, codesRoot(root), m.pqCodes), root, id)
-    writeDocKeyedSeg(
-      readSegs(s, docsRoot(root), m.docs).drop("db"), docsRoot(root), id)
-    val m2 = m.copy(version = v2,
-      bm25Postings = Seq(SegRef(id, Nil)), bm25Dl = Seq(SegRef(id, Nil)),
-      pqCodes = Seq(SegRef(id, Nil)), docs = Seq(SegRef(id, Nil)))
+    GraftSession.concurrently(Seq(
+      () => writePostingsSeg(readSegs(s, postingsRoot(root), PostingsSchema, m.bm25Postings)
+        .drop("tb"), root, id),
+      () => writeDocKeyedSeg(readSegs(s, dlRoot(root), DlSchema, m.bm25Dl).drop("db"),
+        dlRoot(root), id),
+      () => writeCodesSeg(readSegs(s, codesRoot(root), CodesSchema, m.pqCodes), root, id),
+      () => writeDocKeyedSeg(readSegs(s, docsRoot(root), DocsSchema, m.docs).drop("db"),
+        docsRoot(root), id)))
+    val m2 = m.copy(version = v2, bm25Postings = only(id), bm25Dl = only(id),
+      pqCodes = only(id), docs = only(id))
     commitManifest(s, root, m2)
     m2
   }

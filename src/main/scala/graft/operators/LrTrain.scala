@@ -191,12 +191,13 @@ object LrTrain {
     * replayed semantics. `w` is the wide (modelKey*, bucket, w0..) local
     * relation; returns the same wide shape. `resid` picks the model
     * family (LR sigmoid or SVC hinge); `ncDf`, the one-row class-count
-    * frame, turns on q135's class-balanced re-weighting.
+    * frame, turns on q135's class-balanced re-weighting. `mergeGrad`
+    * pins the gradient join to sort-merge (q138's fold fit).
     */
   private def gdStep(xdb: DataFrame, labels: DataFrame, nDf: DataFrame,
       w: DataFrame, docKey: Seq[String], modelKey: Seq[String],
       lrDen: Long, resid: Resid = lrResid,
-      ncDf: Option[DataFrame] = None): DataFrame = {
+      ncDf: Option[DataFrame] = None, mergeGrad: Boolean = false): DataFrame = {
     val keys = (docKey ++ modelKey).map(col)
     val mAggs = (0 until Classes).map(c => sum(col("x") * col(s"w$c")).as(s"m$c"))
     val m = xdb.join(broadcast(w), modelKey :+ "bucket")
@@ -216,7 +217,7 @@ object LrTrain {
             lit(Classes.toLong) * greatest(ncOfDoc, lit(1L))).as(s"r$c")): _*)
     }
     val gAggs = (0 until Classes).map(c => sum(col(s"r$c") * col("x")).as(s"g$c"))
-    val g = r.join(xdb, docKey ++ modelKey)
+    val g = r.join(if (mergeGrad) xdb.hint("shuffle_merge") else xdb, docKey ++ modelKey)
       .groupBy((modelKey :+ "bucket").map(col): _*)
       .agg(gAggs.head, gAggs.tail: _*)
     val gn = if (modelKey.isEmpty) g.crossJoin(broadcast(nDf))
@@ -1124,10 +1125,13 @@ object LrTrain {
     // LogicalRDD size estimate undersells (k−1)× the corpus, and the
     // planner otherwise BROADCASTS the multi-M-row frame every
     // iteration (a driver-built multi-hundred-MB hashed relation ×
-    // iterations × passes — the measured GC storm). The margin join is
-    // unaffected: its other side carries an explicit broadcast(w) hint,
-    // which outranks the merge hint, and w is genuinely KB-scale.
-    val xdb = toTrainFolds(xdbAll).hint("shuffle_merge")
+    // iterations × passes — the measured GC storm). The hint goes on
+    // that join's side only (gdStep's mergeGrad): w0's distinct reads
+    // the same frame and is no join, so a hint on the frame makes Spark
+    // log a HintErrorLogger WARN per fit. The margin join needs none:
+    // its other side carries an explicit broadcast(w) hint, and w is
+    // genuinely KB-scale.
+    val xdb = toTrainFolds(xdbAll)
     // labels join on lid alone (gdStep docKey): margin rows exist only
     // for complement lids, and a lid's duplicate physical rows all
     // share its fold, so the full label table joins with the same
@@ -1141,7 +1145,7 @@ object LrTrain {
       .select(Seq(col("tf"), col("side"), col("bucket")) ++
         (0 until Classes).map(c => lit(0L).as(s"w$c")): _*))
     Iterator.iterate(w0)(w =>
-        gdStep(xdb, labels, nDf, w, Seq("lid"), Seq("tf", "side"), lrDen))
+        gdStep(xdb, labels, nDf, w, Seq("lid"), Seq("tf", "side"), lrDen, mergeGrad = true))
       .drop(iters).next()
   }
 

@@ -55,9 +55,19 @@ class DiagSpec extends GraftSpec {
   }
 
   test("serve mode screens the three serve reads, fusedWithContent among them") {
-    val r = json.readTree(Diag.serve(spark, Seq(sfDir))).elements.asScala.toSeq
-    assert(r.map(_.get("path").asText) == Seq("bm25_score", "pq_probe", "hybrid_fused_content"))
-    r.foreach { p =>
+    val (life, paths) = json.readTree(Diag.serve(spark, Seq(sfDir))).elements.asScala.toSeq
+      .partition(_.has("lifecycle"))
+    assert(life.map(_.get("lifecycle").asText) == Seq("append", "snapshot"))
+    life.foreach { l =>
+      assert(keysOf(l) == Set("lifecycle", "wall", "jobs", "stages", "jobLedger"))
+      assert(l.get("wall").asDouble > 0 && l.get("jobLedger").size == l.get("jobs").asInt, l)
+      l.get("jobLedger").elements.asScala.foreach(j =>
+        assert(keysOf(j) == Set("job", "name", "ms", "stages"), j))
+    }
+    // the snapshot resolves from the manifest: the codebook collect only
+    assert(life(1).get("jobs").asInt == 1, life(1))
+    assert(paths.map(_.get("path").asText) == Seq("bm25_score", "pq_probe", "hybrid_fused_content"))
+    paths.foreach { p =>
       assert(keysOf(p) == screenKeys + "path")
       assert(p.get("err").asText == "" && p.get("stages").asInt > 0, p)
     }

@@ -354,4 +354,64 @@ class IndexSetSpec extends GraftSpec {
     assert(out.select("corpus_version").distinct().collect()
       .map(_.getLong(0)).toSeq === Seq(1L))
   }
+
+  private def baseD = docs.filter(col("doc_id") % 5 =!= 0)
+  private def baseV = vecs.filter(col("vec_id") % 5 =!= 0)
+  private def arrD = docs.filter(col("doc_id") % 5 === 0)
+  private def arrV = vecs.filter(col("vec_id") % 5 === 0)
+
+  test("each declared component schema is the schema a publish and an append write") {
+    val root = tmp("ixset_schema")
+    IndexSet.publish(spark, baseD, baseV, root)
+    IndexSet.append(spark, arrD, arrV, root)
+    def onDisk(dir: String) = spark.read.parquet(s"$root/$dir").schema
+    Seq("bm25/postings" -> IndexSet.PostingsSchema, "bm25/dl" -> IndexSet.DlSchema,
+      "pq/codes" -> IndexSet.CodesSchema, "docs" -> IndexSet.DocsSchema).foreach {
+      case (comp, declared) => Seq(1, 2).foreach { seg =>
+        assert(onDisk(s"$comp/seg=$seg") === declared, s"$comp seg=$seg")
+      }
+    }
+    Seq(1, 2).foreach(gen => assert(onDisk(s"bm25/df/gen=$gen") === IndexSet.DfSchema))
+    assert(onDisk("pq/coarse/gen=1") === IndexSet.CoarseSchema)
+    assert(onDisk("pq/book/gen=1") === IndexSet.BookSchema)
+  }
+
+  test("job counts: a snapshot after two appends runs one job; an append stays bounded") {
+    val root = tmp("ixset_jobs")
+    IndexSet.publish(spark, baseD, baseV, root)
+    IndexSet.append(spark, docs.filter(col("doc_id") % 10 === 0),
+      vecs.filter(col("vec_id") % 10 === 0), root)
+    val (m3, appendJobs) = JobCount(spark)(IndexSet.append(spark,
+      docs.filter(col("doc_id") % 10 === 5), vecs.filter(col("vec_id") % 10 === 5), root))
+    assert(m3.version === 3L)
+    // the file listing and the schemas come from the manifest; the
+    // codebook collect is the one job left
+    val (snap, snapJobs) = JobCount(spark)(IndexSet.loadSnapshot(spark, root))
+    assert(snapJobs === 1)
+    assert(appendJobs <= 22, s"an append ran $appendJobs jobs")
+    assert(snapRows(snap) === frozenFitRows(docs, baseV, vecs))
+  }
+
+  test("an append whose codes write fails commits nothing, leaves no write running, rolls forward") {
+    val root = tmp("ixset_cover")
+    IndexSet.publish(spark, baseD, baseV, root)
+    val served1 = snapRows(IndexSet.loadSnapshot(spark, root))
+    // one arriving vector whose label owns no coarse centroid: the codes
+    // chain fails its coverage check while the other chains write
+    val first = arrV.agg(min("vec_id")).head.getLong(0)
+    val uncovered = arrV.withColumn("label",
+      when(col("vec_id") === first, lit(9999)).otherwise(col("label")))
+    val (out, returned, jobs) = JobCount.timeline(spark)(
+      IndexSet.append(spark, arrD, uncovered, root))
+    val err = intercept[IllegalArgumentException](out.get)
+    assert(err.getMessage.contains("labels without a fitted coarse centroid: 9999"), err.getMessage)
+    assert(jobs.nonEmpty)
+    val late = jobs.filter(_._2 > returned)
+    assert(late.size == 0, s"${late.size} of ${jobs.size} jobs ended after the append returned")
+    assert(IndexSet.currentVersion(spark, root) === 1L)
+    assert(snapRows(IndexSet.loadSnapshot(spark, root)) === served1)
+    // roll forward with valid input
+    assert(IndexSet.append(spark, arrD, arrV, root).version === 2L)
+    assert(snapRows(IndexSet.loadSnapshot(spark, root)) === frozenFitRows(docs, baseV, vecs))
+  }
 }

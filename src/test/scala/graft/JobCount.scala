@@ -2,7 +2,10 @@ package graft
 
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import scala.collection.mutable
+import scala.util.Try
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** Counts the Spark jobs a block submits, from the listener bus.
@@ -44,6 +47,42 @@ object JobCount {
       sentinel(close)
       require(closed.await(60, TimeUnit.SECONDS), "listener bus did not deliver the sentinel")
       (out, jobs)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** Runs `body` and returns its outcome, the wall-clock time (ms) it
+    * returned at, and the (start, end) times of every job the listener
+    * bus reports from the call on. Jobs still running after the return
+    * are waited for: the listing closes once every reported job has
+    * ended and the bus has been quiet for `quietMs`. A job that ended
+    * after the return time was still running when the call returned.
+    */
+  def timeline[T](spark: SparkSession, quietMs: Long = 2000)(
+      body: => T): (Try[T], Long, Seq[(Long, Long)]) = {
+    val sc = spark.sparkContext
+    val starts = mutable.Map.empty[Int, Long]
+    val ends = mutable.Map.empty[Int, Long]
+    var lastEvent = System.currentTimeMillis()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = starts.synchronized {
+        starts(e.jobId) = e.time; lastEvent = System.currentTimeMillis()
+      }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = starts.synchronized {
+        ends(e.jobId) = e.time; lastEvent = System.currentTimeMillis()
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      val out = Try(body)
+      val returned = System.currentTimeMillis()
+      val deadline = returned + 120000
+      def settled = starts.synchronized(
+        starts.keySet.subsetOf(ends.keySet) && System.currentTimeMillis() - lastEvent >= quietMs)
+      while (!settled) {
+        require(System.currentTimeMillis() < deadline, "jobs still running 2 min after the call")
+        Thread.sleep(50)
+      }
+      (out, returned, starts.synchronized(starts.keys.toSeq.sorted.map(j => (starts(j), ends(j)))))
     } finally sc.removeSparkListener(listener)
   }
 }

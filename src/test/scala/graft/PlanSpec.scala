@@ -2,6 +2,9 @@ package graft
 
 import scala.collection.mutable.ArrayBuffer
 
+import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.logging.log4j.core.{LogEvent, Logger}
+import org.apache.logging.log4j.core.appender.AbstractAppender
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
@@ -405,5 +408,23 @@ class PlanSpec extends GraftSpec {
     assert(strictPlans.exists(p => gradJoin.findFirstIn(p).isDefined &&
       p.contains("Exchange hashpartitioning(lid")))
     assert(wStrict.map(_.toString).sorted == w.map(_.toString).sorted)
+  }
+
+  test("q138 fold fit: the merge hint reaches only its join, so Spark logs no hint error") {
+    val hintErrors = ArrayBuffer.empty[String]
+    val appender = new AbstractAppender("graft-hint-spec", null, null, true, Array.empty) {
+      override def append(e: LogEvent): Unit = {
+        val msg = e.getMessage.getFormattedMessage
+        if (e.getLevel.isMoreSpecificThan(Level.WARN) && msg.contains("not part of a join relation"))
+          hintErrors.synchronized(hintErrors += msg)
+      }
+    }
+    appender.start()
+    val root = LogManager.getRootLogger.asInstanceOf[Logger]
+    root.addAppender(appender)
+    try withCv(spark)((sided, xdb) => LrTrain.trainedSideWeightsAllFolds(sided, xdb, 3,
+      LrTrain.Iters, LrTrain.LrDen).collect())
+    finally { root.removeAppender(appender); appender.stop() }
+    assert(hintErrors.isEmpty, hintErrors.mkString("\n"))
   }
 }

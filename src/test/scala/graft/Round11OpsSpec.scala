@@ -184,6 +184,20 @@ class Round11OpsSpec extends GraftSpec {
       assert(a > 0.8 && a <= 1.0, s"den=$den mean acc $a") }
   }
 
+  test("grid search: a failing point fails the search only after the other point has ended") {
+    // den 0 is refused before its point submits a job; the den-16 point
+    // runs its whole CV, and the search must wait for it. The quiet
+    // period outlasts the point's planning before its first job, so a
+    // search that returned early still has that point's jobs listed
+    val (out, returned, jobs) = JobCount.timeline(spark, quietMs = 5000)(
+      MlEval.sidedGridSearch(spark, sfDir, Seq(16, 0), 2))
+    val err = intercept[IllegalArgumentException](out.get)
+    assert(err.getMessage.contains("step denominator must be positive"), err.getMessage)
+    assert(jobs.nonEmpty, "the den-16 point ran no job")
+    val late = jobs.filter(_._2 > returned)
+    assert(late.size == 0, s"${late.size} of ${jobs.size} jobs ended after the search returned")
+  }
+
   test("rp_lsh_keys native signature matches an independent fold bit for bit") {
     import graft.operators.Dedup
     // a HIGH dial (the oracle gate only exercises the small derived
