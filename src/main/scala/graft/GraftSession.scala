@@ -91,12 +91,6 @@ object GraftSession {
     s
   }
 
-  /** Session for the driver-invoked mains: core count from env. */
-  def fromEnv(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    apply(s"local[$cpus]", cpus)
-  }
-
   // --- input-size-aware shuffle sizing (r15 verdict item 4) ------------
   // Two independent r15 probes (PostingProbe, PqProbe) measured the same
   // lesson: shuffle.partitions = cores starves 5M-row posting shuffles
@@ -183,20 +177,25 @@ object GraftSession {
     * Spark jobs from the driver (an index-set write, a grid point), so
     * one-task jobs that would queue behind each other share the cores
     * instead. A thread created here inherits the caller's Spark local
-    * properties (job group, call site, scheduler pool); a pooled thread
-    * made earlier would carry whatever properties it was made with.
+    * properties (job group, scheduler pool); a pooled thread made
+    * earlier would carry whatever properties it was made with.
+    *
+    * Each task runs under its name as the call site (see [[withCallSite]]),
+    * so every job it starts, AQE's stage jobs included, is named after
+    * the task rather than after the thread's anonymous CompletableFuture
+    * frame; name a task `<what> at <Object.method>`.
     *
     * Waits for every task, failed or not, so nothing the call started
     * is still running when it returns; then rethrows the first failure,
     * in the order the failures happened, with the later ones attached
     * as suppressed exceptions.
     */
-  def concurrently[T](tasks: Seq[() => T]): Seq[T] = {
+  def concurrently[T](s: SparkSession, tasks: Seq[(String, () => T)]): Seq[T] = {
     val results = new Array[Any](tasks.size)
     val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-    val threads = tasks.zipWithIndex.map { case (task, i) =>
+    val threads = tasks.zipWithIndex.map { case ((name, task), i) =>
       val t = new Thread(() =>
-        try results(i) = task()
+        try results(i) = withCallSite(s, name)(task())
         catch { case e: Throwable => failures.add(e) },
         s"graft-concurrently-$i")
       t.setDaemon(true)
@@ -210,6 +209,19 @@ object GraftSession {
       throw first
     }
     results.toSeq.asInstanceOf[Seq[T]]
+  }
+
+  /** Runs `body` with `site` as the short call site of the jobs it
+    * starts (AQE's stage threads copy it from the caller's local
+    * properties), then restores the caller's own call site.
+    * setLocalProperty(k, null) removes a key the caller had not set.
+    */
+  private def withCallSite[T](s: SparkSession, site: String)(body: => T): T = {
+    val sc = s.sparkContext
+    val callerSite = Seq("callSite.short", "callSite.long").map(k => k -> sc.getLocalProperty(k))
+    sc.setCallSite(site)
+    try body
+    finally callerSite.foreach { case (k, v) => sc.setLocalProperty(k, v) }
   }
 
   // --- the checkpoint primitive ------------------------------------------
@@ -244,17 +256,11 @@ object GraftSession {
     * No session conf is written, so queries running concurrently on
     * the session plan as they would without this call.
     */
-  def checkpoint(df: DataFrame, layout: Seq[String] = Nil): DataFrame = {
-    val sc = df.sparkSession.sparkContext
-    // SparkContext's call-site local properties; the short form names the
-    // stages. setLocalProperty(k, null) removes a key the caller had not set.
-    val callerSite = Seq("callSite.short", "callSite.long").map(k => k -> sc.getLocalProperty(k))
-    sc.setCallSite("localCheckpoint at GraftSession.checkpoint")
-    try {
+  def checkpoint(df: DataFrame, layout: Seq[String] = Nil): DataFrame =
+    withCallSite(df.sparkSession, "localCheckpoint at GraftSession.checkpoint") {
       val ck = df.localCheckpoint()
       if (layout.isEmpty) ck else keepLayout(df, ck, layout)
-    } finally callerSite.foreach { case (k, v) => sc.setLocalProperty(k, v) }
-  }
+    }
 
   private def keepLayout(df: DataFrame, ck: DataFrame, layout: Seq[String]): DataFrame = {
     val out = df.queryExecution.analyzed.output

@@ -3,7 +3,7 @@ package graft.operators
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, LocatedFileStatus, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation,
   InMemoryFileIndex, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
@@ -19,18 +19,16 @@ import graft.GraftSession
   * fuses — maintained as ONE versioned index set so a reader can never
   * observe them at two different corpus versions.
   *
-  * The r16 capstone exposed the gap this closes: `appendToBm25` commits
-  * postings → dl → df → stats as four non-atomic in-place steps, and
-  * nothing pinned "the BM25 and PQ artifacts index the same corpus" —
-  * a crash mid-append, or an append applied to one index but not the
-  * other, served fused rankings across two corpus versions undetected.
+  * It is the only code that publishes or mutates an index: a crash
+  * anywhere in a mutation leaves the prior version servable, and no
+  * mutation can reach one index of the family without the others.
   *
   * Design (the public snapshot-isolation shape — Iceberg/Delta's
   * manifest discipline scaled down to exactly what this family needs):
   *
   *   - **Immutable segments.** Every data write lands in a fresh
-  *     `seg=<id>` directory (internally partitioned by tb/db/cell like
-  *     the single-index layouts, same sort + row-group dials). Nothing
+  *     `seg=<id>` directory (internally partitioned by tb/db/cell, the
+  *     Retrieval/Quantize layout dials: sort and row-group size). Nothing
   *     ever rewrites or appends into an existing segment, so any frame
   *     assembled from a fixed segment list keeps serving ITS version
   *     even while later mutations land beside it.
@@ -61,11 +59,11 @@ import graft.GraftSession
   * commits, and every version's serving equals a fresh publish of that
   * version's corpus.
   *
-  * Scale shape: identical to the single-index artifacts — posting reads
-  * prune on (seg, tb) partition dirs then row groups; an append costs
-  * one increment-sized write + one vocabulary-sized df merge; a delete
-  * rewrites only touched partitions' survivors. The manifest itself is
-  * O(segments) bytes; compaction bounds segment count.
+  * Scale shape: posting reads prune on (seg, tb) partition dirs then
+  * row groups; an append costs one increment-sized write + one
+  * vocabulary-sized df merge; a delete rewrites only touched
+  * partitions' survivors. The manifest itself is O(segments) bytes;
+  * compaction bounds segment count.
   *
   * Reads resolve from the manifest, the rule the shape above cites: the
   * committed version already names every directory a reader sees, so
@@ -75,9 +73,12 @@ import graft.GraftSession
   * `loadSnapshot` runs one Spark job, the codebook collect. Mutations
   * stage their independent writes concurrently
   * (`GraftSession.concurrently`): an append's postings-then-df,
-  * dl, fit-then-codes and docs chains share the cores instead of
-  * queueing one-task jobs, and the manifest commit still waits for all
-  * of them.
+  * dl-then-stats, fit-then-codes and docs chains share the cores
+  * instead of queueing one-task jobs, each chain's jobs named after it
+  * (`dl at IndexSet.append`), and the manifest commit still waits for
+  * all of them. The corpus scalars (n_docs, sum_dl) of a publish, an
+  * append and a bulk delete come from the staged dl segment
+  * ([[stagedStats]]), so no stats job runs before the writes start.
   *
   * Single-writer contract: mutations are serialized by the caller (a
   * production deployment runs maintenance from one scheduler). The
@@ -219,9 +220,7 @@ object IndexSet {
     StructField("dl", LongType), StructField("tb", IntegerType)))
 
   private def writePostingsSeg(postings: DataFrame, root: String, id: String): Unit =
-    postings.withColumn("tb",
-        pmod(graft.functions.TextFunctions.md5Long(col("term")),
-          lit(Retrieval.TermBuckets.toLong)).cast(IntegerType))
+    postings.withColumn("tb", Retrieval.termBucketCol)
       .repartition(col("tb")).sortWithinPartitions("term")
       .write.mode("overwrite").partitionBy("tb")
       .option("parquet.block.size", Retrieval.PostingsRowGroupBytes.toString)
@@ -235,8 +234,7 @@ object IndexSet {
 
   /** Writes the dl (DlSchema) and content store (DocsSchema) segments. */
   private def writeDocKeyedSeg(rows: DataFrame, compRoot: String, id: String): Unit =
-    rows.withColumn("db",
-        pmod(col("doc_id"), lit(Retrieval.DocBuckets.toLong)).cast(IntegerType))
+    rows.withColumn("db", Retrieval.docBucketCol)
       .repartition(col("db")).sortWithinPartitions("doc_id")
       .write.mode("overwrite").partitionBy("db").parquet(s"$compRoot/seg=$id")
 
@@ -368,12 +366,26 @@ object IndexSet {
 
   // --- lifecycle -------------------------------------------------------
 
-  /** Per-term document counts of the postings segment `id` staged by the
-    * running mutation.
+  /** The segment `id` the running mutation staged under `compRoot`. A
+    * segment staged from no rows has no partition dirs and reads as
+    * empty, so an empty input fails at its own check, before the commit.
     */
+  private def readStaged(s: SparkSession, compRoot: String, schema: StructType,
+      id: String): DataFrame =
+    if (partDirs(fsOf(s, compRoot), new Path(compRoot, s"seg=$id")).isEmpty)
+      s.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+    else readSegs(s, compRoot, schema, only(id))
+
+  /** Per-term document counts of the staged postings segment `id`. */
   private def stagedDf(s: SparkSession, root: String, id: String): DataFrame =
-    readSegs(s, postingsRoot(root), PostingsSchema, only(id))
+    readStaged(s, postingsRoot(root), PostingsSchema, id)
       .groupBy("term").agg(count(lit(1)).as("df"))
+
+  /** (n_docs, sum_dl) of the staged dl segment `id`: one small collect
+    * over the KB-scale dl rows, run in the dl chain after its write.
+    */
+  private def stagedStats(s: SparkSession, root: String, id: String): (Long, Long) =
+    Retrieval.dlStats(readStaged(s, dlRoot(root), DlSchema, id))
 
   /** A segment list holding only the one segment `id`. */
   private def only(id: String): Seq[SegRef] = Seq(SegRef(id, Nil))
@@ -386,28 +398,34 @@ object IndexSet {
     require(versions(s, root).isEmpty,
       s"$root already holds a published index set — use append/delete")
     val id = segId(1L)
-    val bm = Retrieval.buildBm25IndexFrom(docs.select("doc_id", "text"))
-    require(bm.nDocs > 0, "cannot publish an empty corpus")
-    GraftSession.concurrently(Seq(
-      () => {
-        writePostingsSeg(bm.postings, root, id)
-        // df derives from the STAGED postings seg (the publishBm25 r17
-        // discipline, A/B'd in BENCH_R17_PUBLISH.json): exchange reuse
-        // cannot span write actions, so the in-memory frame would re-run
-        // the corpus explode plus a second full (doc, term) shuffle — the
-        // staged read is one column-pruned pass with map-side term counts
+    val (postings, _, dl) = Retrieval.bm25Frames(docs.select("doc_id", "text"))
+    var stats = (0L, 0L) // set by the dl chain; concurrently joins it
+    GraftSession.concurrently(s, Seq(
+      "postings+df at IndexSet.publish" -> { () =>
+        writePostingsSeg(postings, root, id)
+        // df derives from the STAGED postings seg (A/B'd in
+        // BENCH_R17_PUBLISH.json): exchange reuse cannot span write
+        // actions, so the in-memory frame would re-run the corpus explode
+        // plus a second full (doc, term) shuffle — the staged read is one
+        // column-pruned pass with map-side term counts
         writeDfGen(stagedDf(s, root, id), root, id)
       },
       // dl stays on its in-memory frame: the raw-toks aggregate map-side
       // combines to doc granularity, a light shuffle
-      () => writeDocKeyedSeg(bm.dl, dlRoot(root), id),
-      () => {
+      "dl at IndexSet.publish" -> { () =>
+        writeDocKeyedSeg(dl, dlRoot(root), id)
+        stats = stagedStats(s, root, id)
+      },
+      "fit+codes at IndexSet.publish" -> { () =>
         val pq = Quantize.buildIndexFrom(vecs)
         writeFitGen(pq, root, id)
         writeCodesSeg(pq.codes, root, id)
       },
-      () => writeDocKeyedSeg(docs.select("doc_id", "text"), docsRoot(root), id)))
-    val m = HybridManifest(1L, 1L, bm.nDocs, bm.sumDl,
+      "docs at IndexSet.publish" ->
+        (() => writeDocKeyedSeg(docs.select("doc_id", "text"), docsRoot(root), id))))
+    val (nDocs, sumDl) = stats
+    require(nDocs > 0, "cannot publish an empty corpus")
+    val m = HybridManifest(1L, 1L, nDocs, sumDl,
       Retrieval.TermBuckets, Retrieval.DocBuckets,
       Seq(Quantize.PqM, Quantize.PqK, Quantize.PqD),
       only(id), only(id), id, only(id), id, only(id))
@@ -421,10 +439,11 @@ object IndexSet {
 
   /** Absorb an ingest batch into BOTH indexes and the content store as
     * one committed version: stage the increment's segments + the merged
-    * df generation, then commit the manifest. A crash (or the test
-    * hook's throw) anywhere before the commit leaves the prior version
-    * fully servable and the staged dirs orphaned — re-running the
-    * append rolls forward. Encoding runs under the manifest's FROZEN
+    * df generation, then commit the manifest. An empty batch fails after
+    * staging (its dl segment counts zero docs) and commits nothing. A
+    * crash (or the test hook's throw) anywhere before the commit leaves
+    * the prior version fully servable and the staged dirs orphaned —
+    * re-running the append rolls forward. Encoding runs under the manifest's FROZEN
     * fit generation (coverage-checked); df/n_docs/sum_dl update in
     * exact long arithmetic, so append-then-load serves bit-identically
     * to a fresh publish of the union (IndexSetSpec).
@@ -440,25 +459,30 @@ object IndexSet {
     val m = readManifest(s, root)
     val v2 = m.version + 1
     val id = segId(v2)
-    val inc = Retrieval.buildBm25IndexFrom(newDocs.select("doc_id", "text"))
-    require(inc.nDocs > 0, "empty ingest batch — nothing to append")
-    GraftSession.concurrently(Seq(
-      () => {
-        writePostingsSeg(inc.postings, root, id)
+    val (postings, _, dl) = Retrieval.bm25Frames(newDocs.select("doc_id", "text"))
+    var inc = (0L, 0L) // set by the dl chain; concurrently joins it
+    GraftSession.concurrently(s, Seq(
+      "postings+df at IndexSet.append" -> { () =>
+        writePostingsSeg(postings, root, id)
         // the increment's df derives from its staged seg, as in publish
         writeDfGen(readGen(s, dfRoot(root), m.bm25DfGen, DfSchema)
           .unionByName(stagedDf(s, root, id))
           .groupBy("term").agg(sum("df").as("df")), root, id)
       },
-      () => writeDocKeyedSeg(inc.dl, dlRoot(root), id),
-      () => {
+      "dl at IndexSet.append" -> { () =>
+        writeDocKeyedSeg(dl, dlRoot(root), id)
+        inc = stagedStats(s, root, id)
+      },
+      "codes at IndexSet.append" -> { () =>
         val (coarse, book) = loadFit(s, root, m.pqFitGen)
         writeCodesSeg(Quantize.encodeUnder(coarse, book, newVecs), root, id)
       },
-      () => writeDocKeyedSeg(newDocs.select("doc_id", "text"), docsRoot(root), id)))
+      "docs at IndexSet.append" ->
+        (() => writeDocKeyedSeg(newDocs.select("doc_id", "text"), docsRoot(root), id))))
+    require(inc._1 > 0, "empty ingest batch — nothing to append")
     beforeCommit()
     val m2 = m.copy(version = v2, corpusVersion = m.corpusVersion + 1,
-      nDocs = m.nDocs + inc.nDocs, sumDl = m.sumDl + inc.sumDl,
+      nDocs = m.nDocs + inc._1, sumDl = m.sumDl + inc._2,
       bm25Postings = m.bm25Postings ++ only(id), bm25Dl = m.bm25Dl ++ only(id),
       bm25DfGen = id, pqCodes = m.pqCodes ++ only(id), docs = m.docs ++ only(id))
     commitManifest(s, root, m2)
@@ -467,6 +491,23 @@ object IndexSet {
 
   def delete(s: SparkSession, ids: Seq[Long], root: String): HybridManifest =
     delete(s, ids, root, () => ())
+
+  /** Victim fraction (of the published n_docs) above which a delete
+    * degrades to a republish of the survivors. Decided UPFRONT from
+    * |victims| / n_docs — the manifest's nDocs, no job:
+    * BENCH_R17_BM25_DELETE measured a touched-partition-probe variant
+    * at 2x the small-delete wall (the probe is itself a full postings
+    * scan) and rejected it. Crossover at the 1.5M-doc rung: republish
+    * wins from ~1% victims (19.1 s vs 22.8 surgical at 1%, 16.4 vs
+    * 22.4 at 20%) and is a wash below it (16.6 vs 17.4 at 1k victims)
+    * — because one document's ~30-50 distinct terms hash across most
+    * of the 64 buckets, the surgical path rewrites nearly every
+    * partition even for tiny deletes at this geometry, while at
+    * production bucket counts (thousands at 100 TB) a GDPR-sized
+    * delete touches a small fraction and the surgical path's rewrite
+    * volume stays proportional. Values > 1 disable the fallback.
+    */
+  val DefaultDeleteRepublishFraction = 0.01
 
   /** Remove documents AND their vectors (the HybridServe id-space
     * convention: doc_id and vec_id enumerate the same corpus) as one
@@ -478,18 +519,18 @@ object IndexSet {
     * leaves the prior version servable with every victim still
     * present (deletion is not durable until the manifest commits).
     *
-    * Bulk-delete guard (the deleteFromBm25 discipline, sharing its
-    * `republishFraction`, default DefaultDeleteRepublishFraction):
-    * above the victim fraction — decided upfront from the manifest's nDocs, no
-    * probe job — the delete degrades to a survivor REPUBLISH (fresh
-    * segments containing all survivors, df/stats recomputed with no
-    * victim-derived driver state, one new manifest referencing only
-    * them), since the surgical path would collect near the full
-    * vocabulary and rewrite nearly every partition anyway.
+    * Bulk-delete guard (`republishFraction`, default
+    * [[DefaultDeleteRepublishFraction]]; specs pass another value to pin
+    * either path): above the victim fraction — decided upfront from the
+    * manifest's nDocs, no probe job — the delete degrades to a survivor
+    * REPUBLISH (fresh segments containing all survivors, df/stats
+    * recomputed with no victim-derived driver state, one new manifest
+    * referencing only them), since the surgical path would collect near
+    * the full vocabulary and rewrite nearly every partition anyway.
     */
   private[graft] def delete(s: SparkSession, ids: Seq[Long], root: String,
       beforeCommit: () => Unit,
-      republishFraction: Double = Retrieval.DefaultDeleteRepublishFraction): HybridManifest = {
+      republishFraction: Double = DefaultDeleteRepublishFraction): HybridManifest = {
     import s.implicits._
     require(ids.nonEmpty, "empty victim set")
     val m = readManifest(s, root)
@@ -501,35 +542,37 @@ object IndexSet {
     if (ids.distinct.size >= republishFraction * m.nDocs) {
       // df/stats from the STAGED survivors so every piece derives from
       // one corpus state (and nothing victim-sized reaches the driver)
-      GraftSession.concurrently(Seq(
-        () => {
+      var st = (0L, 0L) // set by the dl chain; concurrently joins it
+      GraftSession.concurrently(s, Seq(
+        "postings+df at IndexSet.delete" -> { () =>
           writePostingsSeg(readSegs(s, postingsRoot(root), PostingsSchema, m.bm25Postings)
             .join(victims, Seq("doc_id"), "left_anti").drop("tb"), root, id)
           writeDfGen(stagedDf(s, root, id), root, id)
         },
-        () => writeDocKeyedSeg(readSegs(s, dlRoot(root), DlSchema, m.bm25Dl)
-          .join(victims, Seq("doc_id"), "left_anti").drop("db"), dlRoot(root), id),
-        () => writeCodesSeg(readSegs(s, codesRoot(root), CodesSchema, m.pqCodes)
-          .join(vVictims, Seq("vec_id"), "left_anti"), root, id),
-        () => writeDocKeyedSeg(readSegs(s, docsRoot(root), DocsSchema, m.docs)
-          .join(victims, Seq("doc_id"), "left_anti").drop("db"), docsRoot(root), id)))
-      val st = readSegs(s, dlRoot(root), DlSchema, only(id))
-        .agg(count(lit(1)).as("n"), coalesce(sum("dl"), lit(0L)).as("s"))
-        .collect()(0)
-      require(st.getLong(0) > 0,
+        "dl at IndexSet.delete" -> { () =>
+          writeDocKeyedSeg(readSegs(s, dlRoot(root), DlSchema, m.bm25Dl)
+            .join(victims, Seq("doc_id"), "left_anti").drop("db"), dlRoot(root), id)
+          st = stagedStats(s, root, id)
+        },
+        "codes at IndexSet.delete" -> (() => writeCodesSeg(
+          readSegs(s, codesRoot(root), CodesSchema, m.pqCodes)
+            .join(vVictims, Seq("vec_id"), "left_anti"), root, id)),
+        "docs at IndexSet.delete" -> (() => writeDocKeyedSeg(
+          readSegs(s, docsRoot(root), DocsSchema, m.docs)
+            .join(victims, Seq("doc_id"), "left_anti").drop("db"), docsRoot(root), id))))
+      require(st._1 > 0,
         "deleting every document empties the index set — nothing to republish")
       beforeCommit()
       val m2 = m.copy(version = v2, corpusVersion = m.corpusVersion + 1,
-        nDocs = st.getLong(0), sumDl = st.getLong(1),
+        nDocs = st._1, sumDl = st._2,
         bm25Postings = only(id), bm25Dl = only(id),
         bm25DfGen = id, pqCodes = only(id), docs = only(id))
       commitManifest(s, root, m2)
       return m2
     }
 
-    // victim-derived state, all bounded (the deleteFromBm25 discipline):
-    // per-(segment, partition) touch lists, the victims' per-term doc
-    // counts, and their dl sum
+    // victim-derived state, all bounded: per-(segment, partition) touch
+    // lists, the victims' per-term doc counts, and their dl sum
     def touchPairs(df: DataFrame, keyCol: String, vict: DataFrame,
         partCol: String): Seq[(Long, Int)] =
       df.join(broadcast(vict), Seq(keyCol))
@@ -570,20 +613,21 @@ object IndexSet {
         .join(broadcast(vict), Seq(keyCol), "left_anti")
         .drop("seg")
     val survivorWrites = Seq(
-      pTouched -> (() => writePostingsSeg(
-        survivors(postings, pTouched, "tb", victims, "doc_id").drop("tb"), root, id)),
-      dTouched -> (() => writeDocKeyedSeg(
-        survivors(dl, dTouched, "db", victims, "doc_id").drop("db"), dlRoot(root), id)),
-      cTouched -> (() => writeCodesSeg(
-        survivors(codes, cTouched, "cell", vVictims, "vec_id"), root, id)),
-      sTouched -> (() => writeDocKeyedSeg(
-        survivors(store, sTouched, "db", victims, "doc_id").drop("db"), docsRoot(root), id)))
+      pTouched -> ("postings at IndexSet.delete" -> (() => writePostingsSeg(
+        survivors(postings, pTouched, "tb", victims, "doc_id").drop("tb"), root, id))),
+      dTouched -> ("dl at IndexSet.delete" -> (() => writeDocKeyedSeg(
+        survivors(dl, dTouched, "db", victims, "doc_id").drop("db"), dlRoot(root), id))),
+      cTouched -> ("codes at IndexSet.delete" -> (() => writeCodesSeg(
+        survivors(codes, cTouched, "cell", vVictims, "vec_id"), root, id))),
+      sTouched -> ("docs at IndexSet.delete" -> (() => writeDocKeyedSeg(
+        survivors(store, sTouched, "db", victims, "doc_id").drop("db"), docsRoot(root), id))))
       .collect { case (touched, write) if touched.nonEmpty => write }
-    val dfWrite = () => writeDfGen(readGen(s, dfRoot(root), m.bm25DfGen, DfSchema)
-      .join(broadcast(lost), Seq("term"), "left")
-      .select(col("term"), (col("df") - coalesce(col("lost"), lit(0L))).as("df"))
-      .filter(col("df") > 0), root, id)
-    GraftSession.concurrently(survivorWrites :+ dfWrite)
+    val dfWrite = "df at IndexSet.delete" -> (() => writeDfGen(
+      readGen(s, dfRoot(root), m.bm25DfGen, DfSchema)
+        .join(broadcast(lost), Seq("term"), "left")
+        .select(col("term"), (col("df") - coalesce(col("lost"), lit(0L))).as("df"))
+        .filter(col("df") > 0), root, id))
+    GraftSession.concurrently(s, survivorWrites :+ dfWrite)
 
     beforeCommit()
     def excluded(segs: Seq[SegRef], touched: Seq[(Long, Int)],
@@ -618,14 +662,15 @@ object IndexSet {
     val m = readManifest(s, root)
     val v2 = m.version + 1
     val id = segId(v2)
-    GraftSession.concurrently(Seq(
-      () => writePostingsSeg(readSegs(s, postingsRoot(root), PostingsSchema, m.bm25Postings)
-        .drop("tb"), root, id),
-      () => writeDocKeyedSeg(readSegs(s, dlRoot(root), DlSchema, m.bm25Dl).drop("db"),
-        dlRoot(root), id),
-      () => writeCodesSeg(readSegs(s, codesRoot(root), CodesSchema, m.pqCodes), root, id),
-      () => writeDocKeyedSeg(readSegs(s, docsRoot(root), DocsSchema, m.docs).drop("db"),
-        docsRoot(root), id)))
+    GraftSession.concurrently(s, Seq(
+      "postings at IndexSet.compact" -> (() => writePostingsSeg(
+        readSegs(s, postingsRoot(root), PostingsSchema, m.bm25Postings).drop("tb"), root, id)),
+      "dl at IndexSet.compact" -> (() => writeDocKeyedSeg(
+        readSegs(s, dlRoot(root), DlSchema, m.bm25Dl).drop("db"), dlRoot(root), id)),
+      "codes at IndexSet.compact" -> (() => writeCodesSeg(
+        readSegs(s, codesRoot(root), CodesSchema, m.pqCodes), root, id)),
+      "docs at IndexSet.compact" -> (() => writeDocKeyedSeg(
+        readSegs(s, docsRoot(root), DocsSchema, m.docs).drop("db"), docsRoot(root), id))))
     val m2 = m.copy(version = v2, bm25Postings = only(id), bm25Dl = only(id),
       pqCodes = only(id), docs = only(id))
     commitManifest(s, root, m2)

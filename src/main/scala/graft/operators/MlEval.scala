@@ -547,11 +547,13 @@ object MlEval {
     */
   private[graft] def sidedGridSearch(s: SparkSession, dir: String,
       lrDens: Seq[Int], k: Int): Seq[(Int, Double)] =
-    GraftSession.concurrently(lrDens.map { den => () =>
-      val mean = sidedCrossVal(s, dir, k, den.toLong)
-        .agg(avg(col("acc_micros").cast(DoubleType) / lit(1000000.0)))
-        .head().getDouble(0)
-      den -> mean
+    GraftSession.concurrently(s, lrDens.map { den =>
+      s"lrDen=$den at MlEval.sidedGridSearch" -> { () =>
+        val mean = sidedCrossVal(s, dir, k, den.toLong)
+          .agg(avg(col("acc_micros").cast(DoubleType) / lit(1000000.0)))
+          .head().getDouble(0)
+        den -> mean
+      }
     })
 
   def q134Sql: String = {

@@ -297,7 +297,7 @@ object Quantize {
     * join narrowing), and the failure can only ever be INTRODUCED at
     * the two boundaries the checks guard — a fit whose sample missed a
     * rare label (buildIndex) or a new label arriving under a frozen
-    * coarse table (appendToIndex).
+    * coarse table (encodeUnder, IndexSet's append).
     */
   private[graft] def residualFrame(e: DataFrame, coarse: DataFrame): DataFrame =
     e.join(broadcast(coarse), col("label") === col("cell"))
@@ -468,7 +468,7 @@ object Quantize {
   /** The published IVFADC index (T49's serving artifact, E35's model
     * registry discipline applied to a vector index): coarse cells, the
     * trained residual codebook (bounded model state, 8 KB), and the
-    * (cell, vec_id, code) table. `publish` persists all three — codes
+    * (cell, vec_id, code) table. IndexSet persists all three — codes
     * PARTITIONED BY cell, so a routed probe's candidate read is
     * partition-pruned at the parquet layer (the 100 TB layout claim
     * made executable; PqServeSpec pins the PartitionFilters).
@@ -513,47 +513,11 @@ object Quantize {
     PqIndex(coarse, flat, codes)
   }
 
-  def publishIndex(idx: PqIndex, outDir: String): Unit = {
-    idx.coarse.write.mode("overwrite").parquet(s"$outDir/coarse")
-    val s = idx.coarse.sparkSession
-    import s.implicits._
-    Seq((idx.book.toSeq, Seq(PqM, PqK, PqD))).toDF("book", "dims")
-      .write.mode("overwrite").parquet(s"$outDir/book")
-    idx.codes.write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$outDir/codes")
-  }
-
-  def loadIndex(s: SparkSession, outDir: String): PqIndex = {
-    val bookRow = s.read.parquet(s"$outDir/book").collect().head
-    require(bookRow.getSeq[Int](1) == Seq(PqM, PqK, PqD),
-      s"published index dims ${bookRow.getSeq[Int](1)} != engine (M, K, D)")
-    PqIndex(
-      s.read.parquet(s"$outDir/coarse"),
-      bookRow.getSeq[Double](0).toArray,
-      s.read.parquet(s"$outDir/codes"))
-  }
-
-  /** Incremental index maintenance: encode NEWLY ARRIVED vectors
-    * (vec_id, embedding, label) under the PUBLISHED index's frozen
-    * coarse cells + codebook and append their codes into the
-    * cell-partitioned artifact — no refit, no rewrite of existing
-    * partitions. This is how a production ANN index absorbs a day's
-    * ingest: the fit is versioned and frozen (re-fit is a deliberate
-    * re-publish, tracked like E35's model registry), encode is a
-    * map-only pass over the new rows, and the append lands only in the
-    * touched cell partitions. Because encode is row-local under a
-    * frozen book, append-then-load serves BIT-IDENTICALLY to a fresh
-    * publish of the union (PqServeSpec pins it).
-    */
-  def appendToIndex(s: SparkSession, newVecs: DataFrame, outDir: String): Unit = {
-    val idx = loadIndex(s, outDir)
-    encodeUnder(idx.coarse, idx.book, newVecs)
-      .write.mode("append").partitionBy("cell").parquet(s"$outDir/codes")
-  }
-
-  /** Encode arrivals under a FROZEN fit — the shared increment builder
-    * (appendToIndex and IndexSet's manifest append): coverage-checked
-    * at the boundary, then a map-only residual + native pq_encode pass.
+  /** Encode arrivals under a FROZEN fit — IndexSet's append increment
+    * (re-fit is a deliberate re-publish): coverage-checked at the
+    * boundary, then a map-only residual + native pq_encode pass. Encode
+    * is row-local under a frozen book, so an append serves exactly as
+    * the union encoded under that fit (PqServeSpec).
     */
   private[graft] def encodeUnder(coarse: DataFrame, book: Array[Double],
       newVecs: DataFrame): DataFrame = {
@@ -564,84 +528,12 @@ object Quantize {
           lit(Array(PqM, PqK, PqD))).as("code"))
   }
 
-  /** Surgical compaction of the published codes (the Bm25 compactBm25
-    * discipline for the vector index): each append lands one fresh
-    * file per touched cell partition; rewrite ONLY the cells holding
-    * more than one file back to a single file each (staged + swapped),
-    * leaving single-file cells byte-untouched. Serving is unchanged by
-    * row-set identity (PqServeSpec). Returns the compacted cell dirs.
-    */
-  def compactIndex(s: SparkSession, outDir: String): Seq[String] = {
-    import graft.sources.PartitionSwap
-    val cells = PartitionSwap.multiFilePartitions(s, s"$outDir/codes")
-    if (cells.nonEmpty) {
-      val vals = cells.map(_.split("=", 2)(1).toInt)
-      val staging = PartitionSwap.stagingPathFor(s"$outDir/codes")
-      s.read.parquet(s"$outDir/codes")
-        .filter(col("cell").isin(vals.map(Integer.valueOf): _*))
-        .repartition(col("cell")).sortWithinPartitions("vec_id")
-        .write.mode("overwrite").partitionBy("cell").parquet(staging)
-      PartitionSwap.swap(s, s"$outDir/codes", staging, cells)
-    }
-    cells
-  }
-
-  /** Incremental index deletion (the GDPR/right-to-be-forgotten path,
-    * completing the build/publish/append/delete lifecycle): remove the
-    * given vec_ids from the published codes, rewriting ONLY the cell
-    * partitions that contain them (staged survivor write + per-cell
-    * directory swap — the untouched cells' files are left in place,
-    * which at 100 TB is the difference between a surgical rewrite and
-    * re-publishing the corpus; a cell whose members are ALL victims is
-    * removed outright). The coarse/codebook fit is unchanged — deletes
-    * never force a refit, exactly as in append.
-    */
-  def deleteFromIndex(s: SparkSession, vecIds: Seq[Long], outDir: String): Unit = {
-    val codes = s.read.parquet(s"$outDir/codes")
-    val victims = s.createDataFrame(
-      java.util.Arrays.asList(vecIds.map(org.apache.spark.sql.Row(_)): _*),
-      StructType(Seq(StructField("vec_id", LongType, nullable = false))))
-    val touched = codes.join(broadcast(victims), Seq("vec_id"))
-      .select("cell").distinct().collect().map(_.getInt(0))
-    if (touched.nonEmpty) {
-      // Stage-then-swap (r15 ADVICE, both items): survivors of the
-      // touched cells land in a staging dir FIRST — the live index is
-      // never read-while-overwritten, and a mid-write failure leaves it
-      // fully intact. The swap then deletes each touched cell=<id> dir
-      // and renames the staged partition in; a touched cell whose
-      // members were ALL victims has no staged partition and its
-      // directory simply stays deleted — the dynamic-overwrite form
-      // silently kept such cells' files, so fully-victimized cells
-      // remained servable against the right-to-be-forgotten contract.
-      // Per-cell delete+rename is atomic on HDFS/local; a crash between
-      // cells leaves the remaining staged partitions recoverable in the
-      // staging dir rather than a half-written live partition.
-      val codesPath = new org.apache.hadoop.fs.Path(s"$outDir/codes")
-      val fs = codesPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val staging = new org.apache.hadoop.fs.Path(
-        s"$outDir/.codes-staging-${java.util.UUID.randomUUID}")
-      codes.filter(col("cell").isin(touched.map(Integer.valueOf): _*))
-        .join(broadcast(victims), Seq("vec_id"), "left_anti")
-        .write.mode("overwrite").partitionBy("cell").parquet(staging.toString)
-      touched.foreach { c =>
-        val live = new org.apache.hadoop.fs.Path(codesPath, s"cell=$c")
-        fs.delete(live, true)
-        val staged = new org.apache.hadoop.fs.Path(staging, s"cell=$c")
-        // abort with staging intact on a failed rename — the tail
-        // cleanup would otherwise delete the survivors' only copy
-        if (fs.exists(staged)) require(fs.rename(staged, live),
-          s"cell swap failed renaming $staged -> $live; staged data left at $staging")
-      }
-      fs.delete(staging, true)
-    }
-  }
-
-  /** Serving-path scorer: per-probe IVFADC top-k against a built or
-    * loaded index. Bit-identical to q147's probe path (PqServeSpec)
-    * but with the LUT computed ROW-LOCALLY by the native `pq_lut`
-    * expression — one codegen'd call per (probe, routed cell) instead
-    * of q147's explode + keyed collect_list, so a serving request
-    * never shuffles. Runs per micro-batch under PqServe.serve.
+  /** Serving-path scorer: per-probe IVFADC top-k against a built index
+    * or a snapshot's (IndexSet.loadSnapshot). Bit-identical to q147's
+    * probe path (PqServeSpec) but with the LUT computed ROW-LOCALLY by
+    * the native `pq_lut` expression — one codegen'd call per (probe,
+    * routed cell) instead of q147's explode + keyed collect_list, so a
+    * serving request never shuffles. Runs per micro-batch under PqServe.serve.
     *
     * `excludeSelf` defaults TRUE (the T6 convention: probes are corpus
     * vectors, batch parity with q147 needs the self drop); a serving

@@ -158,9 +158,10 @@ object Retrieval {
     * tb = pmod(md5_long(term), TermBuckets) and per-doc lengths on
     * db = pmod(doc_id, DocBuckets), so (a) a query's candidate read is
     * PARTITION-pruned before the in-partition term sort prunes row
-    * groups, and (b) append/delete rewrite only the touched partition
-    * directories — the PqIndex cell discipline applied to the inverted
-    * index (r15 verdict next-round #2).
+    * groups, and (b) a delete's survivor segment holds only the touched
+    * partition directories — the PqIndex cell discipline applied to the
+    * inverted index (r15 verdict next-round #2). IndexSet writes both
+    * layouts.
     */
   val TermBuckets = 64
   val DocBuckets = 64
@@ -187,11 +188,11 @@ object Retrieval {
         org.apache.spark.unsafe.types.UTF8String.fromString(term)),
       TermBuckets.toLong).toInt
 
-  private def termBucketCol: org.apache.spark.sql.Column =
+  private[graft] def termBucketCol: org.apache.spark.sql.Column =
     pmod(graft.functions.TextFunctions.md5Long(col("term")),
       lit(TermBuckets.toLong)).cast(IntegerType)
 
-  private def docBucketCol: org.apache.spark.sql.Column =
+  private[graft] def docBucketCol: org.apache.spark.sql.Column =
     pmod(col("doc_id"), lit(DocBuckets.toLong)).cast(IntegerType)
 
   /** The published inverted index (T50's serving artifact): full
@@ -207,12 +208,14 @@ object Retrieval {
     def avgdl: Double = sumDl.toDouble / nDocs
   }
 
-  /** Fit the index from a documents slice — query-agnostic (FULL
-    * postings, unlike q148's in-query pruned tf; the df values agree
-    * on every query term by construction). Also the increment builder:
-    * appendToBm25 runs it over the arriving docs alone.
+  /** The index's frames over a documents slice, all lazy: (postings,
+    * df, dl) — query-agnostic (FULL postings, unlike q148's in-query
+    * pruned tf; the df values agree on every query term by
+    * construction). Also the increment builder: IndexSet's publish and
+    * append write these frames and take the corpus scalars from the
+    * staged dl segment ([[dlStats]]), so no job runs before the writes.
     */
-  def buildBm25IndexFrom(docs: DataFrame): Bm25Index = {
+  private[graft] def bm25Frames(docs: DataFrame): (DataFrame, DataFrame, DataFrame) = {
     val toks = docs.select(col("doc_id"),
       posexplode(split(lower(col("text")), " ")).as(Seq("pos", "term")))
     val tf = toks.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
@@ -223,422 +226,40 @@ object Retrieval {
     // route through tf: the (doc_id, term) exchange is the expensive
     // unit here (821 MB of shuffle at the 1.5M-doc rung), while the
     // raw-toks aggregate map-side combines to doc granularity before a
-    // KB-scale shuffle — a dl-from-tf form made the eager stats collect
-    // below pay that full tf exchange and was MEASURED at ~2x the
-    // publish wall (BENCH_R17_PUBLISH.json), so it was rejected
+    // KB-scale shuffle — a dl-from-tf form made the stats collect pay
+    // that full tf exchange and was MEASURED at ~2x the publish wall
+    // (BENCH_R17_PUBLISH.json), so it was rejected
     val df = tf.where(col("tf") >= 1).groupBy("term").agg(count(lit(1)).as("df"))
     val dl = toks.groupBy("doc_id").agg(count(lit(1)).as("dl"))
-    val st = dl.agg(count(lit(1)).as("n"), sum("dl").as("s")).collect()(0)
-    Bm25Index(tf.join(dl, Seq("doc_id")), df, dl, st.getLong(0),
-      if (st.isNullAt(1)) 0L else st.getLong(1))
+    (tf.join(dl, Seq("doc_id")), df, dl)
+  }
+
+  /** (n_docs, sum_dl) of a (doc_id, dl) frame, in one job over its
+    * partitions: a global aggregate would add an exchange, and under AQE
+    * a second job, to fold what is two longs per partition.
+    */
+  private[graft] def dlStats(dl: DataFrame): (Long, Long) =
+    dl.select("dl").rdd.aggregate((0L, 0L))(
+      (acc, r) => (acc._1 + 1, acc._2 + r.getLong(0)),
+      (a, b) => (a._1 + b._1, a._2 + b._2))
+
+  /** The index over a documents slice, in memory: [[bm25Frames]] plus
+    * the corpus scalars, collected here.
+    */
+  def buildBm25IndexFrom(docs: DataFrame): Bm25Index = {
+    val (postings, df, dl) = bm25Frames(docs)
+    val (nDocs, sumDl) = dlStats(dl)
+    Bm25Index(postings, df, dl, nDocs, sumDl)
   }
 
   def buildBm25Index(s: SparkSession, dir: String): Bm25Index =
     buildBm25IndexFrom(Tables.documents(s, dir))
 
-  private def writeStats(s: SparkSession, nDocs: Long, sumDl: Long,
-      outDir: String): Unit = {
-    import s.implicits._
-    // guard here, the shared funnel: publishing an empty corpus would
-    // write avgdl = NaN and poison every downstream tfn (r16 ADVICE —
-    // appendToBm25 already early-returns on an empty increment, but
-    // publish/build had no equivalent)
-    require(nDocs > 0,
-      s"cannot write BM25 stats for an empty corpus (n_docs=$nDocs)")
-    Seq((nDocs, sumDl.toDouble / nDocs, sumDl))
-      .toDF("n_docs", "avgdl", "sum_dl")
-      .write.mode("overwrite").parquet(s"$outDir/stats")
-  }
-
-  /** Stage-and-swap rewrite of an UNPARTITIONED index piece (the
-    * vocabulary-sized df table): the new frame may READ the live dir —
-    * it materializes fully into staging before the live dir is
-    * replaced.
-    */
-  private def writeSwapped(s: SparkSession, data: DataFrame,
-      liveDir: String): Unit = {
-    val staging = graft.sources.PartitionSwap.stagingPathFor(liveDir)
-    data.write.mode("overwrite").parquet(staging)
-    val live = new org.apache.hadoop.fs.Path(liveDir)
-    val fs = live.getFileSystem(s.sparkContext.hadoopConfiguration)
-    // rename-aside, not delete-then-rename: a crash between the two
-    // renames leaves the previous table recoverable beside the new one
-    // instead of a window where the artifact has NO df table at all
-    val aside = new org.apache.hadoop.fs.Path(
-      live.getParent, s".${live.getName}-replaced-${java.util.UUID.randomUUID}")
-    if (fs.exists(live)) require(fs.rename(live, aside),
-      s"df swap failed moving $live aside")
-    require(fs.rename(new org.apache.hadoop.fs.Path(staging), live),
-      s"df swap failed renaming $staging -> $live; previous table at $aside")
-    fs.delete(aside, true)
-  }
-
-  def publishBm25(idx: Bm25Index, outDir: String): Unit = {
-    // term-bucketed + term-sorted layout: the tb partition column
-    // prunes whole directories for a request vocabulary, and the
-    // in-partition term sort prunes at the parquet row-group layer
-    // (RetrProbe at 1.5M docs: the unclustered scan cost the serve
-    // path ~10 s of pure postings I/O)
-    val s = idx.postings.sparkSession
-    // guard up front (not only in writeStats): an empty corpus would
-    // otherwise fail later with an unhelpful schema-inference error on
-    // the staged-postings read
-    require(idx.nDocs > 0,
-      s"cannot publish BM25 index for an empty corpus (n_docs=${idx.nDocs})")
-    idx.postings.withColumn("tb", termBucketCol)
-      .repartition(col("tb")).sortWithinPartitions("term")
-      .write.mode("overwrite").partitionBy("tb")
-      .option("parquet.block.size", PostingsRowGroupBytes.toString)
-      .parquet(s"$outDir/postings")
-    // df DERIVES FROM THE STAGED POSTINGS (the republishSurvivors
-    // discipline): in-plan exchange reuse cannot span separate write
-    // actions, so writing idx.df would re-run the corpus explode plus a
-    // full (doc, term)-distinct shuffle (740 MB at the 1.5M-doc rung) —
-    // the staged read is one column-pruned pass with map-side term
-    // counts, 323 -> 25 task-seconds in the instrumented A/B
-    // (BENCH_R17_PUBLISH.json; walls at this rung swing ±40% with
-    // page-cache state, the stage table is the evidence). dl stays on
-    // its in-memory frame: its raw-toks aggregate map-side combines to
-    // doc granularity before a KB-scale shuffle — cheap to recompute
-    s.read.parquet(s"$outDir/postings")
-      .groupBy("term").agg(count(lit(1)).as("df"))
-      .write.mode("overwrite").parquet(s"$outDir/df")
-    idx.dl.withColumn("db", docBucketCol)
-      .repartition(col("db")).sortWithinPartitions("doc_id")
-      .write.mode("overwrite").partitionBy("db").parquet(s"$outDir/dl")
-    writeStats(s, idx.nDocs, idx.sumDl, outDir)
-  }
-
-  def loadBm25(s: SparkSession, outDir: String): Bm25Index = {
-    val statsDf = s.read.parquet(s"$outDir/stats")
-    val st = statsDf.collect()(0)
-    // format migration (r16 ADVICE): indexes published before sum_dl
-    // landed carry a two-column stats row (n_docs, avgdl). avgdl was
-    // computed as sumDl.toDouble / nDocs at publish time, and sumDl is
-    // far below 2^53, so round(avgdl * nDocs) recovers the exact long.
-    val sumDl =
-      if (statsDf.columns.contains("sum_dl")) st.getLong(st.fieldIndex("sum_dl"))
-      else {
-        System.err.println(s"[graft] legacy two-column BM25 stats at " +
-          s"$outDir/stats: deriving sum_dl = round(avgdl * n_docs); " +
-          "republish to upgrade")
-        math.round(st.getDouble(st.fieldIndex("avgdl")) *
-          st.getLong(st.fieldIndex("n_docs")))
-      }
-    Bm25Index(
-      s.read.parquet(s"$outDir/postings"),
-      s.read.parquet(s"$outDir/df"),
-      s.read.parquet(s"$outDir/dl"),
-      st.getLong(st.fieldIndex("n_docs")), sumDl)
-  }
-
-  /** Incremental index maintenance (r15 verdict next-round #2 — parity
-    * with PqIndex's append): absorb newly arrived (doc_id, text) rows
-    * into the published index with NO refit and NO rewrite of existing
-    * posting files. tf and dl are doc-local, so the new postings
-    * simply append into their touched tb partitions; the global stats
-    * are updated EXACTLY — df is a vocabulary-sized merge (old + the
-    * increment's per-term doc counts, staged and swapped) and
-    * n_docs/sum_dl are long additions — so append-then-serve is
-    * bit-identical to a fresh publish of the union corpus
-    * (Bm25LifecycleSpec pins it). Caller contract: arriving doc_ids
-    * are new (a re-ingest is delete + append).
-    *
-    * CRASH CONTRACT (r16 ADVICE): the four steps — postings append →
-    * dl append → df swap → stats rewrite — are not atomic. The stats
-    * rewrite is deliberately LAST and acts as the commit marker: a
-    * stats row whose n_docs disagrees with count(dl) means an
-    * incomplete append. Roll FORWARD by deleting the batch's appended
-    * files (newest-mtime files in the touched tb/db partitions — each
-    * append lands fresh files only, never rewrites) and re-running the
-    * append; the df swap is itself crash-safe (writeSwapped's
-    * rename-aside). For an atomically versioned family-level append —
-    * where a crash anywhere leaves the PRIOR version fully servable —
-    * use [[graft.operators.IndexSet]]'s manifest discipline instead;
-    * this in-place form remains the single-index fast path.
-    */
-  def appendToBm25(s: SparkSession, newDocs: DataFrame, outDir: String): Unit = {
-    val inc = buildBm25IndexFrom(newDocs)
-    if (inc.nDocs == 0L) return
-    inc.postings.withColumn("tb", termBucketCol)
-      .repartition(col("tb")).sortWithinPartitions("term")
-      .write.mode("append").partitionBy("tb")
-      .option("parquet.block.size", PostingsRowGroupBytes.toString)
-      .parquet(s"$outDir/postings")
-    inc.dl.withColumn("db", docBucketCol)
-      .repartition(col("db")).sortWithinPartitions("doc_id")
-      .write.mode("append").partitionBy("db").parquet(s"$outDir/dl")
-    val merged = s.read.parquet(s"$outDir/df")
-      .unionByName(inc.df)
-      .groupBy("term").agg(sum("df").as("df"))
-    writeSwapped(s, merged, s"$outDir/df")
-    val st = s.read.parquet(s"$outDir/stats").collect()(0)
-    writeStats(s, st.getLong(0) + inc.nDocs, st.getLong(2) + inc.sumDl, outDir)
-  }
-
-  /** Surgical compaction of the published index (the lifecycle's
-    * maintenance leg beside append/delete): every append lands one
-    * fresh file per touched tb/db partition, so after N daily ingests
-    * a serve scan opens N× the files and the per-file term sort no
-    * longer spans the partition (appended files are sorted only within
-    * themselves, diluting row-group pruning). Rewrites ONLY the
-    * partitions holding more than one file — back to one
-    * publish-form sorted file each, same row-group dial, staged and
-    * swapped — and leaves single-file partitions byte-untouched.
-    * Rankings are unchanged by construction (row-set identity,
-    * Bm25LifecycleSpec). Returns the compacted partition dirs.
-    */
-  def compactBm25(s: SparkSession, outDir: String): Seq[String] = {
-    import graft.sources.PartitionSwap
-    val tbs = PartitionSwap.multiFilePartitions(s, s"$outDir/postings")
-    if (tbs.nonEmpty) {
-      val vals = tbs.map(_.split("=", 2)(1).toInt)
-      val staging = PartitionSwap.stagingPathFor(s"$outDir/postings")
-      s.read.parquet(s"$outDir/postings")
-        .filter(col("tb").isin(vals.map(Integer.valueOf): _*))
-        .repartition(col("tb")).sortWithinPartitions("term")
-        .write.mode("overwrite").partitionBy("tb")
-        .option("parquet.block.size", PostingsRowGroupBytes.toString)
-        .parquet(staging)
-      PartitionSwap.swap(s, s"$outDir/postings", staging, tbs)
-    }
-    val dbs = PartitionSwap.multiFilePartitions(s, s"$outDir/dl")
-    if (dbs.nonEmpty) {
-      val vals = dbs.map(_.split("=", 2)(1).toInt)
-      val staging = PartitionSwap.stagingPathFor(s"$outDir/dl")
-      s.read.parquet(s"$outDir/dl")
-        .filter(col("db").isin(vals.map(Integer.valueOf): _*))
-        .repartition(col("db")).sortWithinPartitions("doc_id")
-        .write.mode("overwrite").partitionBy("db").parquet(staging)
-      PartitionSwap.swap(s, s"$outDir/dl", staging, dbs)
-    }
-    // the optional content store shares the db partitioning — compact
-    // its accreted partitions the same way when it exists
-    val sds = PartitionSwap.multiFilePartitions(s, s"$outDir/docs")
-    if (sds.nonEmpty) {
-      val vals = sds.map(_.split("=", 2)(1).toInt)
-      val staging = PartitionSwap.stagingPathFor(s"$outDir/docs")
-      s.read.parquet(s"$outDir/docs")
-        .filter(col("db").isin(vals.map(Integer.valueOf): _*))
-        .repartition(col("db")).sortWithinPartitions("doc_id")
-        .write.mode("overwrite").partitionBy("db").parquet(staging)
-      PartitionSwap.swap(s, s"$outDir/docs", staging, sds)
-    }
-    tbs ++ dbs ++ sds
-  }
-
-  /** Incremental deletion (the GDPR path, completing the
-    * build/publish/append/delete lifecycle for the lexical index).
-    * Harder than the PQ delete by construction — one document touches
-    * MANY term partitions and df/n_docs/avgdl are global — and still
-    * surgical: only tb/db partitions containing a victim posting are
-    * rewritten (stage-then-swap; a partition whose every row was a
-    * victim is removed outright), df subtracts the victims' exact
-    * per-term doc counts (terms reaching df=0 drop out), and the
-    * corpus scalars subtract the victims' exact longs. Post-delete
-    * serving is bit-identical to a fresh publish of the survivor
-    * corpus (Bm25LifecycleSpec).
-    */
-  /** Victim fraction (of the published n_docs) above which
-    * deleteFromBm25 degrades to a republish of the survivors. Decided
-    * UPFRONT from |victims| / n_docs — one stats-row read, no job:
-    * BENCH_R17_BM25_DELETE measured a touched-partition-probe variant
-    * at 2x the small-delete wall (the probe is itself a full postings
-    * scan) and rejected it. Crossover at the 1.5M-doc rung: republish
-    * wins from ~1% victims (19.1 s vs 22.8 surgical at 1%, 16.4 vs
-    * 22.4 at 20%) and is a wash below it (16.6 vs 17.4 at 1k victims)
-    * — because one document's ~30-50 distinct terms hash across most
-    * of the 64 buckets, the surgical path rewrites nearly every
-    * partition even for tiny deletes at this geometry, while at
-    * production bucket counts (thousands at 100 TB) a GDPR-sized
-    * delete touches a small fraction and the surgical path's rewrite
-    * volume stays proportional. Values > 1 disable the fallback.
-    */
-  val DefaultDeleteRepublishFraction = 0.01
-
-  /** Bulk-delete path (r16 verdict #5): recompute every index piece
-    * from the survivors in one pass — postings/dl anti-join, df as a
-    * count over survivor postings, stats as one aggregate — staged
-    * fully, then swapped dir-by-dir (rename-aside). No victim-derived
-    * driver state at all, where the surgical path collects the victims'
-    * vocabulary. Crash contract matches appendToBm25's: the per-dir
-    * swap sequence is not atomic — the manifest family (IndexSet) is
-    * the atomic path.
-    */
-  private[graft] def republishSurvivors(s: SparkSession, victims: DataFrame,
-      outDir: String): Unit = {
-    val staging = graft.sources.PartitionSwap.stagingPathFor(outDir)
-    val survPost = s.read.parquet(s"$outDir/postings")
-      .join(victims, Seq("doc_id"), "left_anti")
-    survPost
-      .repartition(col("tb")).sortWithinPartitions("term")
-      .write.partitionBy("tb")
-      .option("parquet.block.size", PostingsRowGroupBytes.toString)
-      .parquet(s"$staging/postings")
-    // df over the STAGED survivors (postings are unique per (doc, term),
-    // so df = row count per term) — reading the staged copy, not the
-    // live dir, keeps every staged piece derived from one corpus state
-    val stagedPost = s.read.parquet(s"$staging/postings")
-    stagedPost.groupBy("term").agg(count(lit(1)).as("df"))
-      .write.parquet(s"$staging/df")
-    val survDl = s.read.parquet(s"$outDir/dl")
-      .join(victims, Seq("doc_id"), "left_anti")
-    survDl.repartition(col("db")).sortWithinPartitions("doc_id")
-      .write.partitionBy("db").parquet(s"$staging/dl")
-    val st = s.read.parquet(s"$staging/dl")
-      .agg(count(lit(1)).as("n"), coalesce(sum("dl"), lit(0L)).as("s")).collect()(0)
-    require(st.getLong(0) > 0,
-      "deleting every document empties the index — nothing to republish")
-    writeStats(s, st.getLong(0), st.getLong(1), staging)
-    // swap the four pieces in: rename-aside per dir (writeSwapped's
-    // pattern) so a failed rename aborts with both copies on disk
-    val fs = new org.apache.hadoop.fs.Path(outDir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    Seq("postings", "df", "dl", "stats").foreach { piece =>
-      val live = new org.apache.hadoop.fs.Path(s"$outDir/$piece")
-      val aside = new org.apache.hadoop.fs.Path(
-        live.getParent, s".$piece-replaced-${java.util.UUID.randomUUID}")
-      if (fs.exists(live)) require(fs.rename(live, aside),
-        s"republish swap failed moving $live aside")
-      require(fs.rename(new org.apache.hadoop.fs.Path(s"$staging/$piece"), live),
-        s"republish swap failed renaming $staging/$piece -> $live; " +
-          s"previous table at $aside")
-      fs.delete(aside, true)
-    }
-    fs.delete(new org.apache.hadoop.fs.Path(staging), true)
-  }
-
-  def deleteFromBm25(s: SparkSession, docIds: Seq[Long], outDir: String): Unit =
-    deleteFromBm25(s, docIds, outDir, DefaultDeleteRepublishFraction)
-
-  /** The delete at an explicit republish fraction (specs pin either
-    * path on a fixture whose victim fraction sits near the default).
-    */
-  private[graft] def deleteFromBm25(s: SparkSession, docIds: Seq[Long], outDir: String,
-      republishFraction: Double): Unit = {
-    import s.implicits._
-    if (docIds.isEmpty) return
-    val victims = docIds.distinct.toDF("doc_id")
-    // bulk-delete guard (r16 verdict #5), decided upfront from the
-    // victim count alone — no probe job (a touched-partition probe is
-    // itself a full postings scan; measured at 2x the small-delete
-    // wall and rejected, BENCH_R17_BM25_DELETE)
-    val nDocs = s.read.parquet(s"$outDir/stats").collect()(0).getLong(0)
-    if (docIds.distinct.size >= republishFraction * nDocs) {
-      republishSurvivors(s, victims, outDir)
-      return
-    }
-    val postings = s.read.parquet(s"$outDir/postings")
-    // victim-derived state BEFORE any rewrite, all bounded: touched
-    // partition ids, the victims' per-term doc counts (bounded by the
-    // victims' vocabulary), and their dl sum
-    val touchedTb = postings.join(broadcast(victims), Seq("doc_id"))
-      .select("tb").distinct().collect().map(_.getInt(0)).toSeq
-    if (touchedTb.isEmpty) return // no victim has any posting
-    val lostRows = postings.join(broadcast(victims), Seq("doc_id"))
-      .groupBy("term").agg(count(lit(1)).as("lost")).collect()
-    val lost = s.createDataFrame(
-      java.util.Arrays.asList(lostRows: _*),
-      StructType(Seq(StructField("term", StringType),
-        StructField("lost", LongType))))
-    val dl = s.read.parquet(s"$outDir/dl")
-    val victimSt = dl.join(broadcast(victims), Seq("doc_id"))
-      .agg(count(lit(1)).as("n"), coalesce(sum("dl"), lit(0L)).as("s")).collect()(0)
-    val touchedDb = dl.join(broadcast(victims), Seq("doc_id"))
-      .select("db").distinct().collect().map(_.getInt(0)).toSeq
-    val st = s.read.parquet(s"$outDir/stats").collect()(0)
-    require(st.getLong(0) - victimSt.getLong(0) > 0,
-      "deleting every document empties the index — republish instead")
-
-    // postings: survivors of the touched tb partitions, staged + swapped
-    val pStaging = graft.sources.PartitionSwap.stagingPathFor(s"$outDir/postings")
-    postings.filter(col("tb").isin(touchedTb.map(Integer.valueOf): _*))
-      .join(broadcast(victims), Seq("doc_id"), "left_anti")
-      .repartition(col("tb")).sortWithinPartitions("term")
-      .write.mode("overwrite").partitionBy("tb")
-      .option("parquet.block.size", PostingsRowGroupBytes.toString)
-      .parquet(pStaging)
-    graft.sources.PartitionSwap.swap(s, s"$outDir/postings", pStaging,
-      touchedTb.map(c => s"tb=$c"))
-
-    // dl: same surgical swap on the doc-bucket partitions
-    val dStaging = graft.sources.PartitionSwap.stagingPathFor(s"$outDir/dl")
-    dl.filter(col("db").isin(touchedDb.map(Integer.valueOf): _*))
-      .join(broadcast(victims), Seq("doc_id"), "left_anti")
-      .repartition(col("db")).sortWithinPartitions("doc_id")
-      .write.mode("overwrite").partitionBy("db").parquet(dStaging)
-    graft.sources.PartitionSwap.swap(s, s"$outDir/dl", dStaging,
-      touchedDb.map(c => s"db=$c"))
-
-    // df: exact subtraction, zero-df terms drop out of the vocabulary
-    val newDf = s.read.parquet(s"$outDir/df")
-      .join(broadcast(lost), Seq("term"), "left")
-      .select(col("term"), (col("df") - coalesce(col("lost"), lit(0L))).as("df"))
-      .filter(col("df") > 0)
-    writeSwapped(s, newDf, s"$outDir/df")
-
-    writeStats(s, st.getLong(0) - victimSt.getLong(0),
-      st.getLong(2) - victimSt.getLong(1), outDir)
-  }
-
-  // --- document content store (r16) -------------------------------------
-  // A retrieval stack that can only return ids isn't servable: the
-  // production shape is retrieve → FETCH — rank against the index, then
-  // read the top-k documents' content for snippets / RAG context. The
-  // store shares the dl table's db = pmod(doc_id, DocBuckets) partition
-  // key, so a top-k fetch reads ≤ k of the DocBuckets directories
-  // (PartitionFilters) and row-group-prunes inside them on the sorted
-  // doc_id — request-sized I/O at any corpus size. Lifecycle-parity
-  // with the index: append lands only in touched db partitions, delete
-  // stage-swaps only them, compactBm25 compacts them.
-
-  def publishDocStore(docs: DataFrame, outDir: String): Unit =
-    docs.select(col("doc_id"), col("text"))
-      .withColumn("db", docBucketCol)
-      .repartition(col("db")).sortWithinPartitions("doc_id")
-      .write.mode("overwrite").partitionBy("db").parquet(s"$outDir/docs")
-
-  def appendToDocStore(s: SparkSession, newDocs: DataFrame, outDir: String): Unit =
-    newDocs.select(col("doc_id"), col("text"))
-      .withColumn("db", docBucketCol)
-      .repartition(col("db")).sortWithinPartitions("doc_id")
-      .write.mode("append").partitionBy("db").parquet(s"$outDir/docs")
-
-  def deleteFromDocStore(s: SparkSession, docIds: Seq[Long], outDir: String): Unit = {
-    import s.implicits._
-    if (docIds.isEmpty) return
-    val victims = docIds.distinct.toDF("doc_id")
-    val store = s.read.parquet(s"$outDir/docs")
-    val touched = store.join(broadcast(victims), Seq("doc_id"))
-      .select("db").distinct().collect().map(_.getInt(0)).toSeq
-    if (touched.isEmpty) return
-    val staging = graft.sources.PartitionSwap.stagingPathFor(s"$outDir/docs")
-    store.filter(col("db").isin(touched.map(Integer.valueOf): _*))
-      .join(broadcast(victims), Seq("doc_id"), "left_anti")
-      .repartition(col("db")).sortWithinPartitions("doc_id")
-      .write.mode("overwrite").partitionBy("db").parquet(staging)
-    graft.sources.PartitionSwap.swap(s, s"$outDir/docs", staging,
-      touched.map(c => s"db=$c"))
-  }
-
-  /** Content for a ranked id set (the FETCH half of retrieve→fetch):
-    * the ids' bucket list prunes whole partition directories before the
-    * literal In() prunes row groups — the serve scan opens ≤ |ids|
-    * directories regardless of corpus size.
-    */
-  def fetchDocs(s: SparkSession, outDir: String, ids: Seq[Long]): DataFrame = {
-    val dbs = ids.map(i => java.lang.Math.floorMod(i, DocBuckets.toLong).toInt)
-      .distinct
-    s.read.parquet(s"$outDir/docs")
-      .filter(col("db").isin(dbs.map(Integer.valueOf): _*))
-      .filter(col("doc_id").isin(ids.map(Long.box): _*))
-      .select("doc_id", "text")
-  }
-
   /** Serving-path scorer: BM25 top-k for a batch of (query_id, text)
-    * requests against a built or loaded index. The same expression
-    * tree as q148 with the corpus scalars as literals — bit-identical
-    * to the oracle-checked batch ranking (RetrievalSpec); runs per
+    * requests against a built index or a snapshot's
+    * (IndexSet.loadSnapshot). The same expression tree as q148 with the
+    * corpus scalars as literals — bit-identical to the oracle-checked
+    * batch ranking (RetrievalSpec); runs per
     * micro-batch under Bm25Serve.serve. The postings scan is pruned
     * map-side by the broadcast query vocabulary before any shuffle.
     *

@@ -6,8 +6,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import graft.operators.Retrieval
 
 /** T50's serving twin: BM25 queries answered in-flight against the
-  * PUBLISHED inverted index (Retrieval.publishBm25 / loadBm25 — fit
-  * once, term stats frozen at publish). Like PqServe, a search query
+  * PUBLISHED inverted index (an IndexSet snapshot's `bm25` — fit
+  * once, term stats frozen per version). Like PqServe, a search query
   * is a per-request computation — no watermark, no state: each
   * micro-batch of arriving (query_id, text) requests is scored with
   * the exact batch scorer (query-vocabulary broadcast prune onto the

@@ -8,12 +8,13 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import graft.operators.{Quantize, Retrieval}
 
 /** T51's serving capstone (r15 verdict next-round #3): hybrid search
-  * answered per request from the TWO published indexes — each arriving
-  * (query_id, text, pvec) request is BM25-scored against the published
-  * inverted index (Retrieval.loadBm25), ANN-scored against the
-  * published IVFADC index (Quantize.loadIndex), and the two rank lists
-  * fuse through the same retriever-agnostic `fuseRrf` that q149's
-  * oracle-checked batch fusion runs. q149 fuses two self-contained
+  * answered per request from the TWO indexes of one published index
+  * set — each arriving (query_id, text, pvec) request is BM25-scored
+  * against the snapshot's inverted index, ANN-scored against its
+  * IVFADC index (both resolved by IndexSet.loadSnapshot from one
+  * manifest version), and the two rank lists fuse through the same
+  * retriever-agnostic `fuseRrf` that q149's oracle-checked batch
+  * fusion runs. q149 fuses two self-contained
   * batch queries; this is the production shape — fit once, publish
   * both artifacts, fuse in rank space per micro-batch, no score
   * calibration across retrievers (Cormack et al., SIGIR 2009).
@@ -21,7 +22,8 @@ import graft.operators.{Quantize, Retrieval}
   * Stateless per-request computation like Bm25Serve/PqServe: no
   * watermark, no state; each micro-batch's fused top-k lands in the
   * sink within its own batch. HybridServeSpec proves streamed fused
-  * rows equal the batch composition bit-for-bit across a batch split.
+  * rows ([[serveSnapshot]]) equal the batch composition bit-for-bit
+  * across a batch split.
   *
   * Scale shape per batch: the BM25 side reads ≤ |vocab| of the
   * TermBuckets posting partitions (tb partition pruning + in-file term
@@ -57,17 +59,6 @@ object HybridServe {
       sem, excludeSelf)
       .select(col("probe_id").as("query_id"), col("vec_id").as("cand_id"),
         col("rk").as("rk_sem"))
-
-  def serve(arrivals: DataFrame, lex: Retrieval.Bm25Index,
-      sem: Quantize.PqIndex, sinkDir: String,
-      excludeSelf: Boolean = false): StreamingQuery =
-    arrivals.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        fused(batch, lex, sem, excludeSelf)
-          .write.mode("append").parquet(sinkDir)
-      }
-      .start()
 
   /** Version-consistent fusion (r16 verdict #1): both retrievers come
     * from ONE [[graft.operators.IndexSet.HybridSnapshot]] — a single

@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import graft.operators.Quantize
 
 /** T49's serving twin: IVFADC queries answered in-flight against the
-  * PUBLISHED index (Quantize.publishIndex / loadIndex — fit once,
+  * PUBLISHED index (an IndexSet snapshot's `pq` — fit once,
   * partition codes by cell, broadcast the 8 KB codebook).
   *
   * An ANN query is a per-request computation, not a continuous

@@ -66,6 +66,11 @@ class DiagSpec extends GraftSpec {
     }
     // the snapshot resolves from the manifest: the codebook collect only
     assert(life(1).get("jobs").asInt == 1, life(1))
+    // every append job carries its write chain's name, not the anonymous
+    // CompletableFuture frame AQE submits stage jobs from
+    val unnamed = life.head.get("jobLedger").elements.asScala.map(_.get("name").asText)
+      .filter(_.contains("CompletableFuture")).toSeq
+    assert(unnamed.isEmpty, unnamed)
     assert(paths.map(_.get("path").asText) == Seq("bm25_score", "pq_probe", "hybrid_fused_content"))
     paths.foreach { p =>
       assert(keysOf(p) == screenKeys + "path")

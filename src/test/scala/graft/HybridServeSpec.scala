@@ -12,8 +12,8 @@ import org.apache.spark.sql.types._
 import graft.operators.{IndexSet, Quantize, Retrieval}
 import graft.streaming.HybridServe
 
-/** The hybrid-serve capstone: requests answered from the two PUBLISHED
-  * indexes and fused in rank space. Legs: (1) the streamed fused top-k
+/** The hybrid-serve capstone: requests answered from the two indexes
+  * of a PUBLISHED index set and fused in rank space. Legs: (1) the streamed fused top-k
   * equals the batch composition bit-for-bit across a batch split; (2)
   * the batch composition recomputes from its two per-retriever rank
   * lists (the q149 RRF check applied to the serve path); (3) both sides
@@ -48,15 +48,14 @@ class HybridServeSpec extends GraftSpec {
     import sp.implicits._
     implicit val sqlCtx = sp.sqlContext
 
-    // publish both artifacts, serve from the LOADED forms — the full
+    // publish the index set, serve from the LOADED snapshot — the full
     // production path, never the in-memory fits
-    val lexDir = tmp("hyb_lex"); val semDir = tmp("hyb_sem")
-    Retrieval.publishBm25(Retrieval.buildBm25Index(spark, sfDir), lexDir)
-    Quantize.publishIndex(Quantize.buildIndex(spark, sfDir), semDir)
-    val lex = Retrieval.loadBm25(spark, lexDir)
-    val sem = Quantize.loadIndex(spark, semDir)
+    val root = tmp("hyb_set") + "/ixset"
+    IndexSet.publish(spark, Tables.documents(spark, sfDir).select("doc_id", "text"),
+      Tables.embeddings(spark, sfDir), root)
+    val snap = IndexSet.loadSnapshot(spark, root)
 
-    val expected = rows(HybridServe.fused(requests, lex, sem, excludeSelf = true))
+    val expected = rows(HybridServe.fused(requests, snap.bm25, snap.pq, excludeSelf = true))
     assert(expected.nonEmpty)
 
     val all = requests.collect()
@@ -65,7 +64,7 @@ class HybridServeSpec extends GraftSpec {
     assert(b1.nonEmpty && b2.nonEmpty)
     val sink = tmp("hyb_sink") + "/fused"
     val stream = MemoryStream[Req]
-    val q = HybridServe.serve(stream.toDF(), lex, sem, sink, excludeSelf = true)
+    val q = HybridServe.serveSnapshot(stream.toDF(), snap, sink, excludeSelf = true)
     try {
       stream.addData(b1: _*)
       q.processAllAvailable()

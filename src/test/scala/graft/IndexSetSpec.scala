@@ -205,8 +205,8 @@ class IndexSetSpec extends GraftSpec {
   }
 
   test("bulk delete republishes survivor segments under one manifest version") {
-    // the deleteFromBm25 guard inside the manifest world: above the
-    // shared victim-fraction default, fresh survivor segments replace the
+    // the bulk-delete guard: above the victim-fraction default
+    // (DefaultDeleteRepublishFraction), fresh survivor segments replace the
     // whole family (df/stats recomputed from the staged survivors, no
     // victim-derived driver state), committed as one version
     val root = tmp("ixset_bulk")
@@ -388,7 +388,7 @@ class IndexSetSpec extends GraftSpec {
     // codebook collect is the one job left
     val (snap, snapJobs) = JobCount(spark)(IndexSet.loadSnapshot(spark, root))
     assert(snapJobs === 1)
-    assert(appendJobs <= 22, s"an append ran $appendJobs jobs")
+    assert(appendJobs <= 20, s"an append ran $appendJobs jobs")
     assert(snapRows(snap) === frozenFitRows(docs, baseV, vecs))
   }
 
@@ -413,5 +413,26 @@ class IndexSetSpec extends GraftSpec {
     // roll forward with valid input
     assert(IndexSet.append(spark, arrD, arrV, root).version === 2L)
     assert(snapRows(IndexSet.loadSnapshot(spark, root)) === frozenFitRows(docs, baseV, vecs))
+  }
+
+  test("empty corpus, empty batch and emptying delete fail before any commit") {
+    val noDocs = docs.filter(col("doc_id") < 0)
+    val noVecs = vecs.filter(col("vec_id") < 0)
+    val empty = tmp("ixset_empty_pub")
+    val e0 = intercept[IllegalArgumentException](IndexSet.publish(spark, noDocs, vecs, empty))
+    assert(e0.getMessage.contains("cannot publish an empty corpus"), e0.getMessage)
+    assert(IndexSet.versions(spark, empty).isEmpty, "an empty publish must commit nothing")
+
+    val root = tmp("ixset_empty")
+    IndexSet.publish(spark, baseD, baseV, root)
+    val e1 = intercept[IllegalArgumentException](IndexSet.append(spark, noDocs, noVecs, root))
+    assert(e1.getMessage.contains("empty ingest batch — nothing to append"), e1.getMessage)
+    assert(IndexSet.currentVersion(spark, root) === 1L, "an empty append must commit nothing")
+    val everyDoc = baseD.select("doc_id").collect().map(_.getLong(0)).toSeq
+    val e2 = intercept[IllegalArgumentException](IndexSet.delete(spark, everyDoc, root))
+    assert(e2.getMessage.contains("deleting every document empties the index set"),
+      e2.getMessage)
+    assert(IndexSet.currentVersion(spark, root) === 1L, "an emptying delete must commit nothing")
+    assert(IndexSet.loadSnapshot(spark, root).manifest.nDocs === everyDoc.size)
   }
 }

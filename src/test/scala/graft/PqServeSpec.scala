@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-import graft.operators.Quantize
+import graft.operators.{IndexSet, Quantize}
 import graft.streaming.PqServe
 
 /** T49's serving surface: the published IVFADC index (coarse cells +
@@ -16,9 +16,11 @@ import graft.streaming.PqServe
   *      oracle-checked ranking bit-for-bit — which also proves the
   *      native row-local `pq_lut` equals the batch explode + keyed
   *      collect_list LUT assembly (same adc_u longs, same order);
-  *   2. publish → load round-trips the artifact (and the cell
-  *      partitioning makes a routed read partition-pruned at the
-  *      parquet layer — the 100 TB layout claim, pinned on the plan);
+  *   2. an index-set publish → snapshot round-trips the artifact (and
+  *      the cell partitioning makes a routed read partition-pruned at
+  *      the parquet layer — the 100 TB layout claim, pinned on the
+  *      plan), and the set's append/delete/compact keep the codes
+  *      exact under the frozen fit;
   *   3. STREAMING probes through PqServe.serve equal batch across any
   *      batch split (each probe served within its own micro-batch).
   */
@@ -47,15 +49,34 @@ class PqServeSpec extends GraftSpec {
     df.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2),
       r.getLong(3), r.getLong(4))).toSet
 
+  /** Publishes the fixture corpus as an index set under a fresh root. */
+  private def published(name: String): String = {
+    val root = tmp(name)
+    IndexSet.publish(spark, Tables.documents(spark, sfDir).select("doc_id", "text"),
+      Tables.embeddings(spark, sfDir), root)
+    root
+  }
+
+  private def snapPq(root: String) = IndexSet.loadSnapshot(spark, root).pq
+
+  private def codeRows(idx: Quantize.PqIndex) =
+    idx.codes.select("vec_id", "cell", "code").collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
+
+  /** (name, mtime) of each file in a partition dir, empty when absent. */
+  private def files(dir: String) = {
+    val d = new java.io.File(dir)
+    if (!d.exists()) Seq.empty
+    else d.listFiles().map(f => (f.getName, f.lastModified())).sortBy(_._1).toSeq
+  }
+
   test("probeTopK over built and published/loaded index equals batch q147") {
     val expected = batchRows
     val idx = Quantize.buildIndex(spark, sfDir)
     assert(collectTopk(Quantize.probeTopK(probes, idx)) === expected,
       "in-memory index serving must equal the oracle-checked batch ranking")
 
-    val out = tmp("pqindex")
-    Quantize.publishIndex(idx, out)
-    val loaded = Quantize.loadIndex(spark, out)
+    val loaded = snapPq(published("pqindex"))
     assert(loaded.book.toSeq === idx.book.toSeq,
       "codebook must round-trip bit-for-bit")
     assert(collectTopk(Quantize.probeTopK(probes, loaded)) === expected,
@@ -120,70 +141,55 @@ class PqServeSpec extends GraftSpec {
   }
 
   test("incremental append under the frozen fit equals a fresh full publish") {
-    val idx = Quantize.buildIndex(spark, sfDir)
-    val out = tmp("pqappend")
-    // publish with only the even vectors' codes, then append the odd
-    // ones as "arrivals" encoded under the frozen published fit
-    Quantize.publishIndex(
-      idx.copy(codes = idx.codes.filter(col("vec_id") % 2 === 0)), out)
-    val arrivals = Tables.embeddings(spark, sfDir)
-      .filter(col("vec_id") % 2 === 1)
-    Quantize.appendToIndex(spark, arrivals, out)
-    val merged = Quantize.loadIndex(spark, out)
+    // publish the full fit, take the odd vectors out, then append them
+    // back as "arrivals" encoded under the frozen published fit
+    val root = published("pqappend")
+    val odd = Tables.embeddings(spark, sfDir).filter(col("vec_id") % 2 === 1)
+    val oddIds = odd.select("vec_id").collect().map(_.getLong(0)).toSeq
+    IndexSet.delete(spark, oddIds, root)
+    assert(codeRows(snapPq(root)).forall(_._1 % 2 == 0))
+    IndexSet.append(spark, Tables.documents(spark, sfDir).select("doc_id", "text")
+      .filter(col("doc_id") % 2 === 1), odd, root)
+    val merged = snapPq(root)
     // the merged artifact's codes equal the full build's codes exactly
-    val full = Quantize.buildIndex(spark, sfDir).codes.collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-    val got = merged.codes.select("vec_id", "cell", "code").collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-    assert(got === full, "append must reproduce the full encode exactly")
+    val full = codeRows(Quantize.buildIndex(spark, sfDir)).toSet
+    assert(codeRows(merged).toSet === full, "append must reproduce the full encode exactly")
     // and serving over the appended index equals batch q147
     assert(collectTopk(Quantize.probeTopK(probes, merged)) === batchRows,
       "appended index serving must equal the oracle-checked batch ranking")
   }
 
   test("index delete rewrites only touched cells and serves the survivor set") {
-    val idx = Quantize.buildIndex(spark, sfDir)
-    val out = tmp("pqdelete")
-    Quantize.publishIndex(idx, out)
-    val all = spark.read.parquet(s"$out/codes")
-      .select("vec_id", "cell", "code").collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
-    // victims: every member of the two largest cells' first 10 ids —
-    // multi-cell rewrite, with at least one cell untouched
+    val root = published("pqdelete")
+    val loaded = snapPq(root)
+    val all = codeRows(loaded)
+    // victims: the two largest cells' first 10 ids — a multi-cell
+    // survivor write, with at least one cell untouched (the surgical
+    // path: a 10-vector delete is above the default republish fraction)
     val cells = all.groupBy(_._2)
     val touched = cells.toSeq.sortBy(-_._2.length).take(2).map(_._1).toSet
     val untouched = cells.keys.filterNot(touched.contains).head
     val victims = all.filter(r => touched.contains(r._2)).map(_._1).take(10).toSeq
     assert(victims.size === 10)
-    def files(cell: Int) = {
-      val d = new java.io.File(s"$out/codes/cell=$cell")
-      d.listFiles().map(f => (f.getName, f.lastModified())).sortBy(_._1).toSeq
-    }
-    val before = files(untouched)
-    Quantize.deleteFromIndex(spark, victims, out)
-    assert(files(untouched) === before,
+    val before = files(s"$root/pq/codes/seg=1/cell=$untouched")
+    assert(before.nonEmpty)
+    IndexSet.delete(spark, victims, root, () => (), republishFraction = 2.0)
+    assert(files(s"$root/pq/codes/seg=1/cell=$untouched") === before,
       "an untouched cell partition must not be rewritten")
-    val after = spark.read.parquet(s"$out/codes")
-      .select("vec_id", "cell", "code").collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-    assert(after === all.toSet -- all.filter(r => victims.contains(r._1)),
+    val merged = snapPq(root)
+    assert(codeRows(merged).toSet === all.toSet -- all.filter(r => victims.contains(r._1)),
       "surviving codes must be exactly the non-victims")
     // serving over the deleted index equals serving over a direct
     // survivor-filtered index (deletes never change the frozen fit)
-    val merged = Quantize.loadIndex(spark, out)
-    val direct = idx.copy(codes = idx.codes.filter(!col("vec_id").isin(victims: _*)))
+    val direct = loaded.copy(codes = loaded.codes.filter(!col("vec_id").isin(victims: _*)))
     assert(collectTopk(Quantize.probeTopK(probes, merged)) ===
       collectTopk(Quantize.probeTopK(probes, direct)),
       "post-delete serving must equal the survivor-set ranking")
   }
 
   test("deleting a cell's entire membership removes the cell outright") {
-    val idx = Quantize.buildIndex(spark, sfDir)
-    val out = tmp("pqdeleteall")
-    Quantize.publishIndex(idx, out)
-    val all = spark.read.parquet(s"$out/codes")
-      .select("vec_id", "cell", "code").collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
+    val root = published("pqdeleteall")
+    val all = codeRows(snapPq(root))
     val cells = all.groupBy(_._2)
     // victims: EVERY member of the smallest cell plus a few from another
     // — the r15 ADVICE defect: dynamic overwrite left a fully-victimized
@@ -193,34 +199,24 @@ class PqServeSpec extends GraftSpec {
     val untouched = cells.keys.filterNot(c => c == emptied || c == partial).head
     val victims = cells(emptied).map(_._1).toSeq ++
       cells(partial).map(_._1).take(3)
-    def files(cell: Int) = {
-      val d = new java.io.File(s"$out/codes/cell=$cell")
-      if (!d.exists()) Seq.empty
-      else d.listFiles().map(f => (f.getName, f.lastModified())).sortBy(_._1).toSeq
-    }
-    val before = files(untouched)
-    Quantize.deleteFromIndex(spark, victims, out)
-    assert(files(emptied).isEmpty,
-      "a fully-victimized cell's partition directory must be gone")
-    assert(files(untouched) === before,
+    val before = files(s"$root/pq/codes/seg=1/cell=$untouched")
+    val m2 = IndexSet.delete(spark, victims, root, () => (), republishFraction = 2.0)
+    assert(m2.pqCodes.find(_.id == "1").get.excluded.contains(s"cell=$emptied"),
+      "the emptied cell must be excluded in the manifest")
+    assert(files(s"$root/pq/codes/seg=2/cell=$emptied").isEmpty,
+      "an emptied cell has no survivor rows to write")
+    assert(files(s"$root/pq/codes/seg=1/cell=$untouched") === before,
       "an untouched cell partition must not be rewritten")
-    val after = spark.read.parquet(s"$out/codes")
-      .select("vec_id", "cell", "code").collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
+    val merged = snapPq(root)
+    assert(merged.codes.filter(col("cell") === emptied).count() === 0L)
     val victimSet = victims.toSet
-    assert(after === all.filterNot(r => victimSet.contains(r._1)).toSet,
+    assert(codeRows(merged).toSet === all.filterNot(r => victimSet.contains(r._1)).toSet,
       "surviving codes must be exactly the non-victims — nothing of the " +
         "emptied cell may remain servable")
-    // no staging leftovers
-    assert(!new java.io.File(out).listFiles()
-      .exists(_.getName.startsWith(".codes-staging-")),
-      "staging dir must be cleaned up after the swap")
   }
 
   test("append under a frozen coarse table ERRORS on an uncovered label") {
-    val idx = Quantize.buildIndex(spark, sfDir)
-    val out = tmp("pqappendbad")
-    Quantize.publishIndex(idx, out)
+    val root = published("pqappendbad")
     val sp = spark
     import sp.implicits._
     // label 9999 has no fitted coarse centroid: the r15 ADVICE defect
@@ -229,55 +225,39 @@ class PqServeSpec extends GraftSpec {
     val stray = Seq((999999L, Seq.fill(Quantize.PqM * Quantize.PqD)(0.5f), 9999))
       .toDF("vec_id", "embedding", "label")
     val err = intercept[Exception] {
-      Quantize.appendToIndex(spark, stray, out)
+      IndexSet.append(spark, Seq((999999L, "stray words")).toDF("doc_id", "text"), stray, root)
     }
     def msgs(t: Throwable): Seq[String] =
       if (t == null) Seq.empty
       else Option(t.getMessage).toSeq ++ msgs(t.getCause)
     assert(msgs(err).exists(_.contains("coarse")),
       s"expected the coverage assert, got: $err")
+    assert(IndexSet.currentVersion(spark, root) === 1L)
   }
 
-  test("code compaction merges appended cell files; untouched cells byte-identical") {
-    val idx = Quantize.buildIndex(spark, sfDir)
-    val out = tmp("pqcompact")
-    Quantize.publishIndex(idx, out)
-    // append a handful of synthetic vectors into ONE existing cell —
-    // exactly one cell partition accretes a second file
-    val cells = idx.coarse.select("cell").collect().map(_.getInt(0)).sorted
-    val target = cells.head
-    val other = cells.last
+  test("code compaction merges appended segments into one; rows and rankings unchanged") {
+    val root = published("pqcompact")
+    // append a handful of synthetic vectors into ONE existing cell
+    val target = snapPq(root).coarse.select("cell").collect().map(_.getInt(0)).min
     val sp = spark
     import sp.implicits._
-    val arrivals = (0 until 3).map(i =>
-      (1000000L + i, Seq.fill(Quantize.PqM * Quantize.PqD)(0.25f + i * 0.1f), target))
-      .toDF("vec_id", "embedding", "label")
-    Quantize.appendToIndex(spark, arrivals, out)
-    def files(cell: Int) = new java.io.File(s"$out/codes/cell=$cell")
-      .listFiles().filter(_.getName.endsWith(".parquet"))
-      .map(f => (f.getName, f.lastModified())).sortBy(_._1).toSeq
-    assert(files(target).size > 1, "append must have accreted a file")
-    val untouchedBefore = files(other)
-    val before = spark.read.parquet(s"$out/codes")
-      .select("vec_id", "cell", "code").collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-    val beforeServe = collectTopk(
-      Quantize.probeTopK(probes, Quantize.loadIndex(spark, out)))
+    val ids = (0 until 3).map(1000000L + _)
+    val m2 = IndexSet.append(spark,
+      ids.map(i => (i, s"synthetic doc $i")).toDF("doc_id", "text"),
+      ids.zipWithIndex.map { case (i, k) =>
+        (i, Seq.fill(Quantize.PqM * Quantize.PqD)(0.25f + k * 0.1f), target)
+      }.toDF("vec_id", "embedding", "label"), root)
+    assert(m2.pqCodes.size === 2, "the append must have accreted a codes segment")
+    val before = snapPq(root)
+    val beforeCodes = codeRows(before).toSet
+    assert(beforeCodes.filter(_._1 >= 1000000L).map(_._2) === Set(target))
+    val beforeServe = collectTopk(Quantize.probeTopK(probes, before))
 
-    val compacted = Quantize.compactIndex(spark, out)
-    assert(compacted === Seq(s"cell=$target"),
-      "only the accreted cell may be rewritten")
-    assert(files(target).size === 1, "compaction must restore one file")
-    assert(files(other) === untouchedBefore,
-      "an untouched cell's files must be byte-identical (names + mtimes)")
-    val after = spark.read.parquet(s"$out/codes")
-      .select("vec_id", "cell", "code").collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-    assert(after === before, "compaction must not change the code rows")
-    assert(collectTopk(Quantize.probeTopK(probes, Quantize.loadIndex(spark, out)))
-      === beforeServe)
-    assert(Quantize.compactIndex(spark, out).isEmpty,
-      "a second compaction must be a complete no-op")
+    val m3 = IndexSet.compact(spark, root)
+    assert(m3.pqCodes.map(_.id) === Seq("3"), "compaction must leave one codes segment")
+    val after = snapPq(root)
+    assert(codeRows(after).toSet === beforeCodes, "compaction must not change the code rows")
+    assert(collectTopk(Quantize.probeTopK(probes, after)) === beforeServe)
   }
 
   test("streamed serving equals batch q147 across a batch split") {

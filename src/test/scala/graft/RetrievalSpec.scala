@@ -117,8 +117,10 @@ class RetrievalSpec extends GraftSpec {
 
     val out = Files.createTempDirectory("graft_bm25idx").toFile
     out.deleteOnExit()
-    Retrieval.publishBm25(idx, out.getAbsolutePath)
-    val loaded = Retrieval.loadBm25(spark, out.getAbsolutePath)
+    graft.operators.IndexSet.publish(spark,
+      Tables.documents(spark, sfDir).select("doc_id", "text"),
+      Tables.embeddings(spark, sfDir), out.getAbsolutePath)
+    val loaded = graft.operators.IndexSet.loadSnapshot(spark, out.getAbsolutePath).bm25
     assert(loaded.nDocs === idx.nDocs)
     assert(loaded.avgdl === idx.avgdl, "avgdl must round-trip bit-for-bit")
     assert(rows(Retrieval.scoreQueries(queries, loaded, excludeSelf = true)) === expected,

@@ -10,8 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Source guards over `src/main/scala`: lineage is truncated only
   * through GraftSession.checkpoint, no code path switches AQE on a
   * live session (a session conf is shared by every query planning on it
-  * at the same time), and the only spark.graft.* keys are the ones
-  * GraftSession lists.
+  * at the same time), the only spark.graft.* keys are the ones
+  * GraftSession lists, and the only renames are the two atomic commit
+  * points (an index set's manifest, the LR model registry).
   */
 class SourceGuardSpec extends AnyFunSuite {
   private val Owner = "GraftSession.scala"
@@ -46,5 +47,12 @@ class SourceGuardSpec extends AnyFunSuite {
     val named = lines(l => key.findFirstIn(l).isDefined)
       .flatMap(h => key.findAllMatchIn(h._3).map(_.group(1))).toSet
     assert(named == GraftSession.GraftKeys, s"named: ${named.toSeq.sorted}")
+  }
+
+  test("a filesystem rename is made only by the manifest commit and the model registry") {
+    val hits = lines(_.contains("rename("))
+    assert(hits.map(_._1).toSet == Set("ManifestLog.scala", "LrTrain.scala"),
+      "publish through IndexSet's manifest commit, never by swapping a published " +
+        "directory in place:\n" + show(hits))
   }
 }

@@ -64,17 +64,6 @@ class SourcesSpec extends GraftSpec {
     assert(scan.contains("PushedFilters: [IsNotNull(o_orderkey), EqualTo(o_orderkey,42)"), scan)
   }
 
-  test("compaction sizes output files toward the target") {
-    val out = tmp("compact") + "/lineitem_c"
-    val l = Tables.lineitem(spark, sfDir)
-    val n = graft.sources.Compact.writeCompacted(l, out, targetBytes = 256 * 1024)
-    assert(n >= 1)
-    val back = spark.read.parquet(out)
-    assert(back.count() == l.count())
-    val files = new java.io.File(out).listFiles().filter(_.getName.endsWith(".parquet"))
-    assert(files.length == n)
-  }
-
   test("fixed-width form.idx layout parses with substr slicing") {
     val sp = spark
     import sp.implicits._
